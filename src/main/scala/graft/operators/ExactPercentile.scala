@@ -76,10 +76,10 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   */
 object ExactPercentile {
 
-  /** Hard cap on rows any single driver collect may carry (histogram
-    * rows across all pending (group, p) items). 2ⁱ⁷ ≈ 131 k rows of
-    * (key, double, long) is ~a few MB — the same driver-model budget
-    * class as the k-means centroid collects. */
+  /** Driver-pull budget PER (column, group, p) ITEM, not per collect: one
+    * histogram collect serves a whole fused [[computeMulti]] batch, so m
+    * items may pull m × this many rows. 2¹⁷ ≈ 131 k rows of (key, double,
+    * long) is ~a few MB, the budget class of the k-means centroid pulls. */
   val DefaultMaxPullRows: Int = 1 << 17
 
   /** Exact percentiles of `valueCol` at `ps` per distinct `groupCols` key.
@@ -116,8 +116,8 @@ object ExactPercentile {
     val nG = groupCols.size
     val vc = specs.indices.map(i => col(s"__v$i"))
     // keep a row iff ANY value column is non-null (for one column this is
-    // exactly the old single-column prefilter, so the scan predicate —
-    // and the plan — of every existing caller is unchanged)
+    // exactly the old single-column prefilter, so the results and the scan
+    // predicate of every single-column caller are unchanged)
     val df = df0
       .select((gs ++ specs.zipWithIndex.map { case ((c, _), i) =>
         col(c).cast("double").as(s"__v$i") }): _*)

@@ -505,24 +505,40 @@ object StatOps {
   /** q_em_gmm: a two-component 1-D Gaussian mixture fitted by `iters`
     * EM steps on scaled order-line prices — the density-modeling family
     * (soft clustering; cf. the HARD assignments of the Lloyd trainers in
-    * [[IvfOps]]/[[PqOps]]). Each step is ONE scan+aggregation producing
-    * seven numbers (Σr₁, Σr₁x, Σr₁x², the component-2 triple, n) that
-    * update the driver-held parameter vector; responsibilities are plain
-    * per-row float algebra against the current parameters as literals.
-    * The engine-reproducibility recipe is the proven unrolled-GD /
+    * [[IvfOps]]/[[PqOps]]). Each step ([[emFit]]) produces seven numbers
+    * (Σr₁, Σr₁x, Σr₁x², the component-2 triple, n) that update the
+    * driver-held parameter vector; responsibilities are plain per-row
+    * float algebra against the current parameters. The
+    * engine-reproducibility recipe is the proven unrolled-GD /
     * unrolled-Lloyd one: every M-step statistic passes the stable6
     * barrier (per-partition sum order differs between engines only at
     * ULP; the barrier absorbs it before the drift can compound through
     * the next E-step), so all `iters` rounds replay bit-identically as
-    * unrolled DuckDB CTEs. Scale shape: iters × (narrow scan + 7-number
-    * aggregate) — the k-means cost model, linear in the facts.
+    * unrolled DuckDB CTEs. Scale shape: per step ONE job, ONE stage, no
+    * shuffle ([[PartitionSums]]), 6 + 1 numbers per partition to the
+    * driver — a re-scan, linear in the facts, nothing cached.
     *
     * Deterministic data-dependent init (no RNG): μ₁/μ₂ = mean ∓ sd/2,
     * σ² = variance, w = 0.5 — all through the same barrier. */
   def emGmm(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
+    val p = emFit(Tables.lineitem(spark, dir)
+      .select((col("l_extendedprice") / 10000.0).as("x")), iters)
+    import spark.implicits._
+    import graft.functions.NumericFunctions.stableRound4
+    Seq((1, p._1, p._2, p._3), (2, 1.0 - p._1, p._4, p._5))
+      .toDF("component", "weight", "mu", "sigma2")
+      .select(col("component"), stableRound4(col("weight")).as("weight"),
+        stableRound4(col("mu")).as("mu"),
+        stableRound4(col("sigma2")).as("sigma2"))
+      .orderBy(col("component"))
+  }
+
+  /** [[emGmm]]'s unrounded (w, μ₁, σ₁², μ₂, σ₂²) after `iters` EM steps
+    * over the one-column frame `x`. */
+  private[operators] def emFit(x: DataFrame,
+      iters: Int): (Double, Double, Double, Double, Double) = {
     import graft.operators.IvfOps.stable6
-    val x = Tables.lineitem(spark, dir)
-      .select((col("l_extendedprice") / 10000.0).as("x"))
+    import PartitionSums.div
     val init = x.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("x") * col("x")).as("sxx")).head()
     val n0 = init.getLong(0).toDouble
@@ -532,38 +548,29 @@ object StatOps {
     val sd0 = math.sqrt(s20)
     // params: (w, mu1, s21, mu2, s22)
     var p = (0.5, stable6(m0 - 0.5 * sd0), s20, stable6(m0 + 0.5 * sd0), s20)
+    // x.agg(sum(...))'s doubles for r1 = num1 / (num1 + num2), num1 = (w *
+    // exp(-((x-mu1)*(x-mu1)) / (2*s21))) / sqrt(s21) (num2: 1-w, mu2, s22)
+    def num(x: Double, wk: Double, mu: Double, s2: Double) =
+      div(wk * StrictMath.exp(div(-((x - mu) * (x - mu)), 2.0 * s2)), math.sqrt(s2))
+    val sums = new PartitionSums(x)
     for (_ <- 1 to iters) {
       val (w, mu1, s21, mu2, s22) = p
-      val num1 = lit(w) * exp(-((col("x") - mu1) * (col("x") - mu1))
-        / (2.0 * s21)) / math.sqrt(s21)
-      val num2 = lit(1.0 - w) * exp(-((col("x") - mu2) * (col("x") - mu2))
-        / (2.0 * s22)) / math.sqrt(s22)
-      val r1 = num1 / (num1 + num2)
-      val r2 = num2 / (num1 + num2)
-      val s = x.select(r1.as("r1"), r2.as("r2"), col("x"))
-        .agg(sum(col("r1")).as("sr1"), sum(col("r1") * col("x")).as("sx1"),
-          sum(col("r1") * col("x") * col("x")).as("sxx1"),
-          sum(col("r2")).as("sr2"), sum(col("r2") * col("x")).as("sx2"),
-          sum(col("r2") * col("x") * col("x")).as("sxx2"),
-          count(lit(1)).as("n"))
-        .head()
-      val (sr1, sx1, sxx1) = (s.getDouble(0), s.getDouble(1), s.getDouble(2))
-      val (sr2, sx2, sxx2) = (s.getDouble(3), s.getDouble(4), s.getDouble(5))
-      val n = s.getLong(6).toDouble
+      val (Array(sr1, sx1, sxx1, sr2, sx2, sxx2), rows) = sums.run(6) { (r, acc) =>
+        if (!r.isNullAt(0)) {
+          val xv = r.getDouble(0)
+          val (num1, num2) = (num(xv, w, mu1, s21), num(xv, 1.0 - w, mu2, s22))
+          val (r1, r2) = (div(num1, num1 + num2), div(num2, num1 + num2))
+          acc(0) += r1; acc(1) += r1 * xv; acc(2) += r1 * xv * xv
+          acc(3) += r2; acc(4) += r2 * xv; acc(5) += r2 * xv * xv
+        }
+      }
       val nmu1 = stable6(sx1 / sr1)
       val nmu2 = stable6(sx2 / sr2)
-      p = (stable6(sr1 / n),
+      p = (stable6(sr1 / rows.toDouble),
         nmu1, stable6(sxx1 / sr1 - nmu1 * nmu1),
         nmu2, stable6(sxx2 / sr2 - nmu2 * nmu2))
     }
-    import spark.implicits._
-    import graft.functions.NumericFunctions.stableRound4
-    Seq((1, p._1, p._2, p._3), (2, 1.0 - p._1, p._4, p._5))
-      .toDF("component", "weight", "mu", "sigma2")
-      .select(col("component"), stableRound4(col("weight")).as("weight"),
-        stableRound4(col("mu")).as("mu"),
-        stableRound4(col("sigma2")).as("sigma2"))
-      .orderBy(col("component"))
+    p
   }
 
   /** Shared engine/oracle SPRT constants (q_sprt): simple H0 p=[[SprtP0]]

@@ -584,8 +584,7 @@ object TextOps {
     * fixed weights — full-batch logistic-regression gradient descent on
     * the structural features, labeled by the per-doc Gopher all-rules
     * outcome (the same proxy-label trick as [[calibration]]). `iters`
-    * deterministic steps of w ← w − lr·∇: each step is ONE scan-and-
-    * aggregate job producing the 5-component mean gradient; the model —
+    * deterministic steps of w ← w − lr·∇ ([[qualityWeights]]); the model —
     * five doubles — lives on the driver between steps (the same bounded-
     * driver-model budget as the k-means quantizers; nothing row-sized
     * ever crosses). Features are the classifier's own: bias, stopword
@@ -595,54 +594,15 @@ object TextOps {
     * base rate. Oracle: the full unroll — each iteration's weights become
     * a 1-row CTE cross-joined into the next iteration's sigmoid.
     *
-    * Scale shape: (iters + 1) scan+agg jobs over the feature pass — at
-    * 100 TB this is iters× the cost of [[qualityLogistic]], still
-    * scan-bound with |1|-row shuffles. */
+    * Scale shape: per GD step ONE job, ONE stage, no shuffle
+    * ([[PartitionSums]]), 6 + 1 numbers per partition to the driver — at
+    * 100 TB iters× the scan of [[qualityLogistic]]. */
   def qualityTrain(spark: SparkSession, dir: String, iters: Int = 25,
       lr: Double = 5.0): DataFrame = {
-    val feats = graft.operators.Materialize(
-      logisticFeaturesDf(Tables.documents(spark, dir))
-        .join(gopherDocFlags(Tables.documents(spark, dir))
-          .select(col("doc_id"),
-            (col("p_wc") && col("p_mwl") && col("p_stop") && col("p_alpha"))
-              .cast("double").as("y")),
-          Seq("doc_id"))
-        .select(col("doc_id"),
-          col("swr").as("x1"),
-          least(col("n_toks") / 100.0, lit(1.0)).as("x2"),
-          col("dupfrac").as("x3"),
-          abs(col("awl") - 5.0).as("x4"),
-          col("y")))
-    var w = Array(0.0, 0.0, 0.0, 0.0, 0.0)
+    val feats = qualityFeatures(spark, dir)
+    val w = qualityWeights(feats, iters, lr)
     def zCol = lit(w(0)) + col("x1") * w(1) + col("x2") * w(2) +
       col("x3") * w(3) + col("x4") * w(4)
-    // round 16: the weights enter each GD step through [[RefDouble]] —
-    // a reference-object "literal". With plain lit(w) every step embeds
-    // different doubles into the generated Java source, so whole-stage
-    // codegen RECOMPILES per step (the dominant per-iteration cost for a
-    // 5-column aggregate over a checkpointed feature table; a broadcast
-    // 1-row weight frame was measured WORSE — per-step exchange overhead
-    // exceeds the compile it saves). RefDouble keeps the source identical
-    // across steps (Janino cache hit) while the float chain is the same
-    // ops in the same order on the same doubles — bit-identical
-    // gradients, unchanged oracle.
-    def wRef(arr: Array[Double], i: Int) =
-      org.apache.spark.sql.GraftColumnBridge.toColumn(
-        graft.functions.expressions.RefDouble(arr, i))
-    for (_ <- 1 to iters) {
-      val wa = w.clone()
-      val zColW = wRef(wa, 0) + col("x1") * wRef(wa, 1) +
-        col("x2") * wRef(wa, 2) + col("x3") * wRef(wa, 3) +
-        col("x4") * wRef(wa, 4)
-      val err = (lit(1.0) / (lit(1.0) + exp(-zColW)) - col("y")).as("e")
-      val g = feats
-        .select(err, col("x1"), col("x2"), col("x3"), col("x4"))
-        .agg(avg(col("e")), avg(col("e") * col("x1")),
-          avg(col("e") * col("x2")), avg(col("e") * col("x3")),
-          avg(col("e") * col("x4")))
-        .head()
-      w = w.indices.map(i => w(i) - lr * g.getDouble(i)).toArray
-    }
     val p4 = stableRound4(lit(1.0) / (lit(1.0) + exp(-zCol)))
     feats.agg(
       count(lit(1)).as("n_docs"),
@@ -656,6 +616,44 @@ object TextOps {
         stableRound4(lit(w(2))).as("w_len"),
         stableRound4(lit(w(3))).as("w_dup"),
         stableRound4(lit(w(4))).as("w_awl"))
+  }
+
+  /** [[qualityTrain]]'s checkpointed (doc_id, x1..x4, y) table. */
+  private[operators] def qualityFeatures(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.operators.Materialize(
+      logisticFeaturesDf(Tables.documents(spark, dir))
+        .join(gopherDocFlags(Tables.documents(spark, dir))
+          .select(col("doc_id"),
+            (col("p_wc") && col("p_mwl") && col("p_stop") && col("p_alpha"))
+              .cast("double").as("y")),
+          Seq("doc_id"))
+        .select(col("doc_id"),
+          col("swr").as("x1"),
+          least(col("n_toks") / 100.0, lit(1.0)).as("x2"),
+          col("dupfrac").as("x3"),
+          abs(col("awl") - 5.0).as("x4"),
+          col("y")))
+
+  /** Unrounded weights after `iters` steps w ← w − lr·(avg(e), avg(e·xⱼ)),
+    * e = 1/(1+exp(−z)) − y, z = (((w0 + x1·w1) + x2·w2) + x3·w3) + x4·w4, as
+    * `feats.agg(avg(...))` computes them; nulls drop a row from all five. */
+  private[operators] def qualityWeights(feats: DataFrame, iters: Int,
+      lr: Double): Array[Double] = {
+    val ix = Array("x1", "x2", "x3", "x4", "y").map(feats.schema.fieldIndex)
+    val sums = new PartitionSums(feats)
+    (1 to iters).foldLeft(Array.fill(5)(0.0)) { (w, _) =>
+      val (s, _) = sums.run(6) { (r, acc) =>
+        if (!ix.exists(r.isNullAt)) {
+          val Array(x1, x2, x3, x4, y) = ix.map(r.getDouble)
+          val z = w(0) + x1 * w(1) + x2 * w(2) + x3 * w(3) + x4 * w(4)
+          val e = PartitionSums.div(1.0, 1.0 + StrictMath.exp(-z)) - y
+          acc(0) += e; acc(1) += e * x1; acc(2) += e * x2
+          acc(3) += e * x3; acc(4) += e * x4; acc(5) += 1.0
+        }
+      }
+      w.indices.map(i => w(i) - lr * PartitionSums.div(s(i), s(5))).toArray
+    }
   }
 
   /** q_calibration: reliability diagram for the [[qualityLogistic]]

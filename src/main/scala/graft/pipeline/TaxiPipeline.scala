@@ -34,10 +34,12 @@ object TaxiPipeline {
   def datasetName(c: Config): String =
     s"${c.taxiColor}_taxi_tripdata_${c.year}_${c.month}"
 
-  /** R1+R15: fetch the (possibly gzipped) CSV into the partition directory. */
+  /** R1+R15: fetch the (possibly gzipped) CSV into the partition directory
+    * as `trip_data.csv`, or `trip_data.csv.gz` for a `.gz` URL — not the
+    * reference's `trip_data.gz.csv`: Spark picks the codec by extension. */
   def downloadCsv(url: String, c: Config): Path =
-    HttpFetch.fetch(url, Paths.get(
-      s"${c.outputDir}/${c.taxiColor}_taxi/${c.year}/${c.month}/trip_data.gz.csv"))
+    HttpFetch.fetch(url, Paths.get(s"${c.outputDir}/${c.taxiColor}_taxi/" +
+      s"${c.year}/${c.month}/trip_data.csv${if (url.endsWith(".gz")) ".gz" else ""}"))
 
   /** R5: data-quality metric — rows with passenger_count == 0
     * (ingest_data.py:32,36). One scalar crosses the shuffle. */

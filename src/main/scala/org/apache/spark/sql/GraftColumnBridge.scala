@@ -19,3 +19,8 @@ object GraftPlanBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
+
+/** Catalyst's runtime errors, for driver-side mirrors of its expressions. */
+object GraftErrorBridge {
+  def divideByZero(): ArithmeticException = errors.QueryExecutionErrors.divideByZeroError(null)
+}

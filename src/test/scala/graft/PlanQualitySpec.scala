@@ -876,7 +876,12 @@ class PlanQualitySpec extends SparkTestBase {
     // count-1 late-pair rollup; the old fact-probing anti join is gone
     assert(p.contains("partial_min(l_suppkey") &&
       p.contains("partial_max(l_suppkey"), p)
-    assert("partial_count\\(1\\)".r.findAllIn(p).nonEmpty, p)
+    // the NOT-EXISTS side is the __nlate count-1 rollup: one partial
+    // aggregate per order counting late pairs next to the pinned suppkey,
+    // kept where the count is exactly 1 (the final numwait count(1) per
+    // supplier would satisfy a bare partial_count(1) check on its own)
+    assert(p.contains("functions=[partial_count(1), partial_min(l_suppkey"), p)
+    assert("__nlate#\\d+L = 1\\)".r.findFirstIn(p).nonEmpty, p)
     assert(!p.contains("LeftAnti"), p)
   }
 

@@ -209,6 +209,23 @@ class TaxiPipelineSpec extends SparkTestBase {
     assert(db.count() == 7)
   }
 
+  test("end-to-end pipeline on a gzipped download: same counts as plain CSV") {
+    val c = config("yellow").copy(
+      outputDir = s"$tmp/gz_out", bucketDir = s"$tmp/gz_bucket",
+      warehouseDir = s"$tmp/gz_wh", jdbcUrl = s"jdbc:derby:$tmp/gz_db;create=true")
+    val gz = gzip(res("yellow_sample.csv"), s"$tmp/yellow_sample.csv.gz")
+    val csv = TaxiPipeline.downloadCsv(s"file://$gz", c)
+    // the gzip codec applies: the header reads back as the taxi columns
+    assert(csv.getFileName.toString == "trip_data.csv.gz")
+    assert(spark.read.option("header", "true").csv(csv.toString).columns
+      .sameElements(CsvSource(res("yellow_sample.csv")).read(spark).columns))
+    val back = TaxiPipeline.run(spark, s"file://$gz", c)
+    assert(back.count() == 7)
+    assert(back.schema("tpep_pickup_datetime").dataType == TimestampType)
+    assert(JdbcSource(c.jdbcUrl, TaxiPipeline.tableName(c)).read(spark)
+      .count() == 7)
+  }
+
   test("JdbcSource partitioned read: parallel range queries, same rows (R9)") {
     val c = config("yellow") // reuses the Derby db the e2e test populated
     val url = s"file://${res("yellow_sample.csv")}"
