@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Timed action (round 14): the query's own physical plan via
     * [[FullExec.count]] — a bare df.count() re-optimizes with all
@@ -66,21 +66,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-bench", s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session so timed numbers are steady-state execution, not
     // one-time JVM cost: table counts load parquet footers, then a pass of
     // every query at sf0.001 (~1% of the timed data) compiles each plan's
-    // whole-stage codegen and JITs it. At production scale the compile
-    // cost is amortized to noise; steady-state is the number that scales.
+    // whole-stage codegen and JITs it. The compiled classes stay cached for
+    // the sweep because the factory sizes the generated-class cache to hold
+    // them (GraftSession.GeneratedClassCacheEntries); steady-state is the
+    // number that scales.
     Seq("lineitem", "documents", "embeddings", "events")
       .foreach(t => Tables(spark, sfDir, t).count())
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")

@@ -1,28 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named declared queries N times each in one JVM and print
   * every iteration's wall-clock, separating first-touch cost (codegen
   * compilation, parquet footer reads, JIT) from steady-state execution —
   * the number that actually scales with data size.
   *
   * Usage: runMain graft.WarmBench q_dedup_clusters q_sim_ivf [...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_REPS (default 3).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_REPS (default 3),
+  * SPARK_GRAFT_CPUS (default 4).
   */
 object WarmBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-warm-bench", s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

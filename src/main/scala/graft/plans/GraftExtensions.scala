@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.expressions._
 
 /** `SparkSessionExtensions` hook registering the library's custom planner
-  * pieces and SQL functions — the deployment-grade alternative to the
-  * runtime `experimental.extraStrategies` injection in [[TopK.perGroup]]
-  * (which remains as a fallback for sessions not built through this hook).
+  * pieces and SQL functions. It is the only way [[GraftStrategies]] reaches
+  * the planner: [[TopK.perGroup]] builds the logical node and relies on it.
   *
   * Wire it either way:
   *   - `GraftSession.builder(...)` applies it via `withExtensions`;

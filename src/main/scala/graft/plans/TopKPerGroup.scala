@@ -75,9 +75,9 @@ case class TopKPerGroupExec(groupCols: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Planner strategy mapping the logical node to its exec. Injected at
-  * runtime via `spark.experimental.extraStrategies` (or register through
-  * SparkSessionExtensions in a deployed app). */
+/** Planner strategy mapping the logical node to its exec. Registered by
+  * [[GraftExtensions]], the only wiring path: a session that is not built
+  * through it cannot plan a [[TopKPerGroup]]. */
 object GraftStrategies extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, child) =>
@@ -93,9 +93,6 @@ object TopK {
   def perGroup(df: DataFrame, groupCols: Seq[String],
       orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
     val order = orderBy.map { case (name, asc) =>
       SortOrder(UnresolvedAttribute.quoted(name),
         if (asc) Ascending else Descending,

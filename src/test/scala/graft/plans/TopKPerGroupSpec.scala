@@ -34,9 +34,9 @@ class TopKPerGroupSpec extends SparkTestBase {
   }
 
   test("GraftExtensions plans the operator without the runtime fallback") {
-    // Build the logical node directly (bypassing TopK.perGroup, which also
-    // injects into experimental.extraStrategies) — planning must succeed
-    // purely through the SparkSessionExtensions-registered strategy.
+    // Build the logical node directly, with no runtime extraStrategies —
+    // planning must succeed purely through the SparkSessionExtensions-
+    // registered strategy.
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, NullsFirst, NullsLast, SortOrder}
     val saved = spark.experimental.extraStrategies
