@@ -1,20 +1,64 @@
 package graft
 import org.apache.spark.sql.DataFrame
+/** The harness that times declared queries:
+  * `runMain graft.Bench [q_a,q_b,...] [reps]`. With no arguments it times
+  * every declared query, best of 2, and also writes the full line to
+  * BENCH_FULL.json, the full-surface stamp. A subset (ONE comma-separated
+  * token, like Verify's) runs the same warm pass, timed loop, canary
+  * samples and four lines over those queries only. Every rep's time goes
+  * to stderr as a `[bench]` line, so a 0.1 s delta can be judged signal
+  * vs noise.
+  *
+  * Timed action (round 14): the query's own physical plan via
+  * [[FullExec.count]] — a bare df.count() re-optimizes with all columns
+  * pruned and ELIMINATES work-bearing operators outright (78/350 queries
+  * lose Join/Window/Aggregate/Generate nodes; see FullExec's scaladoc for
+  * the measured q_semdedup case). */
 object Bench {
-  /** Timed action (round 14): the query's own physical plan via
-    * [[FullExec.count]] — a bare df.count() re-optimizes with all
-    * columns pruned and ELIMINATES work-bearing operators outright
-    * (78/350 queries lose Join/Window/Aggregate/Generate nodes; see
-    * FullExec's scaladoc for the measured q_semdedup case). The env
-    * flag reproduces the legacy count() metric — and selects the legacy
-    * canary refs — for same-HEAD bridge runs only. Only the values
-    * "1"/"true" (case-insensitive) enable it (round-15 advisor fix:
-    * presence-only parsing made =0 silently select legacy refs). */
-  def legacyCount: Boolean =
-    sys.env.get("SPARK_GRAFT_BENCH_COUNT_LEGACY")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-  private def act(df: DataFrame): Long =
-    if (legacyCount) df.count() else FullExec.count(df)
+  /** The declared queries a run times, in name order: all of them, or the
+    * named subset. Unknown names fail before any session starts. */
+  def selectQueries(subset: Option[String]): Seq[String] = subset match {
+    case None => SparkEntry.queries.keys.toSeq.sorted
+    case Some(token) =>
+      val names = token.split(",").map(_.trim).filter(_.nonEmpty)
+        .distinct.sorted.toSeq
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(names.nonEmpty, s"empty query subset '$token'")
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+      names
+  }
+
+  /** Every timed rep's seconds, up to and including the first failing
+    * one, and that failure's first line cut to 200 characters. */
+  final case class Timing(times: Seq[Double], error: Option[String]) {
+    def min: Double = times.min
+  }
+
+  /** Times `reps` runs of `query` — building the DataFrame (its eager
+    * driver jobs included) and executing it through [[FullExec.count]] —
+    * and stops at the first error. */
+  def timeQuery(reps: Int)(query: => DataFrame): Timing = {
+    val times = scala.collection.mutable.ArrayBuffer[Double]()
+    var error: Option[String] = None
+    while (times.size < reps && error.isEmpty) {
+      val t0 = System.nanoTime()
+      error = try { FullExec.count(query); None } catch {
+        case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200))
+      }
+      times += (System.nanoTime() - t0) / 1e9
+    }
+    Timing(times.toSeq, error)
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    if (xs.isEmpty) 1.0
+    else {
+      val s = xs.sorted.toIndexedSeq
+      if (s.size % 2 == 1) s(s.size / 2)
+      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    }
+  }
+
   /** Canary set for contention normalization (round 11): same-HEAD bench
     * totals swing 95–128 s under host contention, so raw totals keep
     * getting re-adjudicated as phantom regressions. These 10 queries are
@@ -27,19 +71,6 @@ object Bench {
   val Canary: Seq[String] = Seq("q_tfidf", "q_pareto", "q_dedup_embed",
     "q_semdedup", "q_tpch_q18", "q_sparse_sim", "q_watermark_sim",
     "q_ngram_containment", "q_order_gaps", "q_dedup_survivor")
-
-  /** LEGACY canary reference costs, count()-action metric: mean of the
-    * r8/r9/r10 BENCH_FULL stamps (4.665 / 4.404 / 4.608 s). Used only
-    * under SPARK_GRAFT_BENCH_COUNT_LEGACY for bridge runs — the count
-    * action these were stamped under under-measures 78/350 queries
-    * (FullExec scaladoc). */
-  val CanaryRefSecondsLegacy: Double = 4.559
-  val CanaryRefLegacy: Map[String, Double] = Map(
-    "q_tfidf" -> 0.602612, "q_pareto" -> 0.287494,
-    "q_dedup_embed" -> 0.283926, "q_semdedup" -> 0.314308,
-    "q_tpch_q18" -> 0.492530, "q_sparse_sim" -> 0.489511,
-    "q_watermark_sim" -> 0.494553, "q_ngram_containment" -> 1.007462,
-    "q_order_gaps" -> 0.295633, "q_dedup_survivor" -> 0.290777)
 
   /** Canary reference costs under the round-14 FullExec action — the
     * same-HEAD re-derivation the action change REQUIRES (a ref stamped
@@ -64,6 +95,10 @@ object Bench {
   val CanarySampleEvery: Int = 15
 
   def main(args: Array[String]): Unit = {
+    val subset = args.headOption
+    val names = selectQueries(subset)
+    val reps = if (args.length > 1) args(1).toInt else 2
+    require(reps >= 1, s"reps must be at least 1, got $reps")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder("graft-bench", s"local[$cpus]", cpus.toInt)
@@ -71,26 +106,26 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session so timed numbers are steady-state execution, not
     // one-time JVM cost: table counts load parquet footers, then a pass of
-    // every query at sf0.001 (~1% of the timed data) compiles each plan's
-    // whole-stage codegen and JITs it. The compiled classes stay cached for
-    // the sweep because the factory sizes the generated-class cache to hold
-    // them (GraftSession.GeneratedClassCacheEntries); steady-state is the
-    // number that scales.
+    // every timed query at sf0.001 (~1% of the timed data) compiles each
+    // plan's whole-stage codegen and JITs it. The compiled classes stay
+    // cached for the sweep because the factory sizes the generated-class
+    // cache to hold them (GraftSession.GeneratedClassCacheEntries);
+    // steady-state is the number that scales.
     Seq("lineitem", "documents", "embeddings", "events")
       .foreach(t => Tables(spark, sfDir, t).count())
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     // Track warm failures: a missing warm dir would silently produce
-    // cold-start timings that aren't comparable to warmed runs.
+    // cold-start timings that aren't comparable to warmed runs. The canaries
+    // are warmed too: a subset run still samples them.
     var warmFailures = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try act(fn(spark, warmDir)) catch { case _: Throwable => warmFailures += 1 }
+    (names ++ Canary).distinct.foreach { name =>
+      try FullExec.count(SparkEntry.queries(name)(spark, warmDir))
+      catch { case _: Throwable => warmFailures += 1 }
     }
-    val refs = if (legacyCount) CanaryRefLegacy else CanaryRef
-    val refSeconds = if (legacyCount) CanaryRefSecondsLegacy else CanaryRefSeconds
-    // best-of-2 per query (declared as "agg":"min" in the JSON): one timing
-    // is hostage to GC pauses and OS scheduling noise — full-run totals
-    // swing ±25% on an otherwise idle box — while the min of two runs is a
-    // stable steady-state execution-cost estimate (the number that scales).
+    // best-of-reps per query (declared as "agg":"min" in the JSON): one
+    // timing is hostage to GC pauses and OS scheduling noise — full-run
+    // totals swing ±25% on an otherwise idle box — while the min of two
+    // runs is a stable steady-state execution-cost estimate.
     // Interleaved canary samples (see CanaryRef doc): (position, query,
     // seconds, factor), collected OUTSIDE the timed results.
     val canarySamples =
@@ -102,9 +137,9 @@ object Bench {
       sampleIdx += 1
       val t0 = System.nanoTime()
       try {
-        act(SparkEntry.queries(cq)(spark, sfDir))
+        FullExec.count(SparkEntry.queries(cq)(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
-        canarySamples += ((pos, cq, t, t / refs(cq)))
+        canarySamples += ((pos, cq, t, t / CanaryRef(cq)))
       } catch {
         // NonFatal only (round-13 advisor): an OOM/interrupt during a
         // sample must propagate, not vanish — a fatal error swallowed
@@ -115,22 +150,15 @@ object Bench {
         case scala.util.control.NonFatal(_) => sampleErrors += 1
       }
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
-      .map { case ((name, fn), pos) =>
+    val results = names.zipWithIndex.map { case (name, pos) =>
       if (pos % CanarySampleEvery == 0) sampleCanary(pos)
-      def once(): (Double, Option[String]) = {
-        val t0 = System.nanoTime()
-        val err = try { act(fn(spark, sfDir)); None } catch {
-          case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200))
-        }
-        ((System.nanoTime() - t0) / 1e9, err)
-      }
-      val (t1, e1) = once()
-      if (e1.isDefined) (name, t1, e1)
-      else {
-        val (t2, e2) = once()
-        (name, math.min(t1, t2), e2)
-      }
+      val t = timeQuery(reps)(SparkEntry.queries(name)(spark, sfDir))
+      val ts = t.times
+      System.err.println(f"[bench] $name reps=$reps min=${ts.min}%.3f " +
+        f"median=${median(ts)}%.3f max=${ts.max}%.3f " +
+        s"all=${ts.map(x => f"$x%.3f").mkString(",")}" +
+        t.error.fold("")(e => s" error=$e"))
+      (name, t.min, t.error)
     }
     // A crashed query must not masquerade as a timing: null in "queries",
     // message in "errors".
@@ -165,7 +193,7 @@ object Bench {
     val nCanary = canaryTimes.size
     val canaryComplete = nCanary == Canary.size
     val normalized =
-      if (canaryComplete && canary > 0) total * (refSeconds / canary)
+      if (canaryComplete && canary > 0) total * (CanaryRefSeconds / canary)
       else total
     // Median contention factor: the GATE number uses only the ten
     // in-sweep best-of-2 canary runs (alphabetically spread through the
@@ -177,16 +205,8 @@ object Bench {
     // single-shot factors read ~1.18 median while best-of-2 reads ~0.86,
     // because the refs are best-of-2 stamps; mixing the two populations
     // into one median would re-bias the gate, so they stay separate.
-    def median(xs: Seq[Double]): Double = {
-      if (xs.isEmpty) 1.0
-      else {
-        val s = xs.sorted.toIndexedSeq
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-      }
-    }
     val inSweepFactors = results.collect {
-      case (k, v, None) if canarySet(k) => v / refs(k) }
+      case (k, v, None) if canarySet(k) => v / CanaryRef(k) }
     val factorMedian = median(inSweepFactors)
     val normalizedMed =
       if (inSweepFactors.nonEmpty && factorMedian > 0) total / factorMedian
@@ -250,14 +270,14 @@ object Bench {
     }.mkString("[", ",", "]")
     val factorStats =
       s""""canary_factor_median":${f4(factorMedian)},"canary_factor_min":${f4(if (inSweepFactors.isEmpty) 1.0 else inSweepFactors.min)},"canary_factor_max":${f4(if (inSweepFactors.isEmpty) 1.0 else inSweepFactors.max)},"n_factor_samples":${inSweepFactors.size},"sample_factor_median":${f4(sampleMedian)},"n_burst_samples":${sampleFactors.size},"n_sample_errors":$sampleErrors,"normalized_total_med":$normalizedMed,"burst_disagreement":${f4(burstDisagreement)},"n_burst_windows":$nBurstWindows,"burst_window_seconds":${f4(burstWindowSeconds)},"normalized_total_windowed":${f4(windowedTotal)},"trend_eligible":$trendEligible"""
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":2,"agg":"min","canary":$canary,"canary_ref":$refSeconds,"action":"${if (legacyCount) "count_legacy" else "exec"}","n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"canary_samples":$samplesJson,"queries":$qs,"errors":$errs,"warm_failures":$warmFailures,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"agg":"min","canary":$canary,"canary_ref":$CanaryRefSeconds,"action":"exec","n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"canary_samples":$samplesJson,"queries":$qs,"errors":$errs,"warm_failures":$warmFailures,"sf":"$sfDir"}"""
     println(fullLine)
     // The full line above is ~4 KB (one entry per query) and has outrun the
     // driver's captured output tail every round (BENCH_r01..r03 all record
     // "parsed": null). Emit a compact summary LAST so it always survives
     // tail truncation and the 2x-of-baseline perf gate can actually evaluate.
     val nErr = results.count(_._3.isDefined)
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","reps":2,"agg":"min","canary":$canary,"n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"n_queries":${results.size},"n_err":$nErr,"warm_failures":$warmFailures,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","reps":$reps,"agg":"min","canary":$canary,"n_canary":$nCanary,"canary_complete":$canaryComplete,"normalized_total":$normalized,$factorStats,"n_queries":${results.size},"n_err":$nErr,"warm_failures":$warmFailures,"sf":"$sfDir"}""")
     // Third compact line: the ~20 slowest queries. The full per-query map
     // above is what regression tracking wants, but it has been truncated by
     // the driver's output tail cap every round; the slow tail is the part
@@ -266,10 +286,10 @@ object Bench {
       .sortBy(-_._2).take(20)
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"slowest","n":20,"unit":"sec","reps":2,"agg":"min","queries":$slowest,"sf":"$sfDir"}""")
+    println(s"""{"metric":"slowest","n":20,"unit":"sec","reps":$reps,"agg":"min","queries":$slowest,"sf":"$sfDir"}""")
     // Fourth line (round 16, additions-only): the shared-artifact build
     // ledger. Session-shared family builds (ANN indexes, graph artifacts)
-    // are paid once by the first consumer's rep 1 and then best-of-2 `min`
+    // are paid once by the first consumer's rep 1 and then best-of-reps `min`
     // drops them from every per-query figure and the total — the round-15
     // verdict's accounting gap. SessionCache records each winning build's
     // wall-clock; "build_total_sec" (not "value", which stays the sweep
@@ -280,16 +300,18 @@ object Bench {
     val buildsJson = buildLog.toSeq.sortBy(-_._2).map { case (k, v) =>
       "\"" + jsonEscape(k) + "\":" + f4(v)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"build_sec","build_total_sec":${f4(timedBuilds.values.sum)},"unit":"sec","n_builds_timed_dir":${timedBuilds.size},"n_builds_total":${buildLog.size},"note":"first-payer shared-artifact builds excluded from best-of-2 minima; cold-session sweep ~= total + build_total_sec","builds":$buildsJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"build_sec","build_total_sec":${f4(timedBuilds.values.sum)},"unit":"sec","n_builds_timed_dir":${timedBuilds.size},"n_builds_total":${buildLog.size},"note":"first-payer shared-artifact builds excluded from best-of-$reps minima; cold-session sweep ~= total + build_total_sec","builds":$buildsJson,"sf":"$sfDir"}""")
     // And persist the complete per-query JSON as a file so round-over-round
     // deltas never depend on how much of stdout the driver kept. The forked
     // JVM's cwd is the sbt base directory, so the default lands in-repo and
-    // is committed each round.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"bench: could not write $outPath: $e")
+    // is committed each round. Only a full-surface run writes it.
+    if (subset.isEmpty) {
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+      try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case e: Throwable =>
+        System.err.println(s"bench: could not write $outPath: $e")
+      }
     }
     spark.stop()
   }

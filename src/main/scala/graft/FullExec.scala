@@ -12,9 +12,10 @@ import org.apache.spark.sql.DataFrame
   * whole subtrees vanish. Measured concretely: q_semdedup's survivor
   * join — and the 1.4e9-row within-cell pair join feeding it — is absent
   * from the count() plan (0.9 s "benched" at 100× where the real
-  * computation pays ~14 s); the BenchVacuityAudit found **78/350**
-  * declared queries lose Join/Aggregate/Window/Generate nodes under
-  * count(), q_knn_recall losing 13 joins and q_modularity half its plan.
+  * computation pays ~14 s); a round-14 audit of the optimized plans found
+  * **78/350** declared queries lose Join/Aggregate/Window/Generate nodes
+  * under count(), q_knn_recall losing 13 joins and q_modularity half its
+  * plan.
   *
   * [[count]] instead executes the DataFrame's OWN physical plan — the
   * same plan Verify materializes and a user's write would run — by
@@ -25,8 +26,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Numbers measured under this action are NOT comparable to the
   * count()-based stamps of rounds ≤ 13; BASELINE.md carries the
-  * same-HEAD bridge pair and Bench retains a legacy mode
-  * (SPARK_GRAFT_BENCH_COUNT_LEGACY=1) to reproduce the old metric. */
+  * same-HEAD bridge pair. */
 object FullExec {
   def count(df: DataFrame): Long = df.queryExecution.toRdd.count()
 }

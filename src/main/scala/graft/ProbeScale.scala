@@ -36,7 +36,7 @@ object ProbeScale {
       val best = probeCounts.map { n =>
         val times = (0 to reps).map { _ =>
           val t0 = System.nanoTime()
-          val rows = fn(n).count()
+          val rows = FullExec.count(fn(n))
           ((System.nanoTime() - t0) / 1e9, rows)
         }
         val (ts, rows) = (times.tail.map(_._1), times.head._2)

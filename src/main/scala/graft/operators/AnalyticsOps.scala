@@ -240,36 +240,6 @@ object AnalyticsOps {
       .orderBy(col("l_returnflag"))
   }
 
-  /** The 100 TB posture of [[winsorize]] — same output contract, cut
-    * points from `approx_percentile` (a mergeable KLL-family sketch:
-    * bounded per-partition state, partial-aggregated, no single reducer
-    * holding every value) instead of exact `percentile` (which collects
-    * the full value buffer into ONE aggregation state — the honest
-    * round-14 action measured that collect at 7.4 s / 6 M rows at sf1,
-    * and its memory is O(n) where the sketch's is O(1/ε)). The cuts
-    * differ from exact by at most the sketch's rank error (default
-    * accuracy 10⁴ ≈ 0.01 % rank), so the winsorized mean moves by
-    * O(ε · tail mass) — spec-bounded; n and avg_raw are EXACT either
-    * way. Round 15: [[winsorizeSketch]] (q_winsorize_sketch) is the
-    * declared tolerance-oracled PRIMARY built on this bounds pass;
-    * q_winsorize keeps the exact form as the CONTRAST DIAL. */
-  def winsorizeApprox(spark: SparkSession, dir: String,
-      accuracy: Int = 10000): DataFrame = {
-    import graft.functions.NumericFunctions.stableRound4
-    val li = Tables.lineitem(spark, dir)
-    val bounds = li.agg(
-      expr(s"approx_percentile(l_extendedprice, 0.05, $accuracy)").as("lo"),
-      expr(s"approx_percentile(l_extendedprice, 0.95, $accuracy)").as("hi"))
-    li.crossJoin(broadcast(bounds))
-      .select(col("l_returnflag"), col("l_extendedprice").as("p"),
-        greatest(least(col("l_extendedprice"), col("hi")), col("lo")).as("w"))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        stableRound4(avg(col("p"))).as("avg_raw"),
-        stableRound4(avg(col("w"))).as("avg_winsor"))
-      .orderBy(col("l_returnflag"))
-  }
-
   /** RFM customer segmentation — recency (days since last order),
     * frequency (order count), monetary (total spend) per customer, each
     * scored 1-4 by global quartile cuts, concatenated into the classic
@@ -352,36 +322,6 @@ object AnalyticsOps {
       .select(col("l_returnflag"), col("n"), col("n_outliers"),
         stableRound4(lit(med)).as("med"),
         stableRound4(lit(mad)).as("mad"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** The 100 TB posture of [[madOutlier]] — both medians (the value
-    * median and the median absolute deviation) from the mergeable
-    * `approx_percentile` sketch instead of two full-buffer exact
-    * `percentile` collects (see [[winsorizeApprox]]'s rationale; this
-    * query pays the single-reducer buffer TWICE, back to back). The
-    * 3·MAD outlier threshold moves by at most the sketch's rank error.
-    * Round 15: [[madOutlierSketch]] (q_mad_outlier_sketch) is the
-    * declared tolerance-oracled PRIMARY; q_mad_outlier keeps the exact
-    * form as the CONTRAST DIAL. */
-  def madOutlierApprox(spark: SparkSession, dir: String,
-      accuracy: Int = 10000): DataFrame = {
-    import graft.functions.NumericFunctions.stableRound4
-    val li = Tables.lineitem(spark, dir)
-    val med = li.agg(
-      expr(s"approx_percentile(l_extendedprice, 0.5, $accuracy)").as("med"))
-    val dev = li.crossJoin(broadcast(med))
-      .select(col("l_returnflag"), col("l_extendedprice"), col("med"),
-        abs(col("l_extendedprice") - col("med")).as("adev"))
-    val mad = dev.agg(
-      expr(s"approx_percentile(adev, 0.5, $accuracy)").as("mad"))
-    dev.crossJoin(broadcast(mad))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("adev") > lit(3.0) * col("mad"), 1L).otherwise(0L))
-          .as("n_outliers"),
-        stableRound4(max(col("med"))).as("med"),
-        stableRound4(max(col("mad"))).as("mad"))
       .orderBy(col("l_returnflag"))
   }
 

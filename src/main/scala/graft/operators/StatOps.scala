@@ -605,9 +605,9 @@ object StatOps {
     * decision row is one min-struct argmin per variant. CAVEAT,
     * measured round 14 under the honest action: per-ARM partitioning is
     * only |arms|-way parallelism (two here), so half the stream sorts
-    * in one task — sf1 10.4 s, index e = 1.12. [[sprtSharded]] is the
-    * measured distributed rewrite (identical output, spec-pinned); the
-    * declared form stays this one until the round-15 stamp flip. */
+    * in one task — sf1 10.4 s, index e = 1.12. Declared q_sprt has run
+    * the distributed rewrite [[sprtSharded]] since round 15; this simple
+    * per-arm walk is the reference the specs compare it against. */
   def sprt(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("variant"))
@@ -660,10 +660,9 @@ object StatOps {
     * window, broadcast back and added. The prefix counts are exact
     * integers, so the LLR doubles (same literals, same association
     * order) are BITWISE equal to [[sprt]]'s and the decision rows
-    * identical — spec-pinned in Round14OpsSpec. Declared q_sprt keeps
-    * the simple form this round so the round-14 stamps describe the
-    * shipped plan; the flip is queued for round 15 with the measured
-    * before/after (SCALE.md round-14 queue). */
+    * identical — spec-pinned in Round14OpsSpec and Round15OpsSpec.
+    * Declared q_sprt serves this form since round 15 (the measured
+    * before/after is in SCALE.md). */
   def sprtSharded(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = Tables.events(spark, dir)
