@@ -89,6 +89,33 @@ object Bench {
     "q_watermark_sim" -> 0.565214, "q_ngram_containment" -> 1.497796,
     "q_order_gaps" -> 0.545769, "q_dedup_survivor" -> 0.953821)
 
+  /** Burst-gate alarms (see the burst gate in [[main]]): a window whose
+    * relative factor exceeds this flags the queries timed inside it... */
+  val BurstWindowRelFactor = 2.0
+  /** ...and a run whose two normalized totals disagree by more than this
+    * ratio is corrupted as a whole. */
+  val BurstDisagreementAlert = 1.3
+
+  /** Burst-gate window factors, one per interleaved canary sample:
+    * (position, relative factor), in position order. Each single-shot
+    * sample is rebased on the SAME canary's in-sweep best-of-reps time
+    * from the same run — or, for a canary the sweep did not time (a subset
+    * run), on its [[CanaryRef]] — and read relative to the median of those
+    * ratios. Rebasing per canary cancels each canary's own drift from its
+    * round-14 ref, which differs canary by canary: read against the refs,
+    * q_order_gaps samples at 1.9–2.5× while others sit below theirs, and
+    * the committed sweep's relative factors span 0.47–1.42 where rebased
+    * they span 0.81–1.22. Rebased, a window reads high only when the host
+    * was slower while its sample ran. */
+  def burstWindows(samples: Seq[(Int, String, Double)],
+      inSweep: Map[String, Double]): Seq[(Int, Double)] = {
+    val ratios = samples.sortBy(_._1).map { case (pos, q, sec) =>
+      (pos, sec / inSweep.get(q).filter(_ > 0).getOrElse(CanaryRef(q)))
+    }
+    val m = median(ratios.map(_._2))
+    ratios.map { case (pos, r) => (pos, if (m > 0) r / m else 1.0) }
+  }
+
   /** Interleave cadence: one canary re-sample per this many swept
     * queries — ~20 samples across a 306-query sweep, ~8 s of untimed
     * overhead (samples never count toward the total). */
@@ -187,8 +214,9 @@ object Bench {
     // the canaries too and leaves normalized_total flat — is why
     // BASELINE.md's trend gate reads BOTH columns: normalized against
     // the tight band, raw against a looser contention band.
-    val canaryTimes = results.collect {
-      case (k, v, None) if canarySet(k) => v }
+    val inSweep = results.collect {
+      case (k, v, None) if canarySet(k) => (k, v) }
+    val canaryTimes = inSweep.map(_._2)
     val canary = canaryTimes.sum
     val nCanary = canaryTimes.size
     val canaryComplete = nCanary == Canary.size
@@ -205,8 +233,7 @@ object Bench {
     // single-shot factors read ~1.18 median while best-of-2 reads ~0.86,
     // because the refs are best-of-2 stamps; mixing the two populations
     // into one median would re-bias the gate, so they stay separate.
-    val inSweepFactors = results.collect {
-      case (k, v, None) if canarySet(k) => v / CanaryRef(k) }
+    val inSweepFactors = inSweep.map { case (k, v) => v / CanaryRef(k) }
     val factorMedian = median(inSweepFactors)
     val normalizedMed =
       if (inSweepFactors.nonEmpty && factorMedian > 0) total / factorMedian
@@ -227,24 +254,19 @@ object Bench {
     //     the ratio is a run-level corruption alarm. Alert > 1.3.
     //  2. Per-WINDOW factors from the interleaved single-shot samples:
     //     sample k covers timed positions [pos_k, pos_{k+1}). Each
-    //     window factor is read RELATIVE to the run's own median sample
-    //     factor (single-shot factors are systematically ~1.2× the
-    //     best-of-2 refs, so absolute thresholds would misfire); a
-    //     window whose relative factor exceeds 2× flags every query
-    //     timed inside it. burst_window_seconds prices the damage;
-    //     normalized_total_windowed deflates ONLY the flagged windows
-    //     (idle windows pass through — no upward rescaling).
+    //     window factor is the sample rebased on its canary's in-sweep
+    //     time, relative to the run's median rebased sample
+    //     ([[burstWindows]]); a window whose relative factor exceeds 2×
+    //     flags every query timed inside it. burst_window_seconds prices
+    //     the damage; normalized_total_windowed deflates ONLY the flagged
+    //     windows (idle windows pass through — no upward rescaling).
     // trend_eligible (the bit BASELINE.md's protocol reads): true iff
     // no alarm fired. A non-eligible run is usable for correctness but
     // must not become a trend row.
-    val BurstWindowRelFactor = 2.0
-    val BurstDisagreementAlert = 1.3
-    val sortedSamples = canarySamples.sortBy(_._1).toSeq
     val sampleMedian = median(sampleFactors)
-    val relWindows: Seq[(Int, Double)] = sortedSamples.map {
-      case (pos, _, _, fac) =>
-        (pos, if (sampleMedian > 0) fac / sampleMedian else 1.0)
-    }
+    val relWindows = burstWindows(
+      canarySamples.map { case (pos, q, t, _) => (pos, q, t) }.toSeq,
+      inSweep.toMap)
     def windowRel(p: Int): Double = {
       val covering = relWindows.takeWhile(_._1 <= p)
       if (covering.isEmpty) 1.0 else covering.last._2

@@ -242,7 +242,7 @@ object DedupOps {
   // first-payer-attributed (the first consumer pays the build), the same
   // established contract as the graph family.
   private val sharedCapped =
-    new SessionCache[(SparkSession, String, Int)]()
+    new SessionCache[(SparkSession, String, Int)]("dedup-capped")
 
   private[graft] def cappedSurvivorsShared(spark: SparkSession, dir: String,
       dfCap: Int = 16): DataFrame =

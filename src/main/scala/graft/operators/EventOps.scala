@@ -746,46 +746,51 @@ object EventOps {
     * median is an exact interpolated percentile over that bounded set.
     * Intercept = median(v − slope·x), the standard Theil-Sen second pass.
     * Scale shape: one partial-aggregated hourly rollup (the only
-    * event-count-sized stage), then everything is \|types·hours\|². */
+    * event-count-sized stage), then everything is \|types·hours\|²: the
+    * pair passes run on every core over the broadcast points table, and
+    * the intercept is one \|types·hours\| rank window. */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NumericFunctions.stableRound4
-    val hourly = Materialize(
-      Tables.events(spark, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-        .agg(sum(col("value")).as("v")))
-    val firstHr = hourly.groupBy(col("event_type"))
-      .agg(min(col("hr")).as("hr0"))
-    val pts = hourly.join(broadcast(firstHr), Seq("event_type"))
-      .select(col("event_type"),
-        ((unix_timestamp(col("hr")) - unix_timestamp(col("hr0"))) / 3600L)
-          .cast("double").as("x"),
+    // The points table (event_type, h, v) — h the hour as a whole number
+    // of hours since the epoch — is built ONCE and read by both passes
+    // of the slope median and by the intercept. It is |types·hours| rows,
+    // so its checkpoint is cheap, and the round-robin fan-out spreads it
+    // over the session's parallelism (the rollup's small shuffle would
+    // otherwise be coalesced to one partition).
+    val pts = Materialize(Tables.events(spark, dir)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
+      .agg(sum(col("value")).as("v"))
+      .select(col("event_type"), (unix_timestamp(col("hr")) / 3600L).as("h"),
         col("v"))
-    // the C(|hours|,2)-row pair set is consumed twice by the exact-median
-    // selection (sketch pass + bracket pass); it is RECOMPUTED per pass
-    // from the materialized hourly table rather than checkpointed —
-    // regenerating the codegen'd pair join (~|hours|² projected rows,
-    // nothing shuffled) is cheaper than writing those rows to checkpoint
-    // blocks (measured: 3.59 s materialized vs 2.5 s recomputed at sf0.1).
+      .repartition(spark.sparkContext.defaultParallelism))
+    // The C(|hours|,2)-row pair set is consumed twice by the exact-median
+    // selection (sketch pass + bracket pass) and regenerated in each from
+    // the checkpointed points, never written out itself (~|hours|² rows).
+    // The build side is broadcast EXPLICITLY: a Materialize'd frame has no
+    // size statistics, so Catalyst would plan a shuffle join keyed on
+    // event_type, which AQE coalesces to one task. Broadcast, every
+    // partition of the fanned-out stream side generates and sketches its
+    // share of the pairs, one task per core.
+    // h and x (the hour offset from the type's first hour) are whole
+    // numbers of hours held exactly in a double, so b.h − a.h IS
+    // b.x − a.x: the slopes are the declared ones bit for bit.
     // try_divide, not /: ExactPercentile pushes isnotnull(s) into the join,
-    // where Catalyst may evaluate the division BEFORE the a.x < b.x guard;
-    // an equal-x pair then divides by zero and ANSI mode throws. Every pair
-    // that survives the guard has b.x > a.x, so try_divide is value-identical
+    // where Catalyst may evaluate the division BEFORE the a.h < b.h guard;
+    // an equal-h pair then divides by zero and ANSI mode throws. Every pair
+    // that survives the guard has b.h > a.h, so try_divide is value-identical
     // on the result set (the NULL-on-zero rows are exactly the guard-dropped
     // pairs, and isNotNull discards them either way).
-    val slopes = pts.as("a").join(pts.as("b"),
+    val slopes = pts.as("a").join(broadcast(pts.as("b")),
         col("a.event_type") === col("b.event_type")
-          && col("a.x") < col("b.x"))
+          && col("a.h") < col("b.h"))
       .select(col("a.event_type").as("event_type"),
-        try_divide(col("b.v") - col("a.v"), col("b.x") - col("a.x")).as("s"))
-    // round 15: both exact medians (pairwise slope, residual intercept)
-    // via ExactPercentile's bounded-state bracketed selection —
-    // bit-identical to percentile() (unchanged exact oracle), without
-    // the O(|hours|²) single aggregation state per type
+        try_divide(col("b.v") - col("a.v"), col("b.h") - col("a.h")).as("s"))
+    // the slope median over the O(|hours|²) pair set: ExactPercentile's
+    // bounded-state bracketed selection, bit-identical to percentile()
     val slopeMed = graft.operators.ExactPercentile.compute(
       slopes, Seq("event_type"), "s", Seq(0.5))
-    val spark0 = spark
-    val smDf = broadcast(spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
+    val smDf = broadcast(spark.createDataFrame(
+      spark.sparkContext.parallelize(
         slopeMed.keys.toSeq.map(k =>
           org.apache.spark.sql.Row(k.head, slopeMed(k)(0))), 1),
       org.apache.spark.sql.types.StructType(Seq(
@@ -793,28 +798,20 @@ object EventOps {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("slope",
           org.apache.spark.sql.types.DoubleType)))))
+    // the intercept median is over one residual per hour of a type — a
+    // bounded group — so it is selected by rank inside this query rather
+    // than by more driver passes
+    val byType = Window.partitionBy(col("event_type"))
     val resid = pts.join(smDf, Seq("event_type"))
       .select(col("event_type"), col("slope"),
-        (col("v") - col("slope") * col("x")).as("r"))
-    val interceptMed = graft.operators.ExactPercentile.compute(
-      resid, Seq("event_type"), "r", Seq(0.5))
-    val cuts = broadcast(spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        slopeMed.keys.toSeq.map(k => org.apache.spark.sql.Row(
-          k.head, slopeMed(k)(0), interceptMed(k)(0))), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("slope",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("intercept_raw",
-          org.apache.spark.sql.types.DoubleType)))))
-    pts.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_hours"))
-      .join(cuts, Seq("event_type"))
+        count(lit(1)).over(byType).as("n_hours"),
+        (col("v") - col("slope") * (col("h") - min(col("h")).over(byType)))
+          .as("r"))
+    graft.operators.ExactPercentile.rankSelect(
+        resid, Seq("event_type", "n_hours", "slope"), "r", 0.5)
       .select(col("event_type"), col("n_hours"),
         stableRound4(col("slope")).as("slope"),
-        stableRound4(col("intercept_raw")).as("intercept"))
+        stableRound4(col("r")).as("intercept"))
       .orderBy(col("event_type"))
   }
 

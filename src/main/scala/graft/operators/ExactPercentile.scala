@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
@@ -96,6 +97,40 @@ object ExactPercentile {
       accuracy: Int = 10000,
       maxPullRows: Int = DefaultMaxPullRows): Array[Double] =
     compute(df, Nil, valueCol, ps, accuracy, maxPullRows)(Seq())
+
+  /** The exact interpolated percentile `p` of `valueCol` per `groupCols`
+    * key, planned as ONE DataFrame — a rank window per group in place of
+    * the sketch and histogram passes — so it runs no driver job and folds
+    * into the caller's query. Each group is sorted whole inside one task:
+    * only for groups whose size the caller has bounded (q_theil_sen's
+    * residuals, one row per hour of an event type), never for
+    * event-count-sized ones. The rank selection and interpolation are
+    * [[computeMulti]]'s, so the value is bit-identical to it (and to
+    * `percentile()`): NULLs are ignored, −0.0 reads as 0.0 as it does
+    * through the histogram's grouping, and a group with no non-null value
+    * is absent. Returns `groupCols` and `valueCol` holding the percentile. */
+  def rankSelect(df: DataFrame, groupCols: Seq[String], valueCol: String,
+      p: Double): DataFrame = {
+    require(p >= 0.0 && p <= 1.0, s"percentage must be in [0,1]: $p")
+    val gs = groupCols.map(col)
+    val w = Window.partitionBy(gs: _*)
+    val v = col("__v")
+    val ranked = df
+      .select(gs :+ (col(valueCol).cast("double") + 0.0).as("__v"): _*)
+      .filter(v.isNotNull)
+      .select(gs ++ Seq(v,
+        (row_number().over(w.orderBy(v)) - 1).as("__rank"),
+        (lit(p) * (count(lit(1)).over(w) - 1)).as("__pos")): _*)
+      .withColumn("__lo", floor(col("__pos")))
+      .withColumn("__hi", ceil(col("__pos")))
+    val at = (rank: String) => max(when(col("__rank") === col(rank), v))
+    ranked.groupBy(gs ++ Seq(col("__pos"), col("__lo"), col("__hi")): _*)
+      .agg(at("__lo").as("__lov"), at("__hi").as("__hiv"))
+      .select(gs :+ when(col("__hi") === col("__lo") ||
+          col("__hiv") === col("__lov"), col("__lov"))
+        .otherwise((col("__hi") - col("__pos")) * col("__lov")
+          + (col("__pos") - col("__lo")) * col("__hiv")).as(valueCol): _*)
+  }
 
   /** Exact percentiles for SEVERAL value columns of the same frame in a
     * constant number of scans (see the class doc's round-16b note). One

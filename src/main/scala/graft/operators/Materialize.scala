@@ -17,6 +17,15 @@ import org.apache.spark.sql.DataFrame
   * checkpoints (e.g. each CC round's previous labels) are reclaimed by
   * Spark's ContextCleaner once the wrapping DataFrame becomes unreachable;
   * long-lived references pin their blocks.
+  *
+  * Join planning: the wrapped frame is a `LogicalRDD` with NO size
+  * statistics, and it keeps its source's partition count — often the one
+  * partition AQE coalesced a small shuffle to. Catalyst therefore never
+  * auto-broadcasts a join against it: however few rows it holds, the join
+  * plans as a shuffle join, which AQE may then run as a single task.
+  * Callers joining a small materialized frame must `broadcast` it
+  * explicitly, and `repartition` it before the checkpoint if per-row-heavy
+  * work streams over it (see `EventOps.theilSen`).
   */
 object Materialize {
   def apply(df: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped keyed cache of [[Materialize]]d DataFrames, shared by
   * operator families whose declared queries consume an identical expensive
@@ -28,8 +28,11 @@ import org.apache.spark.sql.DataFrame
   * remembering a new clear call. Long multi-dataset harnesses (ScaleSpot's
   * 10×/100× loop) also clear between datasets so finished checkpoint
   * blocks are released instead of staying pinned by the map.
+  *
+  * `family` names the artifact in the build ledger (see
+  * [[SessionCache.buildLog]]).
   */
-final class SessionCache[K] {
+final class SessionCache[K](family: String) {
   private val map = new java.util.concurrent.ConcurrentHashMap[K, DataFrame]()
   SessionCache.register(() => map.clear())
 
@@ -54,7 +57,7 @@ final class SessionCache[K] {
         val t0 = System.nanoTime()
         val built = build
         map.put(key, built)
-        SessionCache.recordBuild(key.toString, (System.nanoTime() - t0) / 1e9)
+        SessionCache.recordBuild(family, key, (System.nanoTime() - t0) / 1e9)
         built
       }
     }
@@ -68,8 +71,9 @@ final class SessionCache[K] {
   * declared queries re-derive identically from the same parquet input
   * (round 15). Same contract: deterministic content, get/putIfAbsent (no
   * bin lock across a nested build), registered for [[SessionCache.clearAll]]
-  * so retry harnesses and multi-dataset loops drop it with everything else. */
-final class SessionValueCache[K, V <: AnyRef] {
+  * so retry harnesses and multi-dataset loops drop it with everything else,
+  * and `family` names it in the build ledger. */
+final class SessionValueCache[K, V <: AnyRef](family: String) {
   private val map = new java.util.concurrent.ConcurrentHashMap[K, V]()
   SessionCache.register(() => map.clear())
 
@@ -83,7 +87,7 @@ final class SessionValueCache[K, V <: AnyRef] {
         val t0 = System.nanoTime()
         val built = build
         map.put(key, built)
-        SessionCache.recordBuild(key.toString, (System.nanoTime() - t0) / 1e9)
+        SessionCache.recordBuild(family, key, (System.nanoTime() - t0) / 1e9)
         built
       }
     }
@@ -105,8 +109,11 @@ object SessionCache {
   def clearAll(): Unit = all.forEach(_.apply())
 
   /** Build-cost ledger (round 16): wall-clock seconds of every shared
-    * artifact build that WON its putIfAbsent race, keyed by the cache
-    * key's string form. The round-15 verdict's first-payer accounting
+    * artifact build that WON its putIfAbsent race, keyed
+    * `family:<key parts>` — the cache's family name, then its key's parts
+    * other than the session, comma-separated (`graph:edges,<dir>,64`), so
+    * a key reads the same in every session and two families whose keys
+    * share a shape stay apart. The round-15 verdict's first-payer accounting
     * gap: Bench's best-of-2 `min` drops the first payer's build cost
     * from every per-query figure AND the total, so the reported numbers
     * understate true cold-session cost by the sum of the family builds.
@@ -118,10 +125,19 @@ object SessionCache {
   private val builds =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  private[operators] def recordBuild(key: String, sec: Double): Unit =
-    builds.merge(key, sec, (a, b) => a + b)
+  private[operators] def recordBuild(family: String, key: Any,
+      sec: Double): Unit =
+    builds.merge(ledgerKey(family, key), sec, (a, b) => a + b)
 
-  /** Snapshot of the build ledger: cache-key string → total build seconds
+  private def ledgerKey(family: String, key: Any): String = {
+    val parts = key match {
+      case p: Product => p.productIterator.toSeq
+      case k => Seq(k)
+    }
+    family + ":" + parts.filterNot(_.isInstanceOf[SparkSession]).mkString(",")
+  }
+
+  /** Snapshot of the build ledger: ledger key → total build seconds
     * spent on builds under that key this session. */
   def buildLog: Map[String, Double] = {
     val b = Map.newBuilder[String, Double]

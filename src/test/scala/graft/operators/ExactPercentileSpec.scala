@@ -54,6 +54,28 @@ class ExactPercentileSpec extends SparkTestBase {
     }
   }
 
+  test("rankSelect equals compute bitwise: groups, ties, NULLs, signed zero") {
+    val spark0 = spark
+    import spark0.implicits._
+    val rows = Seq(("a", Some(5.0)), ("b", Some(1.0)), ("b", Some(2.0)),
+      ("c", Some(0.0)), ("c", Some(-0.0)), ("c", Some(-0.0)),
+      ("d", Some(1.5)), ("d", None), ("d", Some(-2.25)), ("d", Some(7.0)),
+      ("e", None)) ++
+      (1 to 101).map(i => ("f", Some((i % 7).toDouble / 3))) ++
+      (1 to 64).map(i => ("g", Some(math.sin(i.toDouble) * 1e3)))
+    val df = rows.toDF("k", "x")
+    for (p <- Seq(0.0, 0.25, 0.5, 0.77, 1.0)) {
+      val want = ExactPercentile.compute(df, Seq("k"), "x", Seq(p))
+      val got = ExactPercentile.rankSelect(df, Seq("k"), "x", p).collect()
+        .map(r => Seq[Any](r.getString(0)) -> r.getDouble(1)).toMap
+      assert(got.keySet == want.keySet, s"p=$p") // "e" (all NULL) absent
+      got.foreach { case (k, v) =>
+        assert(java.lang.Double.doubleToRawLongBits(v) ==
+          java.lang.Double.doubleToRawLongBits(want(k)(0)), s"p=$p $k: $v")
+      }
+    }
+  }
+
   test("exhausted brackets fall back to [min,max] and still resolve") {
     val spark0 = spark
     import spark0.implicits._

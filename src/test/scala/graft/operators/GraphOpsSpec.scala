@@ -29,6 +29,14 @@ class GraphOpsSpec extends SparkTestBase {
     assert(shared.toSeq == edges.sorted.toSeq)
   }
 
+  test("the build ledger keys a shared graph build by family, kind and dir") {
+    GraphOps.copurchaseEdgesShared(spark, sf)
+    val keys = SessionCache.buildLog.keySet
+    assert(keys.contains(s"graph:edges,$sf,64"), keys)
+    assert(keys.contains(s"graph:baskets,$sf,64"), keys)
+    assert(keys.forall(!_.contains("SparkSession@")), keys)
+  }
+
   test("degree distribution sums to node count and total degree = 2|E|") {
     val dist = GraphOps.graphDegree(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)))

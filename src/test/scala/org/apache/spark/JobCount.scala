@@ -1,32 +1,12 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Counts the Spark jobs started on behalf of the calling thread while
   * `body` runs — matched by a fresh job group, which Spark hands on to the
   * broadcast and AQE stage threads — once the listener bus has delivered
-  * every event. The bus is Spark-internal, hence this package. */
+  * every event (see [[StageTasks]], which also reports each job's stages). */
 object JobCount {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val group = s"job-count-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try {
-      val out = body
-      sc.listenerBus.waitUntilEmpty()
-      (out, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, jobs, _) = StageTasks(sc)(body)
+    (out, jobs)
   }
 }
