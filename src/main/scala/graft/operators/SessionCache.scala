@@ -105,7 +105,10 @@ object SessionCache {
 
   private[operators] def register(clear: () => Unit): Unit = all.add(clear)
 
-  /** Drop every entry of every registered cache (see class doc). */
+  /** Drop every entry of every registered cache (see class doc).
+    * [[graft.Tables]]' parquet schema memo is deliberately not one of them:
+    * its key carries the input's file listing and read settings, so it
+    * cannot go stale, and it holds no checkpoint blocks to lose. */
   def clearAll(): Unit = all.forEach(_.apply())
 
   /** Build-cost ledger (round 16): wall-clock seconds of every shared
