@@ -11,6 +11,7 @@ the same test tables, sorts columns by name, and compares exact values
 (mirroring the driver's hash compare).
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -25,8 +26,12 @@ TABLES = [
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        # a table is one parquet file, or a directory of part files as
+        # Spark writes it (graft.ScaleData's output)
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = 0
     # surface Verify's explicit failure markers FIRST: pyarrow silently
@@ -34,7 +39,6 @@ def main(sf_dir: str, out_dir: str) -> int:
     # whose run failed twice (dir contains only _FAILED) would surface as
     # "output unreadable" for oracle queries but pass unnoticed for
     # rows-only queries
-    import os
     for name in sorted(os.listdir(out_dir)):
         marker = os.path.join(out_dir, name, "_FAILED")
         if os.path.isdir(os.path.join(out_dir, name)) and os.path.exists(marker):

@@ -2,34 +2,43 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.plans.logical._
 
-/** Generates SCALE_INDEX.md — the per-query scale-posture index (VERDICT
-  * round-10 ask #2): one row per declared query with
+/** Writes SCALE_INDEX.md, the per-query scale-posture index, from two
+  * [[Bench]] runs over data of different sizes (say sf0.1 and a
+  * [[ScaleData]] directory of 10 copies):
   *
-  *   - t(sf0.1) and t(sf1-equivalent) warm best-of-2 wall times and the
-  *     measured exponent e = log10(t₁/t₀.₁) between them (real data →
-  *     ScaleGate's 10× synthesis at /tmp/graft_sf1 — run
-  *     `runMain graft.ScaleGate` first if absent);
-  *   - the authoritative prior ScaleSpot exponent where one was measured
-  *     (10×→100× synthetic growth, round recorded) — those supersede the
+  *   sbt "runMain graft.ScaleIndex <a.json> <b.json> [out.md]"
+  *
+  * Each file holds Bench's `{"metric":"total",...}` line: the committed
+  * BENCH_FULL.json, the file a full run writes to `SPARK_GRAFT_BENCH_OUT`,
+  * or a captured Bench stdout. One row per query names
+  *
+  *   - its times t_a and t_b, the `queries` entries of the two lines, and
+  *     the measured exponent e = log(t_b/t_a) / log(n_b/n_a), where n is
+  *     the lineitem row count of each line's `sf` directory;
+  *   - the authoritative prior spot exponent where one was measured
+  *     (10×→100× synthetic growth, round recorded): those supersede the
   *     bench ratio for the superlinear-risk family because they measure a
   *     further decade;
-  *   - a mechanical plan-shape summary from the optimized logical plan
-  *     (J=joins A=aggregates W=windows G=explodes B=materialize barriers
-  *     S=table scans) — the bounded-shape argument in compressed form.
+  *   - a mechanical plan-shape summary from the optimized logical plan at
+  *     `a`'s data (J=joins A=aggregates W=windows G=explodes
+  *     B=materialize barriers S=table scans): the bounded-shape argument
+  *     in compressed form.
   *
-  * Exponents on sub-0.6 s (sf1) queries are fixed-overhead-dominated and
-  * flagged `·` — the honest reading there is "cheap at both scales", not
-  * a growth law.
-  *
-  *   SPARK_DRIVER_MEM=24g sbt "runMain graft.ScaleIndex [out.md]"
+  * Exponents where t_b is under 0.6 s are fixed-overhead-dominated and
+  * flagged `·`: the honest reading there is "cheap at both scales", not a
+  * growth law. A query that errored in either run (a null entry) or is
+  * missing from one of them gets an ERR row.
   */
 object ScaleIndex {
 
-  /** Prior measured exponents: ScaleSpot 10×→100× (or the documented dial
-    * family), with the measuring round. Keyed facts live in SCALE.md's
-    * round sections; this map is the index view of them. */
+  /** Prior measured exponents from the 10×→100× spot runs (or the
+    * documented dial family), with the measuring round. Keyed facts live in
+    * SCALE.md's round sections; this map is the index view of them. */
   val SpotE: Map[String, String] = Map(
     "q_ann_recall" -> "0.37 (r7)",
     "q_attribution" -> "0.65 (r7)",
@@ -159,67 +168,80 @@ object ScaleIndex {
     s"${j}J ${a}A ${w}W ${g}G ${b}B ${s}S"
   }
 
+  /** Bench's `{"metric":"total",...}` line in `text`: its per-query
+    * times, a null entry (an errored query) read as None, and its `sf`. */
+  def parseBench(text: String): (Map[String, Option[Double]], String) = {
+    val mapper = new ObjectMapper()
+    val line = text.linesIterator.map(_.trim).filter(_.startsWith("{"))
+      .map(l => mapper.readTree(l))
+      .find(n => n.path("metric").asText() == "total")
+      .getOrElse(sys.error("""no {"metric":"total",...} line"""))
+    val queries = line.get("queries").properties().asScala.map { e =>
+      e.getKey -> Option(e.getValue).filterNot(_.isNull).map(_.asDouble())
+    }.toMap
+    (queries, line.get("sf").asText())
+  }
+
+  /** One entry per query named in either run, in name order: its times and
+    * exponent e = log(t_b/t_a) / log(rowRatio), or None (an ERR row) when
+    * it errored in either run or is missing from one. */
+  def exponents(a: Map[String, Option[Double]], b: Map[String, Option[Double]],
+      rowRatio: Double): Seq[(String, Option[(Double, Double, Double)])] =
+    (a.keySet ++ b.keySet).toSeq.sorted.map { name =>
+      name -> (for { ta <- a.get(name).flatten; tb <- b.get(name).flatten }
+        yield (ta, tb, math.log(tb / ta) / math.log(rowRatio)))
+    }
+
   def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "SCALE_INDEX.md"
-    val sf01 = "/root/testdata/sf0.1"
-    val sf1 = ScaleGate.OutDir
-    require(new java.io.File(s"$sf1/lineitem.parquet").exists(),
-      s"sf1 synthesis missing — run `runMain graft.ScaleGate` first")
+    require(args.length == 2 || args.length == 3,
+      "usage: ScaleIndex <a.json> <b.json> [out.md]")
+    def read(path: String) = parseBench(Files.readString(Paths.get(path)))
+    val ((qa, sfA), (qb, sfB)) = (read(args(0)), read(args(1)))
+    val out = if (args.length > 2) args(2) else "SCALE_INDEX.md"
     val spark = GraftSession.builder("graft-scale-index").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // warm pass: plan compile + JIT at sf0.001 (the Bench protocol)
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try FullExec.count(fn(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-    }
-    def best2(f: => Unit): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
-    }
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    def lineitemRows(sf: String) = Tables.lineitem(spark, sf).count().toDouble
+    val rowRatio = lineitemRows(sfB) / lineitemRows(sfA)
+    println(f"[index] $sfA -> $sfB: lineitem row ratio $rowRatio%.3f")
+    val rows = exponents(qa, qb, rowRatio).map { case (name, r) =>
       val sh =
-        try shape(fn(spark, sf01).queryExecution.optimizedPlan)
+        try shape(SparkEntry.queries(name)(spark, sfA).queryExecution.optimizedPlan)
         catch { case _: Throwable => "?" }
-      val r = try {
-        val t01 = best2(FullExec.count(fn(spark, sf01)))
-        val t1 = best2(FullExec.count(fn(spark, sf1)))
-        val e = math.log10(t1 / t01)
-        val flag = if (t1 < 0.6) "·" else ""
-        Right((t01, t1, f"$e%.2f$flag"))
-      } catch { case ex: Throwable =>
-        Left(ex.toString.takeWhile(_ != '\n').take(120))
-      }
+      val spot = SpotE.getOrElse(name, "—")
       r match {
-        case Right((t01, t1, e)) =>
-          println(f"[index] $name%-24s ${t01}%7.2f ${t1}%7.2f  e=$e%-6s $sh")
-          f"| `$name` | $t01%.2f | $t1%.2f | $e | ${SpotE.getOrElse(name, "—")} | $sh |"
-        case Left(m) =>
-          println(s"[index] $name ERROR $m")
-          s"| `$name` | ERR | ERR | ERR | ${SpotE.getOrElse(name, "—")} | $sh |"
+        case Some((ta, tb, e)) =>
+          val flag = if (tb < 0.6) "·" else ""
+          println(f"[index] $name%-24s $ta%7.2f $tb%7.2f  e=$e%.2f$flag $sh")
+          f"| `$name` | $ta%.2f | $tb%.2f | $e%.2f$flag | $spot | $sh |"
+        case None =>
+          println(s"[index] $name ERR")
+          s"| `$name` | ERR | ERR | ERR | $spot | $sh |"
       }
     }
     val header =
-      """# SCALE_INDEX — per-query scale posture (generated by `runMain graft.ScaleIndex`)
+      s"""# SCALE_INDEX — per-query scale posture (generated by `runMain graft.ScaleIndex`)
         |
-        |One row per declared query. `t(sf0.1)` / `t(sf1)` are warm
-        |best-of-2 wall seconds on the real sf0.1 data and ScaleGate's
-        |10× sf1-equivalent synthesis; `e(sf0.1→sf1)` = log10(t₁/t₀.₁) between
-        |them — `·` marks rows under 0.6 s at sf1, where fixed overhead
-        |dominates and the honest reading is "cheap at both scales", not a
-        |growth law. `spot e` is the authoritative prior ScaleSpot
-        |measurement (10×→100× synthetic growth, measuring round in
-        |parentheses; full readings in SCALE.md's round sections) — it
-        |supersedes the bench ratio for the superlinear-risk family because
-        |it measures a further decade of growth. `shape` compresses the
-        |optimized logical plan: J joins, A aggregates, W windows,
-        |G explodes, B materialize barriers, S table scans — the
-        |bounded-shape argument for rows without a spot number.
+        |One row per query timed by two Bench runs (best-of-reps wall
+        |seconds, Bench's `queries` map):
+        |
+        |- `t_a` on `$sfA`
+        |- `t_b` on `$sfB`
+        |
+        |`e` = log(t_b/t_a) / log(n_b/n_a), with the measured lineitem row
+        |ratio n_b/n_a = ${f"$rowRatio%.3f"}. `·` marks rows under 0.6 s at
+        |`b`, where fixed overhead dominates and the honest reading is "cheap
+        |at both scales", not a growth law. `spot e` is the authoritative
+        |prior spot measurement (10×→100× synthetic growth, measuring
+        |round in parentheses; full readings in SCALE.md's round sections):
+        |it supersedes the bench ratio for the superlinear-risk family
+        |because it measures a further decade of growth. `shape` compresses
+        |the optimized logical plan at `a`'s data: J joins, A aggregates,
+        |W windows, G explodes, B materialize barriers, S table scans
+        |— the bounded-shape argument for rows without a spot number.
         |CONTRAST DIAL rows are the five declared quadratic baselines
         |(SURVEY §2.3), each shipping a measured scale-safe primary.
         |
-        || query | t(sf0.1) s | t(sf1) s | e(sf0.1→sf1) | spot e (round) | shape |
+        || query | t_a s | t_b s | e | spot e (round) | shape |
         ||---|---|---|---|---|---|""".stripMargin
     Files.writeString(Paths.get(out),
       header + "\n" + rows.mkString("\n") + "\n")

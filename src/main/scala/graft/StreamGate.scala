@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{CorpusStreamOps, EventStreamOps}
 
-/** Recorded streaming-parity gate (mirrors ScaleGate's role): runs every
+/** Recorded streaming-parity gate: runs every
   * stateful streaming twin over the fixture as a real micro-batched file
   * stream and diffs its output against the batch oracle — the batch run
   * of the same operator, or the DECLARED batch query where one exists

@@ -25,9 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * harnesses (Verify's second attempt) must clear before retrying, and
   * clearing ALL registered caches means the next cache added to the
   * codebase is covered automatically instead of depending on the harness
-  * remembering a new clear call. Long multi-dataset harnesses (ScaleSpot's
-  * 10×/100× loop) also clear between datasets so finished checkpoint
-  * blocks are released instead of staying pinned by the map.
+  * remembering a new clear call. A long harness that times several
+  * datasets in one session should also clear between them, so finished
+  * checkpoint blocks are released instead of staying pinned by the map.
   *
   * `family` names the artifact in the build ledger (see
   * [[SessionCache.buildLog]]).

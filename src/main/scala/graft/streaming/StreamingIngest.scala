@@ -62,11 +62,14 @@ object StreamingIngest {
         val merged =
           if (!new java.io.File(targetDir).exists) batch
           else graft.operators.RelationalOps.upsert(
-            spark.read.parquet(targetDir), batch, key)
-        // materialize before overwriting the directory being read
+            spark.read.schema(schema).parquet(targetDir), batch, key)
+        // materialize before overwriting the directory being read; both
+        // reads pass the schema they already know, so neither runs a
+        // schema-inference job
         val tmp = targetDir + ".tmp"
         merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-        spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(targetDir)
+        spark.read.schema(merged.schema).parquet(tmp)
+          .write.mode(SaveMode.Overwrite).parquet(targetDir)
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -59,9 +59,16 @@ class StreamingIngestSpec extends SparkTestBase {
 
     val b2 = (5L to 15L).map(k => (k, "v2", k * 100.0)).toDF("k", "ver", "amt")
     b2.coalesce(1).write.parquet(s"$staging/b2")
+    // batch 2 merges into an existing target: both of its reads pass a known
+    // schema, so it runs no schema-inference job
+    val batch2 = new org.apache.spark.StreamBatchJobs(
+      spark.sparkContext, q.id.toString, batchId = 1)
     stage(s"$staging/b2", "f2.parquet")
     q.processAllAvailable()
     q.stop()
+    batch2.stop()
+    assert(batch2.count >= 1)
+    assert(batch2.count <= 4, s"batch 2 ran ${batch2.count} jobs")
 
     val got = spark.read.parquet(target).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
