@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.TextFunctions._
@@ -242,7 +243,7 @@ object DedupOps {
   // first-payer-attributed (the first consumer pays the build), the same
   // established contract as the graph family.
   private val sharedCapped =
-    new SessionCache[(SparkSession, String, Int)]("dedup-capped")
+    new SessionCache[(SparkSession, String, Int), DataFrame]("dedup-capped")
 
   private[graft] def cappedSurvivorsShared(spark: SparkSession, dir: String,
       dfCap: Int = 16): DataFrame =
@@ -647,7 +648,9 @@ object DedupOps {
     * duplicates, dedupable by doc_id as the sink contract promises. On a
     * non-epoch (batch-mode) index the stored rows carry no epoch column
     * and are treated as epoch −1: always visible. Partition pruning makes
-    * the fence free — excluded epochs are never scanned. */
+    * the fence free — excluded epochs are never scanned. Building the
+    * probe runs one job, the batch's [[Materialize]]: the index tables are
+    * read with known schemas ([[bandIndexTables]]). */
   def bandIndexProbe(spark: SparkSession, path: String, batch: DataFrame,
       threshold: Double = 0.5, numHashes: Int = 32, bands: Int = 8,
       maxEpochExclusive: Option[Long] = None): DataFrame = {
@@ -663,7 +666,8 @@ object DedupOps {
         .as("sig"))
       .filter(col("sig").isNotNull)
     val bbands = bandedSignatures(bsigs, bands, numHashes)
-    val ibands = epochFenced(spark.read.parquet(s"$path/bands"))
+    val (storedBands, storedShingles) = bandIndexTables(spark, path)
+    val ibands = epochFenced(storedBands)
     // batch side probes the stored index; shuffle_hash for the same
     // reason as dedupIncrNear (high-cardinality equality key)
     val cand = bbands.as("a").hint("shuffle_hash")
@@ -671,7 +675,7 @@ object DedupOps {
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
       .select(col("a.doc_id").as("bd"), col("b.doc_id").as("cd"))
       .distinct()
-    val ish = epochFenced(spark.read.parquet(s"$path/shingles"))
+    val ish = epochFenced(storedShingles)
     val matches = jaccardVerifyPairs(cand, barr, ish, "bd", "cd", threshold)
       .groupBy(col("bd"))
       .agg(count(lit(1)).as("n_matches"), min(col("cd")).as("fm"))
@@ -682,6 +686,28 @@ object DedupOps {
         coalesce(col("n_matches"), lit(0L)).as("n_corpus_matches"),
         coalesce(col("fm"), lit(-1L)).as("first_match"))
       .orderBy(col("doc_id"))
+  }
+
+  /** The index's `bands` and `shingles` tables, read with their known
+    * schemas: inferring them from parquet footers runs a Spark job per
+    * table on every probe, since a streamed index's listing changes with
+    * each append. An epoch-partitioned index is told apart by the
+    * `epoch=` children of `bands/`, a listing that runs no job; partition
+    * columns are typed as partition inference types them. */
+  private[operators] def bandIndexTables(spark: SparkSession,
+      path: String): (DataFrame, DataFrame) = {
+    val bandsDir = new org.apache.hadoop.fs.Path(s"$path/bands")
+    val epochs = bandsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(bandsDir)
+      .exists(f => f.isDirectory && f.getPath.getName.startsWith("epoch="))
+    def read(table: String, fields: StructField*) = spark.read
+      .schema(StructType(
+        if (epochs) fields :+ StructField("epoch", IntegerType) else fields))
+      .parquet(s"$path/$table")
+    (read("bands", StructField("doc_id", LongType),
+        StructField("bkey", StringType), StructField("band", IntegerType)),
+      read("shingles", StructField("doc_id", LongType),
+        StructField("sh", ArrayType(StringType))))
   }
 
   /** q_minhash_recall: LSH banding calibration audit — for each banding of

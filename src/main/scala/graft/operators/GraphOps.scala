@@ -91,7 +91,7 @@ object GraphOps {
     * Bounded: one edges + one baskets entry per (session, dir) actually
     * queried (a handful in tests/bench), each |E| or |orders| sized. */
   private val shared =
-    new SessionCache[(SparkSession, String, String, Int)]("graph")
+    new SessionCache[(SparkSession, String, String, Int), DataFrame]("graph")
 
   // the edges builder calls basketsShared — a nested lookup on the same
   // cache — which SessionCache's get/putIfAbsent shape permits (see its

@@ -193,7 +193,7 @@ object IvfOps {
   // centroids.
   private final case class Trained(model: Model, assigned: DataFrame)
   private val sharedTrained =
-    new SessionValueCache[(SparkSession, String, Int, Int), Trained]("ivf")
+    new SessionCache[(SparkSession, String, Int, Int), Trained]("ivf")
 
   /** The trained coarse-quantizer MODEL, once per (session, dir, k,
     * iters). Builds (and caches) the inverted list alongside — every

@@ -113,11 +113,12 @@ object PqOps {
   // dial...) — different scale dirs or dials never alias — dropped by
   // SessionCache.clearAll, and result-invisible: every consumer reads
   // bit-identical codebooks/codes.
-  private val sharedDf = new SessionCache[(SparkSession, String, String, Int)]("pq")
+  private val sharedDf =
+    new SessionCache[(SparkSession, String, String, Int), DataFrame]("pq")
   private val sharedModel =
-    new SessionValueCache[(SparkSession, String, Int), Model]("pq-model")
+    new SessionCache[(SparkSession, String, Int), Model]("pq-model")
   private val sharedIndex =
-    new SessionValueCache[(SparkSession, String, Int, Int), IvfPqIndex]("pq-index")
+    new SessionCache[(SparkSession, String, Int, Int), IvfPqIndex]("pq-index")
 
   /** L2-normalized corpus vectors. Round 16 (advisor): NOT materialized
     * or session-cached — this is a full-corpus, embedding-width frame,

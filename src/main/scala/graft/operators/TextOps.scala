@@ -842,7 +842,7 @@ object TextOps {
     * now the join+agg cost the r12 verdict asked for; the one-time build
     * (~3.5 s) is paid by whichever consumer runs first. */
   private val trigramShared =
-    new SessionCache[(SparkSession, String, Int)]("text-trigrams")
+    new SessionCache[(SparkSession, String, Int), DataFrame]("text-trigrams")
 
   /** Drop the cached classifier frames (see [[SessionCache]] contract). */
   def clearCache(): Unit = trigramShared.clear()

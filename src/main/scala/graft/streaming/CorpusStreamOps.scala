@@ -387,8 +387,8 @@ object CorpusStreamOps {
     * against batches 1..N−1 and the index grows by appends, never a
     * rebuild. This is the daily-crawl-drop loop as a `foreachBatch`
     * stream: the nightly batch shape and the streaming shape share ONE
-    * index and one probe kernel (CorpusStreamSpec pins the streamed
-    * verdicts to a direct `bandIndexProbe` recompute).
+    * index and one probe kernel (StreamGate's band-index check pins the
+    * streamed verdicts to a direct `bandIndexProbe` recompute).
     *
     * State lives entirely in the index tables, not executor memory — the
     * contrast with [[nearDupFlags]], whose per-bucket signature state is

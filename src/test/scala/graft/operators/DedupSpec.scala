@@ -379,4 +379,29 @@ class DedupSpec extends SparkTestBase {
       "fixture gives the fence nothing to exclude")
     assert(unfenced.forall(!_._2), "self-matching docs must all be non-novel")
   }
+
+  test("band index probe reads the index with known schemas: one job to build, both layouts") {
+    // the batch's Materialize is the only job; inferring the bands and
+    // shingles schemas from their footers would add one job each
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val firstHex = substring(md5(col("doc_id").cast("string")), 1, 1)
+    val batch = docs.filter(firstHex === "f")
+    val recomputed = DedupOps.dedupIncrNear(spark, sf).collect().toSeq
+    Seq(None, Some(0L)).foreach { epoch =>
+      val idx = java.nio.file.Files
+        .createTempDirectory("graft-band-probe-jobs").toString
+      DedupOps.bandIndexAppend(docs.filter(firstHex.between("0", "7")), idx,
+        epoch = epoch)
+      DedupOps.bandIndexAppend(docs.filter(firstHex.between("8", "e")), idx,
+        epoch = epoch.map(_ + 1))
+      val (probe, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+        DedupOps.bandIndexProbe(spark, idx, batch,
+          maxEpochExclusive = epoch.map(_ + 2)))
+      assert(jobs <= 1, s"epoch=$epoch: $jobs jobs to build the probe")
+      assert(probe.collect().toSeq == recomputed, s"epoch=$epoch")
+      val (bands, sh) = DedupOps.bandIndexTables(spark, idx)
+      assert(bands.schema == spark.read.parquet(s"$idx/bands").schema)
+      assert(sh.schema == spark.read.parquet(s"$idx/shingles").schema)
+    }
+  }
 }

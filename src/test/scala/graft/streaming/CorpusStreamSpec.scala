@@ -2,144 +2,27 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
+import graft.StreamGate.land
 
-import graft.SparkTestBase
+class CorpusStreamSpec extends StreamGateChecks {
 
-class CorpusStreamSpec extends SparkTestBase {
+  test("streaming corpus clean dedups across micro-batches; equals the batch run")(
+    gate("corpus_clean_cross_batch_dedup"))
 
-  test("streaming corpus clean dedups across micro-batches; equals the batch run") {
-    val base = Files.createTempDirectory("graft-docs")
-    val in = Files.createDirectories(base.resolve("in"))
-    val out = base.resolve("out").toString
-    val cp = base.resolve("cp").toString
+  test("stream scoring with the batch-trained unigram model equals the batch run")(
+    gate("unigram_scoring_vs_declared_twin"))
 
-    val docs = graft.Tables.documents(spark, sf)
-    val schema = docs.schema
+  test("stream scoring with the broadcast quality weights equals the declared q_quality_logistic")(
+    gate("quality_scoring_vs_declared_twin"))
 
-    // land each batch as ONE parquet file with a name that fixes the intake
-    // order (file source processes oldest-first)
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
+  test("streamed per-source token counts give the declared q_temperature_mix")(
+    gate("temperature_mix_vs_declared_twin"))
 
-    // batch 1: the corpus
-    land(docs, "001.parquet")
-    val q = CorpusStreamOps.start(spark, in.toString, schema, out, cp)
-    q.processAllAvailable()
-    // batch 2: 50 exact re-sends with shifted ids — cross-batch duplicates
-    // only the streaming dedup state can catch
-    land(docs.filter(col("doc_id") < 50)
-      .withColumn("doc_id", col("doc_id") + 1000000L), "002.parquet")
-    q.processAllAvailable()
-    q.stop()
+  test("stateful domain cap flags equal the first-arrival replay and the declared q_domain_caps")(
+    gate("domain_caps_vs_declared_twin"))
 
-    val got = spark.read.parquet(out)
-    val batch = CorpusStreamOps.clean(
-      docs.unionByName(docs.filter(col("doc_id") < 50)
-        .withColumn("doc_id", col("doc_id") + 1000000L)))
-    // same distinct fingerprints, every re-sent duplicate suppressed
-    assert(got.select(col("fp")).distinct().count() == got.count())
-    assert(got.count() == batch.count())
-    // the re-sent copies must all be dropped (their fp already seen)
-    assert(got.filter(col("doc_id") >= 1000000L).count() == 0)
-  }
-
-  test("stream scoring with the batch-trained unigram model equals the batch run") {
-    val docs = graft.Tables.documents(spark, sf)
-    val (model, oov) = CorpusStreamOps.trainUnigramModel(docs)
-    val batch = CorpusStreamOps.scoreWithModel(docs, model, oov)
-      .select("doc_id", "mean_logp", "low_quality")
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getBoolean(2)))).toMap
-
-    // stream the same corpus through a file source in two batches; the
-    // scorer is a narrow map, so append mode needs no state or watermark
-    val base = Files.createTempDirectory("graft-score")
-    val in = Files.createDirectories(base.resolve("in"))
-    val out = base.resolve("out").toString
-    val cp = base.resolve("cp").toString
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land2")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
-    land(docs.filter(col("doc_id") < 250), "001.parquet")
-    land(docs.filter(col("doc_id") >= 250), "002.parquet")
-    val q = CorpusStreamOps.scoreWithModel(
-        spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(in.toString),
-        model, oov)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.read.parquet(out)
-      .select("doc_id", "mean_logp", "low_quality")
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getBoolean(2)))).toMap
-    assert(streamed == batch)
-    // with topK = full vocab the bounded model matches the exact batch twin
-    val exact = graft.operators.TextOps.unigramLogprob(spark, sf)
-      .select("doc_id", "mean_logp")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val hits = batch.count { case (id, (lp, _)) => exact(id) == lp }
-    assert(hits == batch.size, s"only $hits/${batch.size} match the exact twin")
-  }
-
-  test("streaming MinHash near-dup flags exact re-sends across micro-batches") {
-    val base = Files.createTempDirectory("graft-neardup")
-    val in = Files.createDirectories(base.resolve("in"))
-    val out = base.resolve("out").toString
-    val cp = base.resolve("cp").toString
-
-    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
-    val schema = docs.schema
-
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
-
-    // batch 1: the corpus; batch 2: 40 byte-identical re-sends with
-    // shifted ids - near-dups only cross-batch state can catch
-    land(docs, "001.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = CorpusStreamOps.nearDupFlags(stream)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    land(docs.filter(col("doc_id") < 40)
-      .withColumn("doc_id", col("doc_id") + 1000000L), "002.parquet")
-    q.processAllAvailable()
-    q.stop()
-
-    val verdicts = CorpusStreamOps.resolveNearDups(spark.read.parquet(out))
-    val resent = verdicts.filter(col("doc_id") >= 1000000L).collect()
-    // every re-send whose original produced a signature must be flagged,
-    // and against an EARLIER (batch-1) doc
-    val signed = docs.filter(col("doc_id") < 40)
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.minhashArray(
-          graft.functions.TextFunctions.shingles(
-            graft.functions.TextFunctions.tokensLower(col("text"))), 32)
-          .as("sig"))
-      .filter(col("sig").isNotNull).count()
-    assert(resent.length == signed)
-    assert(resent.forall(_.getBoolean(2)), "all exact re-sends flagged")
-    assert(resent.forall(_.getLong(1) < 1000000L), "flagged against batch-1 docs")
-  }
+  test("streaming MinHash near-dup flags exact re-sends across micro-batches")(
+    gate("neardup_cross_batch_minhash"))
 
   test("streaming near-dup matches the batch minhash verdict within one batch") {
     import spark.implicits._
@@ -160,14 +43,7 @@ class CorpusStreamSpec extends SparkTestBase {
       (4L, (1 to 40).map(i => s"other$i").mkString(" "))
     ).toDF("doc_id", "text")
 
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
-    land(docs, "001.parquet")
+    land(docs, in, "001.parquet")
     val q = CorpusStreamOps.nearDupFlags(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(in.toString))
@@ -188,108 +64,9 @@ class CorpusStreamSpec extends SparkTestBase {
     assert(v(3L) == ((1L, true)))
   }
 
-  test("streaming band-index loop: per-batch probe+append equals the direct recompute") {
-    val base = Files.createTempDirectory("graft-bandstream")
-    val in = Files.createDirectories(base.resolve("in"))
-    val (idx, out, cp) = (base.resolve("idx").toString,
-      base.resolve("out").toString, base.resolve("cp").toString)
-    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
-    // batch 1: half the corpus; batch 2: the other half PLUS 25 exact
-    // re-sends of batch-1 docs under shifted ids
-    val b1 = docs.filter(col("doc_id") < 250)
-    val b2 = docs.filter(col("doc_id") >= 250).unionByName(
-      docs.filter(col("doc_id") < 25)
-        .withColumn("doc_id", col("doc_id") + 1000000L))
-    land(b1, "001.parquet")
-    val q = CorpusStreamOps.startBandIndexStream(
-      spark, in.toString, docs.schema, idx, out, cp)
-    q.processAllAvailable()
-    land(b2, "002.parquet")
-    q.processAllAvailable()
-    q.stop()
+  test("streaming band-index loop: per-batch probe+append equals the direct recompute")(
+    gate("band_index_stream_probe_append"))
 
-    val verdicts = spark.read.parquet(out).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(verdicts.size == b1.count() + b2.count())
-    // batch 1 probed an empty index: all novel
-    assert(docs.filter(col("doc_id") < 250).collect()
-      .forall(r => verdicts(r.getLong(0)) == ((true, 0L, -1L))))
-    // the batch-2 verdicts must equal a DIRECT probe of a batch-1-only
-    // index — streamed and batch shapes share one kernel and one index
-    val idx1 = Files.createTempDirectory("graft-bandstream-ref").toString
-    graft.operators.DedupOps.bandIndexAppend(b1, idx1)
-    val expect = graft.operators.DedupOps.bandIndexProbe(spark, idx1, b2)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getBoolean(1), r.getLong(2), r.getLong(3)))).toMap
-    b2.collect().foreach { r =>
-      val id = r.getLong(0)
-      assert(verdicts(id) == expect(id), s"doc $id: ${verdicts(id)} vs ${expect(id)}")
-    }
-    // every exact re-send whose original SIGNS (>=1 shingle) is flagged,
-    // with first_match at or below the original (fm is the MIN matching
-    // corpus id — the original itself, or an even-earlier near-dup of it)
-    val signed = docs.filter(col("doc_id") < 25)
-      .select(col("doc_id"), graft.functions.TextFunctions.minhashArray(
-        graft.functions.TextFunctions.shingles(
-          graft.functions.TextFunctions.tokensLower(col("text"))), 32)
-        .as("sig"))
-      .filter(col("sig").isNotNull)
-      .collect().map(_.getLong(0)).toSet
-    signed.foreach { o =>
-      val (novel, n, fm) = verdicts(o + 1000000L)
-      assert(!novel && n >= 1 && fm <= o,
-        s"re-send of $o: novel=$novel n=$n fm=$fm")
-    }
-    // the streamed index equals a batch-built one: append b2 to the
-    // reference and compare the full (doc_id, band, bkey) row sets
-    graft.operators.DedupOps.bandIndexAppend(b2, idx1)
-    def bandSet(p: String) = spark.read.parquet(s"$p/bands")
-      .select("doc_id", "band", "bkey").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(bandSet(idx) == bandSet(idx1))
-  }
-
-  test("production domain-cap stream sinks exactly the first-arrival survivors with intact payload") {
-    val base = Files.createTempDirectory("graft-domprod")
-    val in = Files.createDirectories(base.resolve("in"))
-    val out = base.resolve("out").toString
-    val cp = base.resolve("cp").toString
-    val docs = graft.Tables.documents(spark, sf)
-      .select("doc_id", "source", "text")
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmpDir = Files.createTempDirectory("graft-land")
-      df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      val part = Files.list(tmpDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, in.resolve(name))
-    }
-    // two drops in doc_id order — the cap must count ACROSS them
-    land(docs.filter(col("doc_id") < 250), "001.parquet")
-    land(docs.filter(col("doc_id") >= 250), "002.parquet")
-    val q = CorpusStreamOps.startDomainCapStream(spark, in.toString,
-      docs.schema, out, cp)
-    q.processAllAvailable(); q.stop()
-    val sunk = spark.read.parquet(out)
-    // survivor set == the batch replay of the same first-arrival policy
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("domain")).orderBy(col("doc_id"))
-    val expected = docs
-      .select(col("doc_id"), graft.operators.DomainOps.domainKey.as("domain"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= graft.operators.DomainOps.CapDocs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val sunkIds = sunk.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(sunkIds == expected)
-    assert(sunkIds.size < docs.count()) // drops actually happened
-    // payload integrity: every sunk (doc_id, source, text) is a fixture row
-    assert(sunk.select("doc_id", "source", "text").exceptAll(docs).count() == 0)
-  }
+  test("production domain-cap stream sinks exactly the first-arrival survivors with intact payload")(
+    gate("domain_caps_production_sink"))
 }

@@ -2,208 +2,32 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+class EventStreamSpec extends StreamGateChecks {
 
-import graft.{SparkTestBase, Tables}
+  test("streaming hourly counts equal the batch run (micro-batch replay, R3)")(
+    gate("hourly_counts"))
 
-class EventStreamSpec extends SparkTestBase {
+  test("streaming OHLC bars equal the oracle-checked batch q_ohlc")(
+    gate("ohlc_bars_vs_declared_q_ohlc"))
 
-  private lazy val stagingDir: String = {
-    // stage the events table as a clean µs-timestamp parquet so the file
-    // stream source reads it without the nanos legacy path
-    val dir = Files.createTempDirectory("graft-stream").toString
-    Tables.events(spark, sf).write.parquet(s"$dir/events")
-    dir
-  }
+  test("streaming dedup: a replayed file emits every event exactly once")(
+    gate("dedup_exactly_once"))
 
-  test("streaming hourly counts equal the batch run (micro-batch replay, R3)") {
-    val batchDf = Tables.events(spark, sf)
-    val expected = EventStreamOps.hourlyWindowedCounts(batchDf)
-      .orderBy("window_start", "event_type").collect()
+  test("chained stateful ops: dedup then windowed agg equals batch (append mode)")(
+    gate("dedup_then_windowed_agg"))
 
-    val schema = spark.read.parquet(s"$stagingDir/events").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // the reference's chunk loop
-      .parquet(s"$stagingDir/events")
-    val q = EventStreamOps.hourlyWindowedCounts(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("hourly")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("hourly")
-      .orderBy("window_start", "event_type").collect()
-    assert(got.sameElements(expected))
-  }
+  test("sessionize (stateful) matches the stateless batch sessionization")(
+    gate("sessionize_stateful_vs_batch"))
 
-  test("streaming OHLC bars equal the oracle-checked batch q_ohlc") {
-    val schema = spark.read.parquet(s"$stagingDir/events").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/events")
-    val q = EventStreamOps.ohlcBars(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("ohlc_bars")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ohlc_bars")
-      .orderBy("event_type", "window_start")
-      .select("event_type", "window_start", "n_events",
-        "open", "high", "low", "close").collect()
-    // strongest parity claim: equality against the DECLARED batch query
-    // (window(ts, 1h).start == date_trunc(hour, ts) for hour bars)
-    val expected = graft.operators.EventOps.ohlc(spark, sf)
-      .select(col("event_type"), col("hr").as("window_start"),
-        col("n_events"), col("open"), col("high"), col("low"), col("close"))
-      .orderBy("event_type", "window_start").collect()
-    assert(got.sameElements(expected))
-  }
+  test("stream-stream interval join matches the batch interval join")(
+    gate("interval_join_vs_batch"))
 
-  test("streaming dedup: a replayed file emits every event exactly once") {
-    // stage the stream as the same file twice -> every event arrives twice
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
-    val events = Tables.events(spark, sf)
-    events.coalesce(1).write.parquet(s"$dir/a")
-    val part = new java.io.File(s"$dir/a").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
-    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/in/f1.parquet"))
-    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/in/f2.parquet"))
-
-    val schema = events.schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = EventStreamOps.dedupEvents(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_events")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("dedup_events")
-    assert(got.count() == events.count())
-    assert(got.groupBy(col("event_id")).count()
-      .filter(col("count") > 1).count() == 0)
-  }
-
-  test("chained stateful ops: dedup then windowed agg equals batch (append mode)") {
-    // duplicate-heavy stream; a far-future sentinel event advances the
-    // watermark so every real window finalizes under append mode
-    val dir = Files.createTempDirectory("graft-chain-stream").toString
-    val events = Tables.events(spark, sf)
-    events.coalesce(1).write.parquet(s"$dir/a")
-    val part = new java.io.File(s"$dir/a").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
-    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/in/f1.parquet"))
-    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/in/f2.parquet"))
-    val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
-    events.limit(1)
-      .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 36000000L)))
-      .withColumn("event_id", lit(-1L))
-      .coalesce(1).write.parquet(s"$dir/sentinel")
-    val sentinelPart = new java.io.File(s"$dir/sentinel").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(sentinelPart.toPath, java.nio.file.Paths.get(s"$dir/in/f3.parquet"))
-
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = EventStreamOps.dedupedHourlyCounts(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("chained")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("chained")
-      .orderBy("window_start", "event_type").collect()
-    // batch equivalent on the real (non-sentinel) events; the sentinel's
-    // own window never finalizes and must not appear
-    val expected = EventStreamOps.hourlyWindowedCounts(events)
-      .orderBy("window_start", "event_type").collect()
-    assert(got.sameElements(expected))
-  }
-
-  test("sessionize (stateful) matches the stateless batch sessionization") {
-    import spark.implicits._
-    val events = Tables.events(spark, sf)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreamOps.Event]
-
-    // stateful operator emits closed sessions; flushing open state via
-    // finalSessions on the full data gives the ground truth
-    val truth = EventStreamOps.finalSessions(events, 30).collect()
-      .map(s => (s.user_id, s.n_events, s.total_value)).sorted
-
-    // drive the stateful version over the same data in one batch epoch:
-    // closed sessions + still-open state must partition the truth set
-    val closed = EventStreamOps.sessionize(events, 30).collect()
-    val closedSet = closed.map(s => (s.user_id, s.n_events, s.total_value)).toSet
-    assert(closedSet.subsetOf(truth.toSet))
-    // every user has exactly one open session left unreported
-    val users = events.select("user_id").distinct().count()
-    assert(truth.length == closed.length + users)
-  }
-
-  test("stream-stream interval join matches the batch interval join") {
-    val ev = spark.read.parquet(s"$stagingDir/events")
-    val batch = graft.operators.EventOps.viewToPurchase(spark, sf)
-      .select("view_id", "purchase_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val schema = ev.schema
-    def stream = spark.readStream.schema(schema).parquet(s"$stagingDir/events")
-    val q = EventStreamOps.viewPurchaseJoin(
-      stream.filter(col("event_type") === "view"),
-      stream.filter(col("event_type") === "purchase"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("vpjoin").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("vpjoin")
-      .select("view_id", "purchase_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-static anomaly flags equal the batch z-score on shared windows") {
-    val batchDf = Tables.events(spark, sf)
-    val baseline = EventStreamOps.anomalyBaseline(batchDf)
-    // batch replay of the same scoring over the same data
-    val expected = EventStreamOps.anomalyFlags(batchDf, baseline)
-      .orderBy("event_type", "window_start").collect()
-    assert(expected.nonEmpty)
-
-    val schema = spark.read.parquet(s"$stagingDir/events").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/events")
-    val q = EventStreamOps.anomalyFlags(stream, baseline)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("anomalies")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("anomalies")
-      .orderBy("event_type", "window_start").collect()
-    assert(got.sameElements(expected))
-    // scoring agrees with the declared batch query where windows align:
-    // both flag iff |rounded z| > 2
-    val flagged = got.count(_.getBoolean(4))
-    assert(flagged == expected.count(_.getBoolean(4)))
-  }
+  test("stream-static anomaly flags equal the batch z-score on shared windows")(
+    gate("anomaly_flags_stream_static"))
 
   test("probe: empty stream directory yields zero windows, no crash") {
     val empty = Files.createTempDirectory("graft-empty").toString
-    val schema = spark.read.parquet(s"$stagingDir/events").schema
-    val stream = spark.readStream.schema(schema).parquet(empty)
+    val stream = spark.readStream.schema(fixture.evSchema).parquet(empty)
     val q = EventStreamOps.hourlyWindowedCounts(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("empty_windows").start()
@@ -212,54 +36,9 @@ class EventStreamSpec extends SparkTestBase {
     assert(spark.table("empty_windows").count() == 0)
   }
 
-  test("stateful keep-anchored debounce: anchors persist, output is a maximal gap-respecting subset") {
-    import spark.implicits._
-    val events = Tables.events(spark, sf)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreamOps.Event]
-    val kept = EventStreamOps.debounceKeepAnchored(events, 60).collect()
-    // reference: greedy anchored debounce per (user, type) on the driver
-    val all = events.collect()
-      .groupBy(e => (e.user_id, e.event_type))
-    val expect = all.toSeq.flatMap { case (_, es) =>
-      var last = Long.MinValue
-      es.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).filter { e =>
-        val keep = last == Long.MinValue || e.ts.getTime - last > 3600000L
-        if (keep) last = e.ts.getTime
-        keep
-      }
-    }.map(_.event_id).toSet
-    assert(kept.map(_.event_id).toSet == expect)
-    // anchored-kept is a SUPERSET of lag-kept: the anchor is never later
-    // than the previous raw event, so any event the lag variant keeps
-    // (gap to prev raw > 60 min) has an at-least-as-large gap to the
-    // anchor and is kept too
-    val lagKept = graft.operators.EventOps.debounce(spark, sf)
-      .agg(sum("n_kept")).collect().head.getLong(0)
-    assert(kept.length >= lagKept)
-  }
+  test("stateful keep-anchored debounce: anchors persist, output is a maximal gap-respecting subset")(
+    gate("debounce_keep_anchored"))
 
-  test("streaming session_window counts equal the batch session aggregate") {
-    // the built-in declarative path: gap-merged sessions as a streaming
-    // aggregate must reproduce the batch q_session_window boundaries
-    val batch = Tables.events(spark, sf)
-    val expected = EventStreamOps.sessionWindowCounts(batch)
-      .orderBy("user_id", "sess_start").collect()
-    assert(expected.nonEmpty)
-
-    val schema = spark.read.parquet(s"$stagingDir/events").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/events")
-    val q = EventStreamOps.sessionWindowCounts(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("sess_win")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("sess_win")
-      .orderBy("user_id", "sess_start").collect()
-    assert(got.sameElements(expected))
-  }
+  test("streaming session_window counts equal the batch session aggregate")(
+    gate("session_window_counts"))
 }

@@ -1,41 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+class VectorStreamSpec extends StreamGateChecks {
 
-import org.apache.spark.sql.functions._
+  test("streamed ANN tags equal the batch kNN graph (train-offline/score-in-stream)")(
+    gate("ann_tag_stream_vs_knn_graph"))
 
-import graft.{SparkTestBase, Tables}
-
-class VectorStreamSpec extends SparkTestBase {
-
-  private def land(df: org.apache.spark.sql.DataFrame,
-      dir: java.nio.file.Path, name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft-vstream-land")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
-    Files.move(part, dir.resolve(name))
-  }
-
-  test("streamed ANN tags equal the batch kNN graph (train-offline/score-in-stream)") {
-    val base = Files.createTempDirectory("graft-vstream")
-    val in = Files.createDirectories(base.resolve("in"))
-    val (out, cp) = (base.resolve("out").toString, base.resolve("cp").toString)
-    val emb = Tables.embeddings(spark, sf)
-    val mid = emb.count() / 2
-    land(emb.filter(col("vec_id") < mid), in, "001.parquet")
-    land(emb.filter(col("vec_id") >= mid), in, "002.parquet")
-    val q = VectorStreamOps.startAnnTagStream(
-      spark, in.toString, emb.schema, sf, out, cp)
-    q.processAllAvailable(); q.stop()
-    // project the family contract: the sink is epoch-partitioned
-    // (exactly-once layout) and the partition column is bookkeeping
-    val got = spark.read.parquet(out)
-      .select("q_id", "rn", "cand_id", "cos_sim")
-      .orderBy("q_id", "rn").collect().map(_.toString).toSeq
-    val expect = graft.operators.PqOps.knnGraph(spark, sf)
-      .collect().map(_.toString).toSeq
-    assert(got == expect)
-    assert(got.nonEmpty)
-  }
+  test("an ANN tagger batch replayed from its checkpoint replaces its own output (exactly-once)")(
+    gate("ann_tag_replay_exactly_once"))
 }
