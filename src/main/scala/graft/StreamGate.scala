@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.DynamicVariable
+
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,6 +42,9 @@ object StreamGate {
       staged: String, evSchema: StructType, events: DataFrame,
       docs: DataFrame) {
     def eventStream: DataFrame = fileStream(spark, staged, evSchema)
+
+    /** Delete the staging directory; the fixture is unusable after. */
+    def close(): Unit = delete(Paths.get(staged).getParent)
   }
 
   object Fixture {
@@ -56,11 +62,15 @@ object StreamGate {
     * its place in a file stream's intake order (oldest first). */
   def land(df: DataFrame, dir: Path, name: String): Unit = {
     val tmp = Files.createTempDirectory("graft-gate-land")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
-    Files.move(part, dir.resolve(name))
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get()
+      Files.move(part, dir.resolve(name))
+    } finally delete(tmp)
   }
+
+  private def delete(dir: Path): Unit = FileUtil.fullyDelete(dir.toFile)
 
   /** A parquet file stream that takes one file per micro-batch: the
     * reference's chunk loop. */
@@ -69,10 +79,20 @@ object StreamGate {
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
+  /** The scratch directories of the running check, deleted when it ends
+    * (see [[check]]). */
+  private val scratch = new DynamicVariable[List[Path]](Nil)
+
+  private def scratchDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    scratch.value = dir :: scratch.value
+    dir
+  }
+
   /** A check's scratch space: an empty input directory, and the paths of
     * an output directory and a checkpoint. */
   private def dirs(prefix: String): (Path, String, String) = {
-    val base = Files.createTempDirectory(prefix)
+    val base = scratchDir(prefix)
     (Files.createDirectories(base.resolve("in")),
       base.resolve("out").toString, base.resolve("cp").toString)
   }
@@ -134,7 +154,11 @@ object StreamGate {
       (info +: failed).filter(_.nonEmpty).mkString("; "))
   }
 
-  private def check(name: String)(body: Fixture => Check) = name -> body
+  private def check(name: String)(body: Fixture => Check)
+      : (String, Fixture => Check) =
+    name -> (f => scratch.withValue(Nil) {
+      try body(f) finally scratch.value.foreach(delete)
+    })
 
   /** Every parity check, in run order, under its STREAMGATE.json name. */
   val checks: Seq[(String, Fixture => Check)] = Seq(
@@ -472,7 +496,7 @@ object StreamGate {
       val verdicts = byId(f.spark.read.parquet(out))
       // batch-2 verdicts == a DIRECT probe of a batch-1-only index:
       // streamed and batch shapes share one kernel and one index
-      val idx1 = Files.createTempDirectory("graft-gate-bandref").toString
+      val idx1 = scratchDir("graft-gate-bandref").toString
       DedupOps.bandIndexAppend(b1, idx1)
       val expect = byId(DedupOps.bandIndexProbe(f.spark, idx1, b2))
       val b2Ids = b2.collect().map(_.getLong(0)).toSet
@@ -604,6 +628,7 @@ object StreamGate {
           (if (c.note.nonEmpty)
             ",\"note\":\"" + c.note.replace("\"", "'") + "\"" else "") + "}"
       }.mkString(",") + "}}"
+    fixture.close()
     Files.writeString(Paths.get(outJson), json + "\n")
     println(s"[streamgate] $pass/${results.size} -> $outJson")
     spark.stop()

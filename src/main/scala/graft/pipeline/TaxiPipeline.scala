@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources._
@@ -41,6 +41,14 @@ object TaxiPipeline {
     HttpFetch.fetch(url, Paths.get(s"${c.outputDir}/${c.taxiColor}_taxi/" +
       s"${c.year}/${c.month}/trip_data.csv${if (url.endsWith(".gz")) ".gz" else ""}"))
 
+  /** R4's keep predicate: a zero passenger count drops the row, a null one
+    * keeps it (pandas semantics). None when there is no passenger_count
+    * column, so nothing is dropped. */
+  private def keepsPassengers(df: DataFrame): Option[Column] =
+    if (df.columns.contains("passenger_count"))
+      Some(col("passenger_count") =!= 0 || col("passenger_count").isNull)
+    else None
+
   /** R5: data-quality metric — rows with passenger_count == 0
     * (ingest_data.py:32,36). One scalar crosses the shuffle. */
   def zeroPassengerCount(df: DataFrame): Long =
@@ -50,9 +58,7 @@ object TaxiPipeline {
 
   /** R4: drop zero-passenger rows (ingest_data.py:29-38). */
   def dropZeroPassengers(df: DataFrame): DataFrame =
-    if (df.columns.contains("passenger_count"))
-      df.filter(col("passenger_count") =!= 0 || col("passenger_count").isNull)
-    else df
+    keepsPassengers(df).fold(df)(df.filter)
 
   /** R7: cast-if-present timestamp conversion, preserving the reference's
     * green/yellow quirk (ingest_data.py:67-76): yellow files carry `tpep_*`
@@ -72,40 +78,44 @@ object TaxiPipeline {
     // would otherwise re-read the file ~6×. A single month file fits; a
     // at-scale ingest runs per-partition where each file is read once anyway.
     val raw = CsvSource(csvPath).read(spark).cache()
-    // one aggregate pass for (total, zero-count) instead of two scans;
-    // the zero-count column is conditional on passenger_count existing (R7's
-    // cast-if-present sibling quirk)
-    val zeroCol =
-      if (raw.columns.contains("passenger_count"))
-        sum(when(col("passenger_count").isin(0), 1L).otherwise(0L))
-      else lit(0L)
-    val stats = raw.agg(count(lit(1)).as("n"), zeroCol.as("zeros"))
-      .collect().head
-    val (total, zeroBefore) =
-      (stats.getLong(0), Option(stats.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
+    // one aggregate pass for the total and both zero counts (R5 before and
+    // after R4's filter) instead of one query each; the zero counts are
+    // conditional on passenger_count existing (R7's cast-if-present
+    // sibling quirk)
+    val zeros = keepsPassengers(raw).map { keep =>
+      val zero = col("passenger_count").isin(0)
+      Seq(count_if(zero), count_if(keep && zero))
+    }.getOrElse(Seq(lit(0L), lit(0L)))
+    val stats = raw.agg(count(lit(1)), zeros: _*).collect().head
     val cleaned = castTimestampsIfPresent(dropZeroPassengers(raw))
-    val zeroAfter = zeroPassengerCount(cleaned)
     // R6: schema-only write creates/replaces the table without data motion
     JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Overwrite).write(cleaned.limit(0))
     JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Append).write(cleaned)
     raw.unpersist()
-    (total, zeroBefore, zeroAfter)
+    (stats.getLong(0), stats.getLong(1), stats.getLong(2))
   }
 
-  /** R9-R14: export — read back, cap rows (the reference's
-    * first-chunk-only export, ingest_data.py:102), write gzip parquet,
-    * "upload" to the object store, append to the warehouse, and read the
-    * stored object back (the reference's redundant re-download becomes a
-    * direct read). Returns the re-read DataFrame. */
+  /** R9-R14: export — read the stored table back once, capped at
+    * `exportRowCap` rows (the reference's first-chunk-only export,
+    * ingest_data.py:102), and write it once as gzip parquet under
+    * `outputDir`. The "upload" to the object store (R12) and the append to
+    * the warehouse (R13) copy that parquet's files ([[Publish]]): one
+    * database read and one encode feed every destination, as in the
+    * reference's `store_to_cloud` (ingest_data.py:88-126), so the three
+    * artifacts hold the same capped rows by construction. The stored object
+    * is read back with the schema just written (the reference's redundant
+    * re-download becomes a direct read that runs no schema-inference job).
+    * Returns the re-read DataFrame. */
   def exportToCloud(spark: SparkSession, c: Config): DataFrame = {
     val fromDb = JdbcSource(c.jdbcUrl, tableName(c)).read(spark)
       .limit(c.exportRowCap)
     val localParquet = s"${c.outputDir}/${tableName(c)}.parquet"
     ParquetSink(localParquet).write(fromDb)
     val bucketPath = s"${c.bucketDir}/${tableName(c)}.parquet"
-    ObjectStoreSink(bucketPath).write(fromDb)
-    WarehouseSink(c.warehouseDir, datasetName(c), "taxi_data").write(fromDb)
-    ObjectStoreSource(bucketPath).read(spark)
+    Publish.replace(spark, localParquet, bucketPath)
+    Publish.append(spark, localParquet,
+      s"${c.warehouseDir}/${datasetName(c)}/taxi_data")
+    ObjectStoreSource(bucketPath, Some(fromDb.schema)).read(spark)
   }
 
   /** R17: the whole flow as plain function composition. */

@@ -4,16 +4,18 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{FileUtil, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Source/Sink surface re-expressing the reference pipeline's IO edges
   * (SURVEY.md §2.1 R1/R2/R6/R8/R9/R11-R15) on Spark's data source API.
   *
   * The reference talks to Postgres, GCS and BigQuery; this environment is
-  * offline, so the object-store/warehouse sinks are local-filesystem
-  * stand-ins behind the same traits — swapping in `gs://` paths (Hadoop GCS
-  * connector) or the spark-bigquery connector is a constructor change, not
-  * an architecture change.
+  * offline, so the object store and the warehouse are local-filesystem
+  * stand-ins. The export encodes its rows once, as parquet, and
+  * [[Publish]] copies those files to both: an object copy into the bucket,
+  * then the warehouse's load job from the published parquet — the path the
+  * GCS connector (`gs://`) and a BigQuery load take.
   */
 trait Source { def read(spark: SparkSession): DataFrame }
 trait Sink { def write(df: DataFrame): Unit }
@@ -236,8 +238,11 @@ final case class BinaryFileSource(path: String,
   * an explicit catalog schema and leave this for ad-hoc exploration. */
 final case class ParquetSource(path: String, mergeSchema: Boolean = false)
     extends Source {
+  /** Inferred once per input and setting ([[graft.Tables.readParquet]]):
+    * a later read of unchanged files runs no Spark job. */
   override def read(spark: SparkSession): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(path)
+    graft.Tables.readParquet(spark, path,
+      Map("mergeSchema" -> mergeSchema.toString))
 }
 
 /** Small-files compaction — the operational fix for the classic 100 TB
@@ -254,8 +259,11 @@ final case class ParquetSource(path: String, mergeSchema: Boolean = false)
   * merges without a shuffle — input row order within merged groups is
   * preserved and no data crosses the network. */
 object Compactor {
+  /** A known `schema` reads the input without a schema-inference job. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+      targetBytes: Long = 128L * 1024 * 1024,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : (Int, Int) = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(inPath)
     val fs = p.getFileSystem(hconf)
@@ -263,7 +271,7 @@ object Compactor {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val totalBytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath).coalesce(nOut)
+    schema.fold(spark.read)(spark.read.schema).parquet(inPath).coalesce(nOut)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
     val outFiles = fs.listStatus(new org.apache.hadoop.fs.Path(outPath))
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -271,26 +279,51 @@ object Compactor {
   }
 }
 
-/** R12/R14: object-store upload/download. Local-FS stand-in: Spark reads and
-  * writes the store path in place (no copy step — the reference's explicit
-  * re-download, self-described as redundant at ingest_data.py:125, becomes a
-  * direct read). */
-final case class ObjectStoreSink(bucketPath: String) extends Sink {
-  override def write(df: DataFrame): Unit =
-    ParquetSink(bucketPath).write(df)
-}
-final case class ObjectStoreSource(bucketPath: String) extends Source {
-  override def read(spark: SparkSession): DataFrame =
-    spark.read.parquet(bucketPath)
+/** R12+R13: publish a parquet dataset that is already written, by copying
+  * its files with the Hadoop `FileSystem` API: one encode feeds every
+  * destination. That is the cloud path these local stand-ins represent: an
+  * object copy into the bucket (a `gs://` path through the GCS connector),
+  * then a warehouse load job from the published parquet (a BigQuery load
+  * reads the files; it does not re-encode the rows). Each copy lands under
+  * a `_`-prefixed name and is then renamed into place; readers skip `_` and
+  * `.` names, so none sees a half-copied file. */
+object Publish {
+  private def copyIn(spark: SparkSession, src: HPath, dest: HPath): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val destFs = dest.getFileSystem(conf)
+    val staged = new HPath(dest.getParent, s"_${dest.getName}.copying")
+    destFs.delete(staged, true)
+    FileUtil.copy(src.getFileSystem(conf), src, destFs, staged, false, true, conf)
+    destFs.delete(dest, true)
+    if (!destFs.rename(staged, dest))
+      throw new java.io.IOException(s"cannot publish $src as $dest")
+  }
+
+  /** R12: replace the dataset directory `dest` with a copy of `src`, as
+    * `SaveMode.Overwrite` does. */
+  def replace(spark: SparkSession, src: String, dest: String): Unit =
+    copyIn(spark, new HPath(src), new HPath(dest))
+
+  /** R13: add the data files of the dataset `src` to the table directory
+    * `dest`, as `SaveMode.Append` does. Each part file's name carries its
+    * write job's UUID, so the files of two appends never collide. */
+  def append(spark: SparkSession, src: String, dest: String): Unit = {
+    val dir = new HPath(src)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach(f => copyIn(spark, f, new HPath(dest, f.getName)))
+  }
 }
 
-/** R13: warehouse append sink (BigQuery stand-in: append-mode parquet
-  * "dataset.table" directory; swap for format("bigquery") when online). */
-final case class WarehouseSink(warehouseDir: String, dataset: String,
-    table: String) extends Sink {
-  override def write(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append)
-      .parquet(s"$warehouseDir/$dataset/$table")
+/** R14: object-store download. Local-FS stand-in: Spark reads the store
+  * path in place (the reference's explicit re-download, self-described as
+  * redundant at ingest_data.py:125, becomes a direct read). A known
+  * `schema` skips the footer read that inference runs as a Spark job. */
+final case class ObjectStoreSource(bucketPath: String,
+    schema: Option[org.apache.spark.sql.types.StructType] = None)
+    extends Source {
+  override def read(spark: SparkSession): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(bucketPath)
 }
 
 /** R1: driver-side HTTP fetch to a local file (Spark has no HTTP source;

@@ -63,13 +63,15 @@ object StreamingIngest {
           if (!new java.io.File(targetDir).exists) batch
           else graft.operators.RelationalOps.upsert(
             spark.read.schema(schema).parquet(targetDir), batch, key)
-        // materialize before overwriting the directory being read; both
-        // reads pass the schema they already know, so neither runs a
+        // materialize before overwriting the directory being read, then
+        // copy back compacted to 128 MB files: without that every batch
+        // adds a file to the target, and every later batch reads one more.
+        // Both reads pass the schema they already know, so neither runs a
         // schema-inference job
         val tmp = targetDir + ".tmp"
         merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-        spark.read.schema(merged.schema).parquet(tmp)
-          .write.mode(SaveMode.Overwrite).parquet(targetDir)
+        graft.sources.Compactor.compact(spark, tmp, targetDir,
+          schema = Some(merged.schema))
         ()
       }
       .option("checkpointLocation", checkpointDir)

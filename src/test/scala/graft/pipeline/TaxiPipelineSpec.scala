@@ -4,8 +4,12 @@ import java.io.{FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.{JobCount, StageTasks}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 import graft.sources._
@@ -29,6 +33,35 @@ class TaxiPipelineSpec extends SparkTestBase {
     jdbcUrl = s"jdbc:derby:$tmp/db_$color;create=true",
     bucketDir = s"$tmp/bucket_$color",
     warehouseDir = s"$tmp/wh_$color")
+
+  /** A yellow config under `name`, with its own directories and database. */
+  private def fresh(name: String, cap: Int = 100000) = config("yellow").copy(
+    outputDir = s"$tmp/${name}_out", bucketDir = s"$tmp/${name}_bucket",
+    warehouseDir = s"$tmp/${name}_wh",
+    jdbcUrl = s"jdbc:derby:$tmp/${name}_db;create=true", exportRowCap = cap)
+
+  /** A fresh config whose database holds the ingested yellow sample. */
+  private def ingested(name: String, cap: Int = 100000) = {
+    val c = fresh(name, cap)
+    TaxiPipeline.ingest(spark, res("yellow_sample.csv"), c)
+    c
+  }
+
+  /** The export's three artifacts: the local parquet, the bucket object and
+    * the warehouse table. */
+  private def artifacts(c: TaxiPipeline.Config): Seq[String] = Seq(
+    s"${c.outputDir}/${TaxiPipeline.tableName(c)}.parquet",
+    s"${c.bucketDir}/${TaxiPipeline.tableName(c)}.parquet",
+    s"${c.warehouseDir}/${TaxiPipeline.datasetName(c)}/taxi_data")
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def sortedRows(path: String): Seq[String] =
+    sortedRows(spark.read.parquet(path))
+
+  private def fileNames(dir: String): Set[String] =
+    new java.io.File(dir).listFiles().map(_.getName).toSet
 
   test("CsvSource reads gzipped CSV with header + inferred schema (R2)") {
     val gz = gzip(res("yellow_sample.csv"), s"$tmp/y.csv.gz")
@@ -110,6 +143,32 @@ class TaxiPipelineSpec extends SparkTestBase {
     // old files surface the new column as null, and vice versa
     assert(merged.filter(col("id") === 1L).head().getAs[Any]("c") == null)
     assert(merged.filter(col("id") === 2L).head().getAs[Any]("a") == null)
+  }
+
+  test("ParquetSource infers once per input and mergeSchema setting") {
+    import spark.implicits._
+    val dir = s"$tmp/evolve_memo"
+    def read(merge: Boolean) =
+      JobCount(spark.sparkContext)(ParquetSource(dir, merge).read(spark))
+    Seq((1L, "x")).toDF("id", "a").write.mode("overwrite").parquet(dir)
+    Seq((2L, 9.5)).toDF("id", "c").write.mode("append").parquet(dir)
+    for (merge <- Seq(false, true)) {
+      val (first, firstJobs) = read(merge)
+      assert(firstJobs >= 1, s"mergeSchema=$merge: the first read should infer")
+      val (second, jobs) = read(merge)
+      assert(jobs == 0, s"mergeSchema=$merge: unchanged files ran $jobs jobs")
+      assert(second.schema == first.schema)
+      assert(sortedRows(second) == sortedRows(first))
+    }
+    assert(read(true)._1.columns.sorted.toSeq == Seq("a", "c", "id"))
+    // a file with a new column changes the input: both settings infer again
+    Seq((3L, true)).toDF("id", "d").write.mode("append").parquet(dir)
+    for (merge <- Seq(false, true)) {
+      val (after, jobs) = read(merge)
+      assert(jobs >= 1, s"mergeSchema=$merge: a changed input was not inferred")
+      assert(after.count() == 3)
+      if (merge) assert(after.columns.sorted.toSeq == Seq("a", "c", "d", "id"))
+    }
   }
 
   test("JsonSink/JsonSource roundtrip: gzip JSON lines, schema-pinned re-read") {
@@ -245,6 +304,81 @@ class TaxiPipelineSpec extends SparkTestBase {
     val back = TaxiPipeline.run(spark, url, c)
     assert(back.count() == 6) // 8 - 2 zeros
     assert(back.schema("lpep_pickup_datetime").dataType == StringType)
+  }
+
+  test("ingest's quality counts take one aggregate query") {
+    val aggregates = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.exists(_.isInstanceOf[Aggregate]))
+          aggregates.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def ingest(csv: String, name: String): (Long, Long, Long) = {
+      aggregates.set(0)
+      spark.listenerManager.register(listener)
+      try JobCount(spark.sparkContext)(
+        TaxiPipeline.ingest(spark, csv, fresh(name)))._1
+      finally spark.listenerManager.unregister(listener)
+    }
+    assert(ingest(res("yellow_sample.csv"), "agg_yellow") == ((10L, 3L, 0L)))
+    assert(aggregates.get == 1, s"${aggregates.get} aggregate queries")
+    assert(ingest(res("green_sample.csv"), "agg_green") == ((8L, 2L, 0L)))
+    assert(aggregates.get == 1)
+    val plain = Files.writeString(Paths.get(s"$tmp/no_passengers.csv"),
+      "VendorID,fare_amount\n1,5.0\n2,7.5\n")
+    assert(ingest(plain.toString, "agg_plain") == ((2L, 0L, 0L)))
+    assert(aggregates.get == 1)
+  }
+
+  test("exportToCloud runs one JDBC scan and one parquet write, and no " +
+      "schema-inference job") {
+    val c = ingested("export_jobs")
+    val (back, jobs, stages) =
+      StageTasks(spark.sparkContext)(TaxiPipeline.exportToCloud(spark, c))
+    // the capped scan feeds the global limit through a one-partition
+    // shuffle, so the scan and the write are a job each
+    assert(jobs == 2, s"$jobs jobs: ${stages.mkString(", ")}")
+    val scans = stages.filter(_.recordsRead > 0)
+    assert(scans.size == 1 && scans.head.recordsRead == 7, stages.mkString(", "))
+    assert(stages.count(_.bytesWritten > 0) == 1, stages.mkString(", "))
+    // reading the result back plans with the written schema, still no job
+    val (schema, readJobs) = JobCount(spark.sparkContext)(back.schema)
+    assert(readJobs == 0 && schema.fieldNames.contains("tpep_pickup_datetime"))
+    assert(back.count() == 7)
+  }
+
+  test("the local parquet, the bucket and the warehouse hold identical rows") {
+    for (cap <- Seq(100000, 3)) {
+      val c = ingested(s"same_$cap", cap)
+      val back = TaxiPipeline.exportToCloud(spark, c)
+      val Seq(local, bucket, warehouse) = artifacts(c).map(sortedRows)
+      assert(local.size == math.min(cap, 7))
+      assert(bucket == local, s"cap $cap: the bucket differs")
+      assert(warehouse == local, s"cap $cap: the warehouse differs")
+      assert(sortedRows(back) == local)
+    }
+  }
+
+  test("a second export doubles the warehouse rows and replaces the bucket") {
+    val c = ingested("export_twice")
+    val Seq(localDir, bucketDir, warehouseDir) = artifacts(c)
+    TaxiPipeline.exportToCloud(spark, c)
+    val firstParts = fileNames(bucketDir).filter(_.startsWith("part-"))
+    TaxiPipeline.exportToCloud(spark, c)
+    val Seq(local, bucket, warehouse) = artifacts(c).map(sortedRows)
+    assert(local.size == 7)
+    assert(bucket == local)
+    assert(warehouse == (local ++ local).sorted)
+    val parts = fileNames(localDir).filter(_.startsWith("part-"))
+    assert(fileNames(bucketDir).filter(_.startsWith("part-")) == parts)
+    assert(parts.intersect(firstParts).isEmpty, "the bucket kept old parts")
+    assert(fileNames(warehouseDir).filter(_.startsWith("part-")) ==
+      parts ++ firstParts)
+    // no staged copy is left behind
+    for (dir <- Seq(c.bucketDir, bucketDir, warehouseDir))
+      assert(fileNames(dir).forall(n => !n.startsWith("_") || n == "_SUCCESS"),
+        fileNames(dir))
   }
 
   test("exportRowCap limits the export like the reference's first chunk (R10)") {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 class EventStreamSpec extends StreamGateChecks {
 
   test("streaming hourly counts equal the batch run (micro-batch replay, R3)")(
@@ -26,14 +24,15 @@ class EventStreamSpec extends StreamGateChecks {
     gate("anomaly_flags_stream_static"))
 
   test("probe: empty stream directory yields zero windows, no crash") {
-    val empty = Files.createTempDirectory("graft-empty").toString
-    val stream = spark.readStream.schema(fixture.evSchema).parquet(empty)
-    val q = EventStreamOps.hourlyWindowedCounts(stream)
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("empty_windows").start()
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("empty_windows").count() == 0)
+    withTempDir("graft-empty") { empty =>
+      val stream = spark.readStream.schema(fixture.evSchema).parquet(empty.toString)
+      val q = EventStreamOps.hourlyWindowedCounts(stream)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("empty_windows").start()
+      q.processAllAvailable()
+      q.stop()
+      assert(spark.table("empty_windows").count() == 0)
+    }
   }
 
   test("stateful keep-anchored debounce: anchors persist, output is a maximal gap-respecting subset")(

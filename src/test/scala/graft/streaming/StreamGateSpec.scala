@@ -4,22 +4,45 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.BeforeAndAfterAll
+
 import graft.{SparkTestBase, StreamGate}
 
 /** A suite that runs [[StreamGate]]'s parity checks: `gate(name)` runs
   * the named check on this suite's session and fixture, with no catch-all,
-  * and fails with the check's note unless every assertion holds. */
-trait StreamGateChecks extends SparkTestBase {
-  protected lazy val fixture: StreamGate.Fixture =
-    StreamGate.Fixture.stage(spark, sf)
+  * and fails with the check's note unless every assertion holds and the
+  * check left none of its scratch directories behind. The fixture's
+  * staging directory is deleted when the suite ends. */
+trait StreamGateChecks extends SparkTestBase with BeforeAndAfterAll {
+  private var staged: Option[StreamGate.Fixture] = None
+
+  protected def fixture: StreamGate.Fixture = staged.getOrElse {
+    val f = StreamGate.Fixture.stage(spark, sf)
+    staged = Some(f)
+    f
+  }
+
+  override def afterAll(): Unit =
+    try staged.foreach(_.close()) finally super.afterAll()
 
   protected def gate(name: String): Unit = {
     val check = StreamGate.checks.toMap
       .getOrElse(name, fail(s"StreamGate has no check named $name"))
-    val c = check(fixture)
+    val f = fixture
+    val before = StreamGateSpec.scratchDirs()
+    val c = check(f)
     assert(c.ok, s"$name: ${c.note} (stream=${c.streamRows}, " +
       s"batch=${c.batchRows})")
+    val left = StreamGateSpec.scratchDirs() -- before
+    assert(left.isEmpty, s"$name left ${left.mkString(", ")} behind")
   }
+}
+
+object StreamGateSpec {
+  /** The names of StreamGate's scratch directories in the temp directory. */
+  def scratchDirs(): Set[String] =
+    Files.list(Paths.get(System.getProperty("java.io.tmpdir"))).iterator.asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft-gate")).toSet
 }
 
 class StreamGateSpec extends SparkTestBase {
@@ -36,5 +59,18 @@ class StreamGateSpec extends SparkTestBase {
     assert(names.distinct == names, "duplicate check names")
     assert(run.distinct == run, "a check run by two tests")
     assert(run.toSet == names.toSet)
+  }
+
+  test("land and a staged fixture leave no scratch directory behind") {
+    val before = StreamGateSpec.scratchDirs()
+    val fixture = StreamGate.Fixture.stage(spark, sf)
+    assert(StreamGateSpec.scratchDirs().size == before.size + 1)
+    withTempDir("graft-land-spec") { in =>
+      StreamGate.land(fixture.docs.limit(5), in, "001.parquet")
+      assert(spark.read.parquet(in.resolve("001.parquet").toString).count() == 5)
+      assert(StreamGateSpec.scratchDirs().size == before.size + 1)
+    }
+    fixture.close()
+    assert(StreamGateSpec.scratchDirs() == before)
   }
 }

@@ -11,17 +11,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * runs — matched by a fresh job group, which Spark hands on to the
   * broadcast and AQE stage threads — once the listener bus has delivered
   * every event: their number, and their stages, each with the number of
-  * tasks that ran for it and their summed executor run time. Stages a job
-  * skipped (their shuffle output was reused) ran no task and are absent.
+  * tasks that ran for it and their summed executor run time, input records
+  * read and output bytes written. Stages a job skipped (their shuffle
+  * output was reused) ran no task and are absent.
   * The bus is Spark-internal, hence this package. */
 object StageTasks {
-  final case class Stage(id: Int, name: String, tasks: Int, runMs: Long)
+  final case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
+      recordsRead: Long, bytesWritten: Long)
+
+  private final case class Totals(tasks: Int, runMs: Long, recordsRead: Long,
+      bytesWritten: Long) {
+    def +(o: Totals): Totals = Totals(tasks + o.tasks, runMs + o.runMs,
+      recordsRead + o.recordsRead, bytesWritten + o.bytesWritten)
+  }
 
   def apply[T](sc: SparkContext)(body: => T): (T, Int, Seq[Stage]) = {
     val group = s"stage-tasks-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val names = new ConcurrentHashMap[Int, String]()
-    val tasks = new ConcurrentHashMap[Int, (Int, Long)]()
+    val tasks = new ConcurrentHashMap[Int, Totals]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties)
@@ -30,9 +38,10 @@ object StageTasks {
           e.stageInfos.foreach(s => names.put(s.stageId, s.name))
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val ms = Option(e.taskMetrics).map(_.executorRunTime).getOrElse(0L)
-        tasks.merge(e.stageId, (1, ms),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
+        val t = Option(e.taskMetrics).fold(Totals(1, 0L, 0L, 0L))(m =>
+          Totals(1, m.executorRunTime, m.inputMetrics.recordsRead,
+            m.outputMetrics.bytesWritten))
+        tasks.merge(e.stageId, t, _ + _)
       }
     }
     sc.addSparkListener(listener)
@@ -41,7 +50,8 @@ object StageTasks {
       val out = body
       sc.listenerBus.waitUntilEmpty()
       val stages = names.asScala.toSeq.flatMap { case (id, name) =>
-        Option(tasks.get(id)).map { case (n, ms) => Stage(id, name, n, ms) }
+        Option(tasks.get(id)).map(t =>
+          Stage(id, name, t.tasks, t.runMs, t.recordsRead, t.bytesWritten))
       }.sortBy(_.id)
       (out, jobs.get, stages)
     } finally {
