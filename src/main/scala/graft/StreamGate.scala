@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.util.DynamicVariable
-
 import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -50,8 +48,7 @@ object StreamGate {
   object Fixture {
     def stage(spark: SparkSession, sfDir: String): Fixture = {
       val events = Tables.events(spark, sfDir)
-      val staged =
-        Files.createTempDirectory("graft-gate").resolve("events").toString
+      val staged = tempDir("graft-gate").resolve("events").toString
       events.write.parquet(staged)
       Fixture(spark, sfDir, staged, spark.read.parquet(staged).schema,
         events, Tables.documents(spark, sfDir))
@@ -61,7 +58,7 @@ object StreamGate {
   /** Land `df` in `dir` as ONE parquet file named `name`; the name fixes
     * its place in a file stream's intake order (oldest first). */
   def land(df: DataFrame, dir: Path, name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft-gate-land")
+    val tmp = tempDir("graft-gate-land")
     try {
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -72,6 +69,18 @@ object StreamGate {
 
   private def delete(dir: Path): Unit = FileUtil.fullyDelete(dir.toFile)
 
+  /** Every scratch directory StreamGate has made in this JVM, newest
+    * first: each is deleted by its owner (the check, [[land]] or
+    * [[Fixture.close]]), and the specs check that against this list rather
+    * than by listing the shared temp directory. */
+  @volatile private[graft] var created: List[Path] = Nil
+
+  private def tempDir(prefix: String): Path = synchronized {
+    val dir = Files.createTempDirectory(prefix)
+    created = dir :: created
+    dir
+  }
+
   /** A parquet file stream that takes one file per micro-batch: the
     * reference's chunk loop. */
   def fileStream(spark: SparkSession, dir: String,
@@ -79,20 +88,10 @@ object StreamGate {
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
-  /** The scratch directories of the running check, deleted when it ends
-    * (see [[check]]). */
-  private val scratch = new DynamicVariable[List[Path]](Nil)
-
-  private def scratchDir(prefix: String): Path = {
-    val dir = Files.createTempDirectory(prefix)
-    scratch.value = dir :: scratch.value
-    dir
-  }
-
   /** A check's scratch space: an empty input directory, and the paths of
     * an output directory and a checkpoint. */
   private def dirs(prefix: String): (Path, String, String) = {
-    val base = scratchDir(prefix)
+    val base = tempDir(prefix)
     (Files.createDirectories(base.resolve("in")),
       base.resolve("out").toString, base.resolve("cp").toString)
   }
@@ -156,9 +155,11 @@ object StreamGate {
 
   private def check(name: String)(body: Fixture => Check)
       : (String, Fixture => Check) =
-    name -> (f => scratch.withValue(Nil) {
-      try body(f) finally scratch.value.foreach(delete)
-    })
+    name -> { f =>
+      // the check's scratch directories are the ones made while it runs
+      val before = created.size
+      try body(f) finally created.dropRight(before).foreach(delete)
+    }
 
   /** Every parity check, in run order, under its STREAMGATE.json name. */
   val checks: Seq[(String, Fixture => Check)] = Seq(
@@ -496,7 +497,7 @@ object StreamGate {
       val verdicts = byId(f.spark.read.parquet(out))
       // batch-2 verdicts == a DIRECT probe of a batch-1-only index:
       // streamed and batch shapes share one kernel and one index
-      val idx1 = scratchDir("graft-gate-bandref").toString
+      val idx1 = tempDir("graft-gate-bandref").toString
       DedupOps.bandIndexAppend(b1, idx1)
       val expect = byId(DedupOps.bandIndexProbe(f.spark, idx1, b2))
       val b2Ids = b2.collect().map(_.getLong(0)).toSet

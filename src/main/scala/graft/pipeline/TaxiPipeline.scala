@@ -72,7 +72,11 @@ object TaxiPipeline {
     else df
 
   /** R2-R8: ingest — scan CSV, quality-count, filter, cast, append to the
-    * relational store. Returns (rowsBefore, zeroBefore, zeroAfter). */
+    * relational store. Returns (rowsBefore, zeroBefore, zeroAfter).
+    * zeroAfter counts the zeros among the rows R4's own keep predicate
+    * passes, so it is 0 by construction: it restates the reference's
+    * after-check, it does not test the filter (the spec counts the zeros
+    * in the stored table for that). */
   def ingest(spark: SparkSession, csvPath: String, c: Config): (Long, Long, Long) = {
     // cache the scan: schema inference + the quality counts + two writes
     // would otherwise re-read the file ~6×. A single month file fits; a
@@ -115,7 +119,7 @@ object TaxiPipeline {
     Publish.replace(spark, localParquet, bucketPath)
     Publish.append(spark, localParquet,
       s"${c.warehouseDir}/${datasetName(c)}/taxi_data")
-    ObjectStoreSource(bucketPath, Some(fromDb.schema)).read(spark)
+    ObjectStoreSource(bucketPath, fromDb.schema).read(spark)
   }
 
   /** R17: the whole flow as plain function composition. */

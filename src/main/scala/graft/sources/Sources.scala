@@ -317,13 +317,13 @@ object Publish {
 
 /** R14: object-store download. Local-FS stand-in: Spark reads the store
   * path in place (the reference's explicit re-download, self-described as
-  * redundant at ingest_data.py:125, becomes a direct read). A known
-  * `schema` skips the footer read that inference runs as a Spark job. */
+  * redundant at ingest_data.py:125, becomes a direct read). The object's
+  * `schema` is known to its writer, so the read runs no footer-inference
+  * job. */
 final case class ObjectStoreSource(bucketPath: String,
-    schema: Option[org.apache.spark.sql.types.StructType] = None)
-    extends Source {
+    schema: org.apache.spark.sql.types.StructType) extends Source {
   override def read(spark: SparkSession): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(bucketPath)
+    spark.read.schema(schema).parquet(bucketPath)
 }
 
 /** R1: driver-side HTTP fetch to a local file (Spark has no HTTP source;

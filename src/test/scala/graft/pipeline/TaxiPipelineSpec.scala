@@ -331,6 +331,22 @@ class TaxiPipelineSpec extends SparkTestBase {
     assert(aggregates.get == 1)
   }
 
+  test("ingest stores no zero-passenger row, and keeps the null ones (R4-R6)") {
+    // ingest's zeroAfter is 0 by construction (it counts zeros among the
+    // rows the filter keeps); this checks the filter on what was stored
+    for ((csv, name, kept) <- Seq(("yellow_sample.csv", "r4_yellow", 7L),
+        ("green_sample.csv", "r4_green", 6L))) {
+      val c = fresh(name)
+      TaxiPipeline.ingest(spark, res(csv), c)
+      val db = JdbcSource(c.jdbcUrl, TaxiPipeline.tableName(c)).read(spark)
+      assert(db.count() == kept, csv)
+      assert(TaxiPipeline.zeroPassengerCount(db) == 0, csv)
+      assert(db.filter(col("passenger_count").isNull).count() ==
+        CsvSource(res(csv)).read(spark)
+          .filter(col("passenger_count").isNull).count(), csv)
+    }
+  }
+
   test("exportToCloud runs one JDBC scan and one parquet write, and no " +
       "schema-inference job") {
     val c = ingested("export_jobs")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -29,20 +29,23 @@ trait StreamGateChecks extends SparkTestBase with BeforeAndAfterAll {
     val check = StreamGate.checks.toMap
       .getOrElse(name, fail(s"StreamGate has no check named $name"))
     val f = fixture
-    val before = StreamGateSpec.scratchDirs()
-    val c = check(f)
+    val (c, made) = StreamGateSpec.madeDuring(check(f))
     assert(c.ok, s"$name: ${c.note} (stream=${c.streamRows}, " +
       s"batch=${c.batchRows})")
-    val left = StreamGateSpec.scratchDirs() -- before
+    val left = made.filter(Files.exists(_))
     assert(left.isEmpty, s"$name left ${left.mkString(", ")} behind")
   }
 }
 
 object StreamGateSpec {
-  /** The names of StreamGate's scratch directories in the temp directory. */
-  def scratchDirs(): Set[String] =
-    Files.list(Paths.get(System.getProperty("java.io.tmpdir"))).iterator.asScala
-      .map(_.getFileName.toString).filter(_.startsWith("graft-gate")).toSet
+  /** `body`'s value and the scratch directories StreamGate made while it
+    * ran (from StreamGate's own record, so other processes using the temp
+    * directory do not count). */
+  def madeDuring[T](body: => T): (T, List[Path]) = {
+    val before = StreamGate.created.size
+    val v = body
+    (v, StreamGate.created.take(StreamGate.created.size - before))
+  }
 }
 
 class StreamGateSpec extends SparkTestBase {
@@ -62,15 +65,16 @@ class StreamGateSpec extends SparkTestBase {
   }
 
   test("land and a staged fixture leave no scratch directory behind") {
-    val before = StreamGateSpec.scratchDirs()
-    val fixture = StreamGate.Fixture.stage(spark, sf)
-    assert(StreamGateSpec.scratchDirs().size == before.size + 1)
+    val (fixture, Seq(staging)) =
+      StreamGateSpec.madeDuring(StreamGate.Fixture.stage(spark, sf))
+    assert(Files.isDirectory(staging))
     withTempDir("graft-land-spec") { in =>
-      StreamGate.land(fixture.docs.limit(5), in, "001.parquet")
+      val (_, Seq(landTmp)) = StreamGateSpec.madeDuring(
+        StreamGate.land(fixture.docs.limit(5), in, "001.parquet"))
       assert(spark.read.parquet(in.resolve("001.parquet").toString).count() == 5)
-      assert(StreamGateSpec.scratchDirs().size == before.size + 1)
+      assert(!Files.exists(landTmp))
     }
     fixture.close()
-    assert(StreamGateSpec.scratchDirs() == before)
+    assert(!Files.exists(staging))
   }
 }

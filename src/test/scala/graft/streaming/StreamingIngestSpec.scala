@@ -69,6 +69,8 @@ class StreamingIngestSpec extends SparkTestBase {
           .count(_.getName.endsWith(".parquet"))
         assert(files == 1, s"the target holds $files files after batch ${i + 1}")
         val got = rows(spark.read.parquet(target))
+        // one row per key: duplicates would collapse in the map above
+        assert(spark.read.parquet(target).count() == got.size, s"batch ${i + 1}")
         // equivalence with the batch upsert operator replayed on the same inputs
         assert(got == rows(batches.take(i + 1)
           .reduceLeft(RelationalOps.upsert(_, _, "k"))), s"batch ${i + 1}")
