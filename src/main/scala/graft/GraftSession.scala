@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Session factory + SQL surface for the graft engine.
   *
@@ -55,6 +55,4 @@ object GraftSession {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => Tables(spark, dir, t).createOrReplaceTempView(t))
-
-  def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
 }

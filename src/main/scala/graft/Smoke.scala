@@ -10,7 +10,7 @@ object Smoke {
     println("ENTRY ROWS=" + df.count())
     df.show(10, false)
     GraftSession.openTables(spark, "/root/testdata/sf0.001")
-    println("SQL ROWS=" + GraftSession.sql(spark,
+    println("SQL ROWS=" + spark.sql(
       "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey")
       .collect().head.getLong(0))
     spark.stop()

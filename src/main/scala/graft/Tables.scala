@@ -29,9 +29,7 @@ import org.apache.spark.sql.types.StructType
   *  - the input's identity: the qualified path and, for each file under
   *    it, its path, length and modification time;
   *  - the values the session has set under `spark.sql.parquet.*` and
-  *    `spark.sql.legacy.parquet.*` (`nanosAsLong`, `inferTimestampNTZ`, …);
-  *  - the read's own options (`mergeSchema` for
-  *    [[graft.sources.ParquetSource]]).
+  *    `spark.sql.legacy.parquet.*` (`nanosAsLong`, `inferTimestampNTZ`, …).
   *
   * A rewritten input or a changed read setting is therefore a miss and is
   * inferred again. That is why the memo is not a
@@ -44,8 +42,7 @@ import org.apache.spark.sql.types.StructType
   * so it fails as `spark.read.parquet` does.
   */
 object Tables {
-  private type InputKey =
-    (String, Seq[(String, Long, Long)], Seq[(String, String)], Seq[(String, String)])
+  private type InputKey = (String, Seq[(String, Long, Long)], Seq[(String, String)])
 
   private val schemas =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[InputKey, StructType]]()
@@ -55,10 +52,9 @@ object Tables {
       schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
     }
 
-  /** The input's identity, the session's parquet read settings and the
-    * read's own options, or None when the path does not exist. */
-  private def inputKey(spark: SparkSession, path: String,
-      options: Map[String, String]): Option[InputKey] = {
+  /** The input's identity and the session's parquet read settings, or None
+    * when the path does not exist. */
+  private def inputKey(spark: SparkSession, path: String): Option[InputKey] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -71,29 +67,25 @@ object Tables {
       val settings = spark.conf.getAll.toSeq.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
       }.sorted
-      Some((qualified.toString, listing, settings, options.toSeq.sorted))
+      Some((qualified.toString, listing, settings))
     }
   }
 
-  /** `spark.read.options(options).parquet(path)`, with the schema inferred
-    * once per input (see the object doc). The options are part of the key:
-    * `mergeSchema` changes what inference returns. */
-  def readParquet(spark: SparkSession, path: String,
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.options(options)
-    inputKey(spark, path, options) match {
-      case None => reader.parquet(path)
+  /** `spark.read.parquet(path)`, with the schema inferred once per input
+    * (see the object doc). */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    inputKey(spark, path) match {
+      case None => spark.read.parquet(path)
       case Some(key) =>
         val known = memo(spark)
         Option(known.get(key)) match {
-          case Some(schema) => reader.schema(schema).parquet(path)
+          case Some(schema) => spark.read.schema(schema).parquet(path)
           case None =>
-            val df = reader.parquet(path)
+            val df = spark.read.parquet(path)
             known.putIfAbsent(key, df.schema)
             df
         }
     }
-  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = readParquet(spark, s"$dir/$name.parquet")

@@ -250,11 +250,6 @@ object DedupOps {
     sharedCapped.getOrBuild((spark, dir, dfCap))(
       cappedSurvivors(Tables.documents(spark, dir), dfCap))
 
-  /** Drop the shared survivor cache — same lost-localCheckpoint retry
-    * contract as [[GraphOps.clearCache]]; [[SessionCache.clearAll]]
-    * covers both. */
-  def clearCache(): Unit = sharedCapped.clear()
-
   /** Pair candidates + set sizes from a (doc_id, shingle) survivor table:
     * one shuffle_hash self-join with map-side pair aggregation. */
   private def pairStats(surv: DataFrame): DataFrame = {

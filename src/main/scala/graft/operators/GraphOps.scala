@@ -100,12 +100,6 @@ object GraphOps {
       maxBasket: Int)(build: => DataFrame): DataFrame =
     shared.getOrBuild((spark, kind, dir, maxBasket))(Materialize(build))
 
-  /** Drop every cached entry (delegates to the registered
-    * [[SessionCache]]; [[SessionCache.clearAll]] covers this and every
-    * other operator cache in one call — see its scaladoc for the
-    * lost-localCheckpoint retry contract). */
-  def clearCache(): Unit = shared.clear()
-
   /** [[baskets]], materialized once per session/dir. */
   private[operators] def basketsShared(spark: SparkSession, dir: String,
       maxBasket: Int = 64): DataFrame =

@@ -311,7 +311,7 @@ object JoinOps {
     * two-column projection, collapsing to one row with NO join and NO
     * shuffle beyond the final 1-row partial-agg merge. At 100 TB this is
     * the query whose entire cost is decided by the scan: all three
-    * predicates reach parquet (`PushedFilters` in EXPLAIN.md), only
+    * predicates reach parquet (`PushedFilters` in its `PlansDump` plan), only
     * (l_extendedprice, l_discount, l_quantity, l_shipdate) are read, and
     * with date-partitioned or min/max-zoned layout (q_zorder) most files
     * never open at all. */

@@ -63,8 +63,6 @@ final class SessionCache[K, V <: AnyRef](family: String) {
       }
     }
   }
-
-  def clear(): Unit = map.clear()
 }
 
 object SessionCache {

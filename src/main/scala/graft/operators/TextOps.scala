@@ -844,9 +844,6 @@ object TextOps {
   private val trigramShared =
     new SessionCache[(SparkSession, String, Int), DataFrame]("text-trigrams")
 
-  /** Drop the cached classifier frames (see [[SessionCache]] contract). */
-  def clearCache(): Unit = trigramShared.clear()
-
   /** [[trigramPredDf]], materialized once per session/dir/topK — the
     * shared entry point for the three classifier-audit queries. */
   private[operators] def trigramPredShared(spark: SparkSession, dir: String,

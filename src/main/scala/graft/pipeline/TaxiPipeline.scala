@@ -102,24 +102,28 @@ object TaxiPipeline {
   /** R9-R14: export — read the stored table back once, capped at
     * `exportRowCap` rows (the reference's first-chunk-only export,
     * ingest_data.py:102), and write it once as gzip parquet under
-    * `outputDir`. The "upload" to the object store (R12) and the append to
-    * the warehouse (R13) copy that parquet's files ([[Publish]]): one
-    * database read and one encode feed every destination, as in the
-    * reference's `store_to_cloud` (ingest_data.py:88-126), so the three
-    * artifacts hold the same capped rows by construction. The stored object
-    * is read back with the schema just written (the reference's redundant
-    * re-download becomes a direct read that runs no schema-inference job).
-    * Returns the re-read DataFrame. */
+    * `outputDir`. The cap runs in the database (`FETCH FIRST n ROWS ONLY`,
+    * standard SQL that Derby and Postgres both take), so the scan feeds the
+    * write directly: a `limit` over the scan would add a one-partition
+    * shuffle and a second job. The "upload" to the object store (R12) and
+    * the append to the warehouse (R13) copy that parquet's files
+    * ([[Publish]]): one database read and one encode feed every
+    * destination, as in the reference's `store_to_cloud`
+    * (ingest_data.py:88-126), so the three artifacts hold the same capped
+    * rows by construction. R14: the stored object is read back in place
+    * with the schema just written (the reference's redundant re-download,
+    * ingest_data.py:125, becomes a direct read that runs no
+    * schema-inference job). Returns the re-read DataFrame. */
   def exportToCloud(spark: SparkSession, c: Config): DataFrame = {
-    val fromDb = JdbcSource(c.jdbcUrl, tableName(c)).read(spark)
-      .limit(c.exportRowCap)
+    val fromDb = JdbcSource(c.jdbcUrl, s"(SELECT * FROM ${tableName(c)} " +
+      s"FETCH FIRST ${c.exportRowCap} ROWS ONLY) capped").read(spark)
     val localParquet = s"${c.outputDir}/${tableName(c)}.parquet"
     ParquetSink(localParquet).write(fromDb)
     val bucketPath = s"${c.bucketDir}/${tableName(c)}.parquet"
     Publish.replace(spark, localParquet, bucketPath)
     Publish.append(spark, localParquet,
       s"${c.warehouseDir}/${datasetName(c)}/taxi_data")
-    ObjectStoreSource(bucketPath, fromDb.schema).read(spark)
+    spark.read.schema(fromDb.schema).parquet(bucketPath)
   }
 
   /** R17: the whole flow as plain function composition. */

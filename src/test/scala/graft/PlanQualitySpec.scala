@@ -493,7 +493,7 @@ class PlanQualitySpec extends SparkTestBase {
 
   test("sql surface: same query via spark.sql yields same result") {
     GraftSession.openTables(spark, sf)
-    val viaSql = GraftSession.sql(spark,
+    val viaSql = spark.sql(
       """SELECT l_returnflag, l_linestatus, round(SUM(l_quantity), 4) AS sum_qty
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin).collect()

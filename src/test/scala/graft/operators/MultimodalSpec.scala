@@ -19,23 +19,6 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
-  test("BinaryFileSource reads a payload tree with glob pruning and full bytes") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-bin")
-    Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3))
-    val sub = Files.createDirectories(dir.resolve("shard0"))
-    Files.write(sub.resolve("b.img"), Array[Byte](4, 5))
-    Files.write(dir.resolve("skip.txt"), Array[Byte](9))
-    val df = graft.sources.BinaryFileSource(dir.toString, Some("*.img")).read(spark)
-    val rows = df.select(col("path"), col("length"), col("content")).collect()
-    assert(rows.length == 2, rows.mkString(","))  // .txt pruned at listing
-    assert(rows.map(_.getLong(1)).sum == 5)
-    val byName = rows.map(r =>
-      r.getString(0).split('/').last -> r.getAs[Array[Byte]](2)).toMap
-    assert(byName("a.img").toSeq == Seq[Byte](1, 2, 3))
-    assert(byName("b.img").toSeq == Seq[Byte](4, 5))  // recursive lookup
-  }
-
   test("sampleFrames keeps every k-th fixed-size frame") {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") < 10)
     val frames = MultimodalOps.sampleFrames(docs, frameBytes = 16, everyK = 4)

@@ -113,39 +113,4 @@ class ScaleSpec extends SparkTestBase {
     got.filterNot { case (v, _) => expectRep.contains(v) }
       .foreach { case (v, (rep, n)) => assert(rep == v && n == 0L, s"vec $v") }
   }
-
-  test("ClusteredParquetSink: per-file zkey ranges are tight and disjoint") {
-    // write orders clustered on the morton key, then measure per-file
-    // key spans via input_file_name — the data-skipping property is that
-    // each file covers a small, non-overlapping slice of key space
-    val zkey = (0 until 8).map(i =>
-      shiftright(col("bx"), i).bitwiseAND(lit(1)) * lit(1 << (2 * i))
-        + shiftright(col("by"), i).bitwiseAND(lit(1)) * lit(1 << (2 * i + 1)))
-      .reduce(_ + _)
-    val keyed = Tables.orders(spark, sf).select(
-        least(floor(col("o_totalprice") / 2000), lit(255)).cast("int").as("bx"),
-        pmod(datediff(col("o_orderdate"), lit("1992-01-01").cast("date")),
-          lit(256)).cast("int").as("by"),
-        col("o_orderkey"))
-      .withColumn("zkey", zkey)
-    val tmp = Files.createTempDirectory("graft-cluster").toString + "/orders_z"
-    graft.sources.ClusteredParquetSink(tmp, "zkey", numFiles = 8).write(keyed)
-    val spans = spark.read.parquet(tmp)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("zkey")).as("lo"), max(col("zkey")).as("hi"),
-        count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(1), r.getInt(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(spans.length == 8, s"expected 8 files, got ${spans.length}")
-    // disjoint: each file's range ends before the next begins
-    spans.sliding(2).foreach {
-      case Array((_, hi1, _), (lo2, _, _)) => assert(hi1 <= lo2)
-      case _ =>
-    }
-    // tight: total covered span ~= key span, no file covers everything
-    val full = spans.last._2 - spans.head._1
-    spans.foreach { case (lo, hi, n) =>
-      assert(n > 0 && (hi - lo) < full, s"file covers the whole range: $lo..$hi")
-    }
-  }
 }
