@@ -33,8 +33,8 @@ object GraftSession {
     SparkSession.builder()
       .appName(appName)
       .master(master)
-      // custom planner strategies (TopKPerGroup) registered the
-      // deployment-grade way; see graft.plans.GraftExtensions
+      // the library's SQL functions (vector_dot, minhash_signature, ...);
+      // see graft.plans.GraftExtensions
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")

@@ -637,6 +637,10 @@ object SparkEntry {
   private def r4(x: String) =
     s"CAST(round(CAST($x AS DECIMAL(20,8)), 4) AS DOUBLE)"
 
+  /** Oracle form of a stable6 rounding barrier on a float value. */
+  private def r6(x: String) =
+    s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
+
   /** [[lloydCtes]] without the WITH keyword and with every CTE name
     * prefixed — composable next to another CTE family (the q_ivfpq oracle
     * places the IVF chain beside the PQ chain, whose names would
@@ -729,8 +733,6 @@ object SparkEntry {
     val dim = graft.operators.SimilarityOps.EmbeddingDim
     val rounds = dim - 1
     val iters = graft.operators.SimilarityOps.JacobiSweeps * rounds
-    def r6(x: String) =
-      s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
     val d1 = dim + 1
     "WITH RECURSIVE " +
       // exploded (vec_id, dim, value) view and the raw moment/mean pass
@@ -4870,18 +4872,17 @@ object SparkEntry {
     },
     // CDC chunking: md5-60 rolling boundary on token 2-grams, integer
     // prefix-sum chunk ids, md5-60 chunk hashes counted corpus-wide
-    "q_cdc_chunks" -> {
-      def h60(e: String) = s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
-      "WITH t AS (SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
+    "q_cdc_chunks" ->
+      ("WITH t AS (SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "p AS (SELECT doc_id, source, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos FROM t), " +
         "f AS (SELECT doc_id, source, pos, tok, CASE WHEN " +
         "lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL AND " +
-        h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
+        md5h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
         " % 16 = 0 THEN 1 ELSE 0 END AS boundary FROM p), " +
         "c AS (SELECT doc_id, source, pos, tok, " +
         "SUM(boundary) OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_id FROM f), " +
         "g AS (SELECT doc_id, source, chunk_id, COUNT(*) AS n_tokens, " +
-        h60("string_agg(tok, ' ' ORDER BY pos)") + " AS chunk_hash " +
+        md5h60("string_agg(tok, ' ' ORDER BY pos)") + " AS chunk_hash " +
         "FROM c GROUP BY doc_id, source, chunk_id), " +
         "h AS (SELECT chunk_hash, COUNT(*) AS n_occ FROM g GROUP BY chunk_hash) " +
         "SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
@@ -4889,8 +4890,7 @@ object SparkEntry {
         r4("AVG(n_tokens)") + " AS avg_chunk_tokens, " +
         r4("CAST(SUM(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)") +
         " AS dup_chunk_frac FROM g JOIN h USING (chunk_hash) " +
-        "GROUP BY source ORDER BY source"
-    },
+        "GROUP BY source ORDER BY source"),
     // centroid silhouette: the hash-proven unrolled-Lloyd chain, per-pair
     // squared distances with the proven list_sum accumulation pairing,
     // sorted-fold means
@@ -5060,18 +5060,17 @@ object SparkEntry {
     // CDC near-dup pairs: distinct (doc, chunk-hash) from the same
     // chunk CTEs as q_cdc_chunks, df-capped bucket self-join, exact
     // integer Jaccard up to one division; threshold on the ROUNDED value
-    "q_dedup_cdc" -> {
-      def h60(e: String) = s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
-      "WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
+    "q_dedup_cdc" ->
+      ("WITH t AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents), " +
         "p AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos FROM t), " +
         "f AS (SELECT doc_id, pos, tok, CASE WHEN " +
         "lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL AND " +
-        h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
+        md5h60("lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || tok") +
         " % 16 = 0 THEN 1 ELSE 0 END AS boundary FROM p), " +
         "c AS (SELECT doc_id, pos, tok, " +
         "SUM(boundary) OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_id FROM f), " +
         "g AS (SELECT doc_id, chunk_id, " +
-        h60("string_agg(tok, ' ' ORDER BY pos)") + " AS ch " +
+        md5h60("string_agg(tok, ' ' ORDER BY pos)") + " AS ch " +
         "FROM c GROUP BY doc_id, chunk_id), " +
         "dd AS MATERIALIZED (SELECT DISTINCT doc_id, ch FROM g), " +
         "capped AS (SELECT ch FROM dd GROUP BY ch HAVING COUNT(*) BETWEEN 2 AND 64), " +
@@ -5084,8 +5083,7 @@ object SparkEntry {
         "FROM pr JOIN nd na ON pr.doc_a = na.doc_id JOIN nd nb ON pr.doc_b = nb.doc_id) " +
         "SELECT doc_a, doc_b, CAST(n_shared AS BIGINT) AS n_shared, " +
         "CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b, jaccard " +
-        "FROM pj WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"
-    },
+        "FROM pj WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"),
     // rank-sum AUC with midrank ties on the compressed score domain;
     // every midrank is a half-integer so the rank sum is float-exact
     "q_auc" -> {
@@ -5703,9 +5701,8 @@ object SparkEntry {
         "FROM b GROUP BY stage ORDER BY stage"),
     // per-source z vs the corpus, p via the A&S 7.1.26 erfc polynomial
     // (identical Horner order), BH step-up via the backward-max window
-    "q_bh_fdr" -> {
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
-      "WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s, CAST(sum(n_chars) AS BIGINT) AS s_s FROM documents GROUP BY source), " +
+    "q_bh_fdr" ->
+      ("WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s, CAST(sum(n_chars) AS BIGINT) AS s_s FROM documents GROUP BY source), " +
         "g AS (SELECT CAST(count(*) AS BIGINT) AS n_g, CAST(sum(n_chars) AS BIGINT) AS s_g, " +
         "CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE) AS s2_g FROM documents), " +
         "z AS (SELECT source, n_s, (CAST(s_s AS DOUBLE) / n_s - CAST(s_g AS DOUBLE) / n_g) / " +
@@ -5722,8 +5719,7 @@ object SparkEntry {
         "SELECT source, n_s AS n_docs, " + r4("z") + " AS z, " +
         r6("p") + " AS p, CAST(p_rank AS INTEGER) AS p_rank, " +
         r6("bh_thresh") + " AS bh_thresh, CAST(rejected AS INTEGER) AS rejected " +
-        "FROM f ORDER BY p_rank"
-    },
+        "FROM f ORDER BY p_rank"),
     "q_lognormal_fit" -> {
       "WITH m AS (SELECT source, CAST(count(*) AS BIGINT) AS n, " +
         "avg(ln(CAST(n_chars AS DOUBLE))) AS mu, " +
@@ -5845,9 +5841,8 @@ object SparkEntry {
         r4("exp(sum_ln / kk) / mean_p") + " AS flatness " +
         "FROM ent CROSS JOIN dom"
     },
-    "q_pettitt" -> {
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
-      "WITH d AS (SELECT CAST(ts AS DATE) AS day, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
+    "q_pettitt" ->
+      ("WITH d AS (SELECT CAST(ts AS DATE) AS day, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "rk AS (SELECT day, y, rank() OVER (ORDER BY y) AS r_min, " +
         "count(*) OVER (PARTITION BY y) AS ties, count(*) OVER () AS n FROM d), " +
         "r2 AS (SELECT day, n, r_min + CAST(ties - 1 AS DOUBLE) / 2.0 AS r, " +
@@ -5856,8 +5851,7 @@ object SparkEntry {
         "u AS (SELECT day, n, 2.0 * cum_r - CAST(t AS DOUBLE) * (n + 1) AS u_t FROM c WHERE t < n) " +
         "SELECT CAST(n AS BIGINT) AS n_days, CAST(abs(u_t) AS BIGINT) AS k_stat, day AS change_day, " +
         r6("least(1.0, 2.0 * exp(-6.0 * u_t * u_t / (pow(CAST(n AS DOUBLE), 3.0) + CAST(n AS DOUBLE) * n)))") + " AS p_approx " +
-        "FROM u ORDER BY abs(u_t) DESC, day LIMIT 1"
-    },
+        "FROM u ORDER BY abs(u_t) DESC, day LIMIT 1"),
     "q_cross_corr" -> {
       "WITH d AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x, round(sum(value), 4) AS y FROM events GROUP BY 1), " +
         "idx AS (SELECT day, x, y, row_number() OVER (ORDER BY day) AS t FROM d), " +
@@ -5884,9 +5878,8 @@ object SparkEntry {
         " UNION ALL " + dirSql("y", "x", "revenue_to_volume") +
         ") ORDER BY direction"
     },
-    "q_wilcoxon_signed" -> {
-      def r6(x: String) = s"CAST(round(CAST($x AS DECIMAL(20,8)), 6) AS DOUBLE)"
-      "WITH d AS (SELECT CAST(ts AS DATE) AS day, " +
+    "q_wilcoxon_signed" ->
+      ("WITH d AS (SELECT CAST(ts AS DATE) AS day, " +
         "CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks, " +
         "CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views FROM events GROUP BY 1), " +
         "dd AS (SELECT clicks - views AS diff, abs(clicks - views) AS ad FROM d WHERE clicks - views <> 0), " +
@@ -5905,8 +5898,7 @@ object SparkEntry {
         "SELECT CAST(n AS BIGINT) AS n_pairs, " + r4("w_plus") + " AS w_plus, " +
         r4("CASE WHEN sig > 0 THEN z END") + " AS z, " +
         r6("CASE WHEN sig > 0 THEN ((((1.061405429 * t + -1.453152027) * t + 1.421413741) * t + -0.284496736) * t + 0.254829592) * t * exp(-(xx * xx)) END") + " AS p " +
-        "FROM tt"
-    },
+        "FROM tt"),
     "q_theil_index" -> {
       val ratio = "(CAST(x AS DOUBLE) / (s / nd))"
       s"WITH d AS ($domainDocsSql), " +

@@ -108,27 +108,9 @@ object DedupOps {
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id"))
 
-  /** Spread CPU-heavy per-row work across all cores when the input scan has
-    * fewer partitions than the cluster's parallelism (a small local file is
-    * one task). At real scale the parquet scan already yields enough
-    * partitions and this is a no-op — no forced shuffle of a large corpus.
-    * The "would the scan fill the cluster" probe is plan-only: the
-    * optimizer's size estimate (file bytes for a parquet scan) against
-    * maxPartitionBytes × parallelism — not `df.rdd.getNumPartitions`, which
-    * forces a full RDD conversion during planning. Unknown-size plans
-    * estimate huge and are conservatively left alone. */
-  private def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    if (bytes < BigInt(maxPart) * target) df.repartition(target) else df
-  }
-
   /** (doc_id, shingle) exploded view of distinct word-3-gram shingles. */
   private def shingleSet(docs: DataFrame): DataFrame =
-    spread(docs).select(col("doc_id"),
+    Spread(docs).select(col("doc_id"),
       explode(shingles(tokensLower(col("text")))).as("shingle"))
 
   /** N-gram Jaccard near-dup: candidate pairs share ≥1 word-3-gram shingle;
@@ -148,7 +130,7 @@ object DedupOps {
     // collision could only nudge `shared` — probability ~n²/2⁶⁵, far
     // below any realistic corpus's noise floor.
     val ex = Materialize(
-      spread(docs)
+      Spread(docs)
         .select(col("doc_id"),
           shingles(tokensLower(col("text"))).as("sh"))
         .select(col("doc_id"), size(col("sh")).as("n"),
@@ -220,7 +202,7 @@ object DedupOps {
     * capHeavyShingles automatically degrades to a shuffled anti-join. */
   private def cappedSurvivors(docs: DataFrame, dfCap: Int): DataFrame = {
     val ex = Materialize(
-      spread(docs)
+      Spread(docs)
         .select(col("doc_id"),
           explode(shingles(tokensLower(col("text")))).as("shingle")))
     // cap on the RAW shingle string (the oracle's HAVING key), THEN hash:
@@ -357,30 +339,13 @@ object DedupOps {
   def minhashSignatures(docs: DataFrame, numHashes: Int = 32): DataFrame =
     minhashSignaturesFromShingles(shingleSet(docs), numHashes)
 
-  /** Alternative MinHash via the custom TypedImperativeAggregate
-    * [[graft.functions.expressions.MinHashSignature]]: one aggregate buffer
-    * of primitive longs per doc instead of `numHashes` separate min
-    * columns — one pass, partial-aggregate friendly, no re-hashing per
-    * column. Same salted md5-60 family as [[minhashSignatures]] — all
-    * signature paths are interchangeable in one banding join. */
-  def minhashSignaturesAgg(docs: DataFrame, numHashes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    val sigCol = GraftColumnBridge.toColumn(
-      graft.functions.expressions.MinHashSignature(
-        GraftColumnBridge.toExpression(col("shingle")), numHashes)
-        .toAggregateExpression())
-    shingleSet(docs)
-      .groupBy(col("doc_id"))
-      .agg(sigCol.as("sig"))
-  }
-
   /** MinHash signatures as a pure narrow map: the scalar
     * [[graft.functions.expressions.MinHashArray]] over each doc's shingle
     * array — no explode (×|shingles| rows) and no aggregation shuffle;
     * the signature stage becomes a scan. Same hash family as
-    * [[minhashSignaturesAgg]], so outputs are interchangeable. */
+    * [[minhashSignatures]], so outputs are interchangeable. */
   def minhashSignaturesScalar(docs: DataFrame, numHashes: Int = 32): DataFrame =
-    spread(docs).select(col("doc_id"),
+    Spread(docs).select(col("doc_id"),
       graft.functions.TextFunctions.minhashArray(
         shingles(tokensLower(col("text"))), numHashes).as("sig"))
       // shingle-less docs sign as NULL; drop them so the row set matches
@@ -470,7 +435,7 @@ object DedupOps {
     * candidate side at runtime. */
   def minhashVerifiedPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val arr = Materialize(
-      spread(docs).select(col("doc_id"),
+      Spread(docs).select(col("doc_id"),
         shingles(tokensLower(col("text"))).as("sh")))
     val sigs = arr
       .select(col("doc_id"),
@@ -923,7 +888,7 @@ object DedupOps {
     * shingle join is too hot. */
   def shingleVerifiedPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val ex = Materialize(
-      spread(docs)
+      Spread(docs)
         .select(col("doc_id"),
           shingles(tokensLower(col("text"))).as("sh"))
         .select(col("doc_id"), size(col("sh")).as("n"),
@@ -1012,7 +977,7 @@ object DedupOps {
     * explode or the aggregation shuffle. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
     val bits = graft.functions.expressions.SimHashArray.Bits
-    val toks = spread(docs).select(col("doc_id"),
+    val toks = Spread(docs).select(col("doc_id"),
       explode(tokensLower(col("text"))).as("tok"))
       .withColumn("h", graft.functions.TextFunctions.md5Hash60(col("tok")))
     val votes = (0 until bits).map(j =>
@@ -1033,7 +998,7 @@ object DedupOps {
     * integer votes as [[simhashSignatures]], so outputs are bit-identical
     * (asserted in DedupSpec). */
   def simhashSignaturesScalar(docs: DataFrame): DataFrame =
-    spread(docs).select(col("doc_id"),
+    Spread(docs).select(col("doc_id"),
       graft.functions.TextFunctions
         .simhashArray(tokensLower(col("text"))).as("simhash"))
       // token-less docs sign as NULL; drop them so the row set matches the

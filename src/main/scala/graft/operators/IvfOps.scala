@@ -259,22 +259,18 @@ object IvfOps {
     val probes = probeCells(queries, centroids, nprobe)
       .withColumn("q_nrm", l2Norm(col("q_emb")))
 
-    // round 16: top-k per probe via the bounded-heap TopKPerGroup
-    // operator (O(n log k)) instead of a row_number window that fully
-    // sorts each probe's in-cell candidates (nprobe·|corpus|/k_cells
-    // rows at scale); identical rows under the same total order
-    // (cos_sim desc, cand_id asc — unique per probe), rank re-derived
-    // over the reduced ≤ |probes|·k frame (see bruteForceTopK).
+    // top-k per probe as one row_number window: a Partial
+    // WindowGroupLimit caps each partition at k rows per probe before the
+    // q_id exchange (see SimilarityOps.bruteForceTopK)
     val rankW = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("cand_id"))
-    val scored = probes.join(candidates, Seq("centroid_id"))
+    probes.join(candidates, Seq("centroid_id"))
       .filter(col("q_id") =!= col("cand_id"))
       .select(col("q_id"), col("cand_id"),
         round(cosine(dotProduct(col("q_emb"), col("c_emb")),
           col("q_nrm"), col("c_nrm")), 4).as("cos_sim"))
-    graft.plans.TopK.perGroup(scored, Seq("q_id"),
-        Seq(("cos_sim", false), ("cand_id", true)), k)
       .withColumn("rn", row_number().over(rankW))
+      .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("cand_id"), col("cos_sim"))
       .orderBy(col("q_id"), col("rn"))
   }

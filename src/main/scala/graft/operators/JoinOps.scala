@@ -102,17 +102,10 @@ object JoinOps {
       .orderBy(col("custkey"))
   }
 
-  /** Top-k per group through the custom [[graft.plans.TopKPerGroup]]
-    * physical operator (bounded heaps, no per-partition sort) — same
-    * result set as [[topK]] minus the rank column, verified against the
-    * same oracle shape. */
+  /** q_topk_custom: [[topK]] minus the rank column, ordered by
+    * (priority, orderkey). */
   def topKCustom(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.TopK.perGroup(
-      Tables.orders(spark, dir),
-      Seq("o_orderpriority"),
-      Seq(("o_totalprice", false), ("o_orderkey", true)), 5)
-      .select(col("o_orderpriority"), col("o_orderkey"),
-        round(col("o_totalprice"), 4).as("o_totalprice"))
+    topK(spark, dir).drop("rn")
       .orderBy(col("o_orderpriority"), col("o_orderkey"))
 
   /** Top-k per group (R10 generalized): top-5 orders by totalprice within

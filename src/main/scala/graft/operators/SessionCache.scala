@@ -91,9 +91,9 @@ object SessionCache {
     * understate true cold-session cost by the sum of the family builds.
     * Bench reads this ledger after the sweep and emits it as a separate
     * additions-only `build_sec` metric line, so a cold-session total can
-    * be reconstructed (total + Σ build_sec). Cleared by [[clearAll]]
-    * only via explicit [[clearBuildLog]] — retry harnesses that clear
-    * caches mid-run must KEEP the ledger or rebuilds double-count. */
+    * be reconstructed (total + Σ build_sec). Never cleared: [[clearAll]]
+    * drops the caches but keeps the ledger, so a retry harness that
+    * clears caches mid-run counts each rebuild once. */
   private val builds =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
@@ -116,6 +116,4 @@ object SessionCache {
     builds.forEach((k, v) => b += (k -> v))
     b.result()
   }
-
-  def clearBuildLog(): Unit = builds.clear()
 }

@@ -38,24 +38,20 @@ object SimilarityOps {
       col("embedding").as("q_emb"), l2Norm(col("embedding")).as("q_nrm"))
     val c = candidates.select(col("vec_id").as("cand_id"),
       col("embedding").as("c_emb"), l2Norm(col("embedding")).as("c_nrm"))
-    // round 16: top-k per probe via the bounded-heap TopKPerGroup
-    // operator (O(n log k) streaming pass, O(|probes|·k) memory) instead
-    // of a row_number window that fully SORTS every probe's |corpus|
-    // candidate rows (O(n log n) + full materialization — at 100 TB,
-    // corpus-sized sort-spill per probe). Identical rows under the same
-    // total order (cos_sim desc, cand_id asc — unique per probe); the
-    // rank column re-derives from a window over the REDUCED
-    // (≤ |probes|·k row) frame, never the full candidate set.
-    val scored = broadcast(q)
+    // top-k per probe: Catalyst plans `row_number() <= k` as a Partial
+    // WindowGroupLimit on each scan partition (k rows per probe survive)
+    // below the q_id exchange and a Final one above it, so only
+    // ≤ partitions·|probes|·k rows shuffle. The order (cos_sim desc,
+    // cand_id asc) is total per probe, so the rank is deterministic.
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_sim").desc, col("cand_id"))
+    broadcast(q)
       .join(c, col("q_id") =!= col("cand_id"))
       .select(col("q_id"), col("cand_id"),
         round(cosine(dotProduct(col("q_emb"), col("c_emb")),
           col("q_nrm"), col("c_nrm")), 4).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id"))
-    graft.plans.TopK.perGroup(scored, Seq("q_id"),
-        Seq(("cos_sim", false), ("cand_id", true)), k)
       .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("cand_id"), col("cos_sim"))
       .orderBy(col("q_id"), col("rn"))
   }

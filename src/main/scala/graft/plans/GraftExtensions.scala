@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 import graft.functions.expressions._
 
-/** `SparkSessionExtensions` hook registering the library's custom planner
-  * pieces and SQL functions. It is the only way [[GraftStrategies]] reaches
-  * the planner: [[TopK.perGroup]] builds the logical node and relies on it.
+/** `SparkSessionExtensions` hook registering the library's SQL functions.
+  * It adds no planner rules: every operator plans through Catalyst's own
+  * strategies.
   *
   * Wire it either way:
   *   - `GraftSession.builder(...)` applies it via `withExtensions`;
@@ -31,7 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => GraftStrategies)
     ext.injectFunction((FunctionIdentifier("vector_dot"),
       info("vector_dot", "vector_dot(a, b) - double-precision dot product of two float/double arrays"),
       (args: Seq[Expression]) => VectorDotProduct(args(0), args(1))))

@@ -12,14 +12,6 @@ object GraftColumnBridge {
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** Builds a DataFrame from a hand-constructed LogicalPlan (the analyzer
-  * resolves it) — needed to inject graft's custom logical operators. */
-object GraftPlanBridge {
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-}
-
 /** Catalyst's runtime errors, for driver-side mirrors of its expressions. */
 object GraftErrorBridge {
   def divideByZero(): ArithmeticException = errors.QueryExecutionErrors.divideByZeroError(null)

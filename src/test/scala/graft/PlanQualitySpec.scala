@@ -81,11 +81,46 @@ class PlanQualitySpec extends SparkTestBase {
   test("topK rank filter plans WindowGroupLimit (bounded per-group state)") {
     // Catalyst's InferWindowGroupLimit turns row_number()<=k into a
     // bounded per-group limit BEFORE the full window sort — each partition
-    // keeps k rows per group instead of sorting everything. This is the
-    // optimization our custom TopKPerGroup operator generalizes; the
-    // built-in path must keep planning it.
+    // keeps k rows per group instead of sorting everything. Every per-group
+    // top-k in the library rides this path.
     val p = plan(JoinOps.topK(spark, sf))
     assert(p.contains("WindowGroupLimit"), p)
+  }
+
+  test("per-group top-k: a Partial WindowGroupLimit below the group-key " +
+      "exchange, a Final one above it") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    def on(key: String, exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      exprs.exists { case a: Attribute => a.name == key; case _ => false }
+    for ((q, key) <- Seq("q_sim_topk" -> "q_id", "q_sim_ivf" -> "q_id",
+        "q_topk_custom" -> "o_orderpriority")) {
+      // the executed plan before AQE runs: exchanges are in place
+      val p = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      assert(!p.toString.contains("TopKPerGroup"), s"$q:\n$p")
+      val finals = p.collect {
+        case w: WindowGroupLimitExec
+            if w.mode == window.Final && on(key, w.partitionSpec) => w
+      }
+      assert(finals.size == 1, s"$q: one Final limit on $key\n$p")
+      val exchange = finals.head.collectFirst { case e: ShuffleExchangeExec => e }
+      assert(exchange.exists(_.outputPartitioning match {
+        case h: HashPartitioning => on(key, h.expressions)
+        case _ => false
+      }), s"$q: the Final limit's input shuffles on $key\n$p")
+      assert(exchange.get.child.exists {
+        case w: WindowGroupLimitExec =>
+          w.mode == window.Partial && on(key, w.partitionSpec)
+        case _ => false
+      }, s"$q: a Partial limit on $key runs before the exchange\n$p")
+    }
   }
 
   test("structFuncs arg-max plans one partial-aggregated MAX, no window") {

@@ -224,26 +224,28 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("property: KS and Mann-Whitney invariants on random two-source tables") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prop-stat").toString
-    val lens = sample(Gen.choose(1L, 60L), 240)
-    val rows = lens.zipWithIndex.map { case (n, i) =>
-      (i.toLong, if (i % 3 == 0) "a" else "b", n)
+    withTempDir("graft-prop-stat") { dir =>
+      val tmp = dir.toString
+      val lens = sample(Gen.choose(1L, 60L), 240)
+      val rows = lens.zipWithIndex.map { case (n, i) =>
+        (i.toLong, if (i % 3 == 0) "a" else "b", n)
+      }
+      rows.toDF("doc_id", "source", "n_chars")
+        .withColumn("text", lit("x")).withColumn("lang", lit("en"))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val ks = graft.operators.StatOps.ksTest(spark, tmp).collect()
+      assert(ks.length == 2)
+      // KS is symmetric in the two samples: a-vs-rest == b-vs-rest here
+      assert(ks(0).getDouble(2) == ks(1).getDouble(2))
+      assert(ks.forall(r => r.getDouble(2) >= 0 && r.getDouble(2) <= 1))
+      val mw = graft.operators.StatOps.mannWhitney(spark, tmp).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
+      val (na, ua, za) = mw("a"); val (nb, ub, zb) = mw("b")
+      // U_a + U_b = n_a * n_b exactly (midranks cancel)
+      assert(ua + ub == na.toDouble * nb, s"$ua + $ub != ${na * nb}")
+      // the z statistics are antisymmetric up to the 4-decimal rounding
+      assert(math.abs(za + zb) <= 0.0002, s"z not antisymmetric: $za $zb")
     }
-    rows.toDF("doc_id", "source", "n_chars")
-      .withColumn("text", lit("x")).withColumn("lang", lit("en"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val ks = graft.operators.StatOps.ksTest(spark, tmp).collect()
-    assert(ks.length == 2)
-    // KS is symmetric in the two samples: a-vs-rest == b-vs-rest here
-    assert(ks(0).getDouble(2) == ks(1).getDouble(2))
-    assert(ks.forall(r => r.getDouble(2) >= 0 && r.getDouble(2) <= 1))
-    val mw = graft.operators.StatOps.mannWhitney(spark, tmp).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val (na, ua, za) = mw("a"); val (nb, ub, zb) = mw("b")
-    // U_a + U_b = n_a * n_b exactly (midranks cancel)
-    assert(ua + ub == na.toDouble * nb, s"$ua + $ub != ${na * nb}")
-    // the z statistics are antisymmetric up to the 4-decimal rounding
-    assert(math.abs(za + zb) <= 0.0002, s"z not antisymmetric: $za $zb")
   }
 
   test("property: sorted_intersect is commutative, idempotent, bounded") {

@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.Path
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.{Args, Status}
 
 /** [[ScaleData]] over the test directory: row counts, key uniqueness,
   * foreign keys, copy 0 against the source, the corpus perturbation, and
@@ -11,8 +12,13 @@ import org.apache.spark.sql.functions._
 class ScaleDataSpec extends SparkTestBase {
   private val Copies = 3
 
+  /** Made around the whole run and deleted when its last test ends. */
+  private var root: Path = _
+  override def run(testName: Option[String], args: Args): Status =
+    withTempDir("graft-scale-data") { dir => root = dir; super.run(testName, args) }
+
   private lazy val out: String = {
-    val dir = Files.createTempDirectory("graft-scale-data").resolve("sf").toString
+    val dir = root.resolve("sf").toString
     ScaleData.write(spark, sf, dir, Copies)
     dir
   }

@@ -15,12 +15,13 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   * first read of each is a miss whatever earlier suites in this JVM read. */
 class TablesSpec extends SparkTestBase {
 
-  private def freshDir(tables: String*): String = {
-    val dir = Files.createTempDirectory("graft-tables-spec")
-    tables.foreach(t => Files.copy(Path.of(s"$sf/$t.parquet"),
-      dir.resolve(s"$t.parquet")))
-    dir.toString
-  }
+  /** Run `body` on a temp directory holding copies of `tables`. */
+  private def withFreshDir[T](tables: String*)(body: String => T): T =
+    withTempDir("graft-tables-spec") { dir =>
+      tables.foreach(t => Files.copy(Path.of(s"$sf/$t.parquet"),
+        dir.resolve(s"$t.parquet")))
+      body(dir.toString)
+    }
 
   private def dataSchema(df: DataFrame): StructType =
     df.queryExecution.analyzed.collectFirst {
@@ -34,61 +35,65 @@ class TablesSpec extends SparkTestBase {
 
   test("a second read of an unchanged input runs no Spark job and plans as " +
       "the first") {
-    val dir = freshDir("lineitem", "events")
-    for (t <- Seq("lineitem", "events")) {
-      val (first, firstJobs) = JobCount(spark.sparkContext)(Tables(spark, dir, t))
-      assert(firstJobs >= 1, s"$t: the first read should infer its schema")
-      val (second, jobs) = JobCount(spark.sparkContext)(Tables(spark, dir, t))
-      assert(jobs == 0, s"$t: a known input ran $jobs jobs")
-      assert(second.schema == first.schema)
-      assert(dataSchema(second) == dataSchema(first))
-      assert(second.collect().toSeq == first.collect().toSeq)
-      val q = (df: DataFrame) => df.filter(col(df.columns(0)) > 3)
-        .select(df.columns.take(3).map(col).toSeq: _*)
-      assert(normalizedPlan(q(second)) == normalizedPlan(q(first)))
-      assert(second.queryExecution.sparkPlan
-        .sameResult(first.queryExecution.sparkPlan))
+    withFreshDir("lineitem", "events") { dir =>
+      for (t <- Seq("lineitem", "events")) {
+        val (first, firstJobs) = JobCount(spark.sparkContext)(Tables(spark, dir, t))
+        assert(firstJobs >= 1, s"$t: the first read should infer its schema")
+        val (second, jobs) = JobCount(spark.sparkContext)(Tables(spark, dir, t))
+        assert(jobs == 0, s"$t: a known input ran $jobs jobs")
+        assert(second.schema == first.schema)
+        assert(dataSchema(second) == dataSchema(first))
+        assert(second.collect().toSeq == first.collect().toSeq)
+        val q = (df: DataFrame) => df.filter(col(df.columns(0)) > 3)
+          .select(df.columns.take(3).map(col).toSeq: _*)
+        assert(normalizedPlan(q(second)) == normalizedPlan(q(first)))
+        assert(second.queryExecution.sparkPlan
+          .sameResult(first.queryExecution.sparkPlan))
+      }
     }
   }
 
   test("an input rewritten at the same path is read with its new schema") {
-    val dir = Files.createTempDirectory("graft-tables-spec")
-    val target = dir.resolve("t.parquet")
-    def writeFile(df: DataFrame): Unit = {
-      val staging = Files.createTempDirectory("graft-tables-staging").resolve("o")
-      df.coalesce(1).write.parquet(staging.toString)
-      val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get
-      Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+    withTempDir("graft-tables-spec") { dir =>
+      val target = dir.resolve("t.parquet")
+      def writeFile(df: DataFrame): Unit =
+        withTempDir("graft-tables-staging") { s =>
+          val staging = s.resolve("o")
+          df.coalesce(1).write.parquet(staging.toString)
+          val part = Files.list(staging).filter(_.toString.endsWith(".parquet"))
+            .findFirst().get
+          Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+        }
+      writeFile(spark.range(0, 5).toDF("a"))
+      assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+      assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+      writeFile(spark.range(0, 7).select(col("id").as("a"), (col("id") * 2).as("b")))
+      val (after, jobs) = JobCount(spark.sparkContext)(Tables(spark, dir.toString, "t"))
+      assert(jobs >= 1, "a rewritten input should be inferred again")
+      assert(after.columns.toSeq == Seq("a", "b"))
+      assert(after.agg(sum("b")).head().getLong(0) == 42L)
     }
-    writeFile(spark.range(0, 5).toDF("a"))
-    assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("a"))
-    assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("a"))
-    writeFile(spark.range(0, 7).select(col("id").as("a"), (col("id") * 2).as("b")))
-    val (after, jobs) = JobCount(spark.sparkContext)(Tables(spark, dir.toString, "t"))
-    assert(jobs >= 1, "a rewritten input should be inferred again")
-    assert(after.columns.toSeq == Seq("a", "b"))
-    assert(after.agg(sum("b")).head().getLong(0) == 42L)
   }
 
   test("a changed parquet read setting does not reuse the memo entry") {
-    val dir = freshDir("orders")
-    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val before = spark.conf.get(key)
-    def orderDate(df: DataFrame) = dataSchema(df)("o_orderdate").dataType
-    assert(orderDate(Tables.orders(spark, dir)) == TimestampType)
-    assert(orderDate(Tables.orders(spark, dir)) == TimestampType)
-    try {
-      spark.conf.set(key, "true")
-      val (ntz, jobs) = JobCount(spark.sparkContext)(Tables.orders(spark, dir))
-      assert(jobs >= 1, "a changed read setting should infer again")
-      assert(orderDate(ntz) == TimestampNTZType)
-      // Tables still hands out the session's timestamp type
-      assert(ntz.schema("o_orderdate").dataType == TimestampType)
-    } finally spark.conf.set(key, before)
-    val (back, jobs) = JobCount(spark.sparkContext)(Tables.orders(spark, dir))
-    assert(jobs == 0, "the restored setting's entry should be reused")
-    assert(orderDate(back) == TimestampType)
+    withFreshDir("orders") { dir =>
+      val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+      val before = spark.conf.get(key)
+      def orderDate(df: DataFrame) = dataSchema(df)("o_orderdate").dataType
+      assert(orderDate(Tables.orders(spark, dir)) == TimestampType)
+      assert(orderDate(Tables.orders(spark, dir)) == TimestampType)
+      try {
+        spark.conf.set(key, "true")
+        val (ntz, jobs) = JobCount(spark.sparkContext)(Tables.orders(spark, dir))
+        assert(jobs >= 1, "a changed read setting should infer again")
+        assert(orderDate(ntz) == TimestampNTZType)
+        // Tables still hands out the session's timestamp type
+        assert(ntz.schema("o_orderdate").dataType == TimestampType)
+      } finally spark.conf.set(key, before)
+      val (back, jobs) = JobCount(spark.sparkContext)(Tables.orders(spark, dir))
+      assert(jobs == 0, "the restored setting's entry should be reused")
+      assert(orderDate(back) == TimestampType)
+    }
   }
 
   test("two reads of one table self-join on their own columns") {

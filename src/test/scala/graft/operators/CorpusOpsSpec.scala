@@ -574,15 +574,17 @@ class CorpusOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("novel").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = CorpusOps.gramNovelty(spark, tmp).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(out(1L) == ((2L, 2L, 1.0)), s"got ${out(1L)}")
-    assert(out(2L) == ((2L, 0L, 0.0)), s"got ${out(2L)}")
-    assert(out(3L) == ((2L, 1L, 0.5)), s"got ${out(3L)}")
-    assert(out(4L) == ((0L, 0L, 0.0)), s"got ${out(4L)}")
+    withTempDir("novel") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = CorpusOps.gramNovelty(spark, tmp).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+      assert(out(1L) == ((2L, 2L, 1.0)), s"got ${out(1L)}")
+      assert(out(2L) == ((2L, 0L, 0.0)), s"got ${out(2L)}")
+      assert(out(3L) == ((2L, 1L, 0.5)), s"got ${out(3L)}")
+      assert(out(4L) == ((0L, 0L, 0.0)), s"got ${out(4L)}")
+    }
   }
 
   test("dataRecipe matches a hand-rolled tempered sampling plan") {
@@ -594,30 +596,32 @@ class CorpusOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("recipe").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val tot = 15.0
-    val pw = Map("a" -> math.pow(12.0, 0.7), "b" -> math.pow(3.0, 0.7))
-    val totPow = pw.values.sum
-    val out = CorpusOps.dataRecipe(spark, tmp).collect()
-      .map(r => r.getString(0) -> r).toMap
-    for ((src, n) <- Seq(("a", 12L), ("b", 3L))) {
-      val share = pw(src) / totPow
-      val target = 2.0 * tot * share
-      val epochs = target / n
-      val row = out(src)
-      assert(row.getLong(1) == n)
-      assert(row.getDouble(2) == r4(share), s"$src temp_share")
-      assert(row.getLong(3) == math.floor(target).toLong, s"$src target")
-      assert(row.getDouble(4) == r4(epochs), s"$src epochs")
-      assert(row.getDouble(5) == r4(math.min(1.0, epochs)), s"$src rate")
-      assert(row.getBoolean(6) == (epochs > 4.0), s"$src over_repeated")
+    withTempDir("recipe") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      def r4(x: Double): Double =
+        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val tot = 15.0
+      val pw = Map("a" -> math.pow(12.0, 0.7), "b" -> math.pow(3.0, 0.7))
+      val totPow = pw.values.sum
+      val out = CorpusOps.dataRecipe(spark, tmp).collect()
+        .map(r => r.getString(0) -> r).toMap
+      for ((src, n) <- Seq(("a", 12L), ("b", 3L))) {
+        val share = pw(src) / totPow
+        val target = 2.0 * tot * share
+        val epochs = target / n
+        val row = out(src)
+        assert(row.getLong(1) == n)
+        assert(row.getDouble(2) == r4(share), s"$src temp_share")
+        assert(row.getLong(3) == math.floor(target).toLong, s"$src target")
+        assert(row.getDouble(4) == r4(epochs), s"$src epochs")
+        assert(row.getDouble(5) == r4(math.min(1.0, epochs)), s"$src rate")
+        assert(row.getBoolean(6) == (epochs > 4.0), s"$src over_repeated")
+      }
+      // at a 2x budget every source averages 2 epochs; tempering must push
+      // the big source BELOW 2 and the small one ABOVE 2 (the tau<1 boost)
+      assert(out("a").getDouble(4) < 2.0 && out("b").getDouble(4) > 2.0)
     }
-    // at a 2x budget every source averages 2 epochs; tempering must push
-    // the big source BELOW 2 and the small one ABOVE 2 (the tau<1 boost)
-    assert(out("a").getDouble(4) < 2.0 && out("b").getDouble(4) > 2.0)
   }
 
   test("splitLeakage counts eval docs sharing >=3 shingles with train") {
@@ -642,13 +646,15 @@ class CorpusOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("leak").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = CorpusOps.splitLeakage(spark, tmp).collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(out("val") == ((2L, 1L, 0.5)), s"got ${out("val")}")
-    assert(out("test") == ((1L, 1L, 1.0)), s"got ${out("test")}")
+    withTempDir("leak") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = CorpusOps.splitLeakage(spark, tmp).collect()
+        .map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+      assert(out("val") == ((2L, 1L, 0.5)), s"got ${out("val")}")
+      assert(out("test") == ((1L, 1L, 1.0)), s"got ${out("test")}")
+    }
   }
 
   test("mutualInfo matches a driver recompute and respects MI bounds") {

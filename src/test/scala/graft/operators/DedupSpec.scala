@@ -297,54 +297,57 @@ class DedupSpec extends SparkTestBase {
     // corpus = the rest. Build the STORED index from the corpus in TWO
     // appends (md5 first char 0-7, then 8-e) — the grow-by-appends story —
     // and probe the same batch from storage.
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-band-index").toString
-    val docs = Tables.documents(spark, sf)
-    val firstHex = substring(md5(col("doc_id").cast("string")), 1, 1)
-    DedupOps.bandIndexAppend(docs.filter(firstHex.between("0", "7")), idx)
-    DedupOps.bandIndexAppend(
-      docs.filter(firstHex.between("8", "e")), idx)
-    // appends landed as band-partitioned parquet (8 band dirs)
-    assert(new java.io.File(s"$idx/bands/band=0").exists(), idx)
-    val probed = DedupOps.bandIndexProbe(spark, idx,
-      docs.filter(firstHex === "f").select(col("doc_id"), col("text")))
-      .collect().map(r =>
-        (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
-    val recomputed = DedupOps.dedupIncrNear(spark, sf)
-      .collect().map(r =>
-        (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(probed == recomputed,
-      s"probe-from-storage diverged: got ${probed.take(5)} " +
-        s"expect ${recomputed.take(5)}")
+    withTempDir("graft-band-index") { dir =>
+      val idx = dir.toString
+      val docs = Tables.documents(spark, sf)
+      val firstHex = substring(md5(col("doc_id").cast("string")), 1, 1)
+      DedupOps.bandIndexAppend(docs.filter(firstHex.between("0", "7")), idx)
+      DedupOps.bandIndexAppend(
+        docs.filter(firstHex.between("8", "e")), idx)
+      // appends landed as band-partitioned parquet (8 band dirs)
+      assert(new java.io.File(s"$idx/bands/band=0").exists(), idx)
+      val probed = DedupOps.bandIndexProbe(spark, idx,
+        docs.filter(firstHex === "f").select(col("doc_id"), col("text")))
+        .collect().map(r =>
+          (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
+      val recomputed = DedupOps.dedupIncrNear(spark, sf)
+        .collect().map(r =>
+          (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(probed == recomputed,
+        s"probe-from-storage diverged: got ${probed.take(5)} " +
+          s"expect ${recomputed.take(5)}")
+    }
   }
 
   test("band index epoch appends: a replayed epoch replaces itself (exactly-once)") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-band-epoch").toString
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val e0 = docs.filter(col("doc_id") < 100)
-    val e1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-    DedupOps.bandIndexAppend(e0, idx, epoch = Some(0L))
-    DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
-    def bandRows() = spark.read.parquet(s"$idx/bands")
-      .select("doc_id", "band", "bkey").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .sortBy(identity[(Long, Int, String)]).toSeq
-    val once = bandRows()
-    // the crash-replay scenario: the same micro-batch lands again under
-    // the same epoch — dynamic partition overwrite must replace, not
-    // duplicate (a multiset compare, so duplicates would be caught)
-    DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
-    assert(bandRows() == once, "replayed epoch duplicated band rows")
-    // content equals the plain-append layout on the same docs
-    val ref = java.nio.file.Files
-      .createTempDirectory("graft-band-epoch-ref").toString
-    DedupOps.bandIndexAppend(e0.unionByName(e1), ref)
-    val refRows = spark.read.parquet(s"$ref/bands")
-      .select("doc_id", "band", "bkey").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .sortBy(identity[(Long, Int, String)]).toSeq
-    assert(bandRows() == refRows)
+    withTempDir("graft-band-epoch") { d =>
+      val idx = d.toString
+      val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      val e0 = docs.filter(col("doc_id") < 100)
+      val e1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
+      DedupOps.bandIndexAppend(e0, idx, epoch = Some(0L))
+      DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
+      def bandRows() = spark.read.parquet(s"$idx/bands")
+        .select("doc_id", "band", "bkey").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+        .sortBy(identity[(Long, Int, String)]).toSeq
+      val once = bandRows()
+      // the crash-replay scenario: the same micro-batch lands again under
+      // the same epoch — dynamic partition overwrite must replace, not
+      // duplicate (a multiset compare, so duplicates would be caught)
+      DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
+      assert(bandRows() == once, "replayed epoch duplicated band rows")
+      // content equals the plain-append layout on the same docs
+      withTempDir("graft-band-epoch-ref") { dir =>
+        val ref = dir.toString
+        DedupOps.bandIndexAppend(e0.unionByName(e1), ref)
+        val refRows = spark.read.parquet(s"$ref/bands")
+          .select("doc_id", "band", "bkey").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+          .sortBy(identity[(Long, Int, String)]).toSeq
+        assert(bandRows() == refRows)
+      }
+    }
   }
 
   test("band index probe fence: replay after own append probes the pre-batch index") {
@@ -353,31 +356,32 @@ class DedupSpec extends SparkTestBase {
     // already holds its own rows. With maxEpochExclusive = 1 the probe
     // must see ONLY epoch 0 — identical verdicts to the original run —
     // instead of every doc matching itself at Jaccard 1.0.
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-band-fence").toString
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val e0 = docs.filter(col("doc_id") < 100)
-    val e1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-    DedupOps.bandIndexAppend(e0, idx, epoch = Some(0L))
-    // original run: probe BEFORE the batch's own append
-    def collectVerdicts(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
-    val original = collectVerdicts(
-      DedupOps.bandIndexProbe(spark, idx, e1, maxEpochExclusive = Some(1L)))
-    DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
-    // replay: the index now contains epoch 1 itself; the fence must hide it
-    val replayed = collectVerdicts(
-      DedupOps.bandIndexProbe(spark, idx, e1, maxEpochExclusive = Some(1L)))
-    assert(replayed == original,
-      "fenced replay verdicts diverged from the original run")
-    // and the unfenced probe really would differ (every doc self-matches),
-    // proving the fence is load-bearing, not vacuous
-    val unfenced = collectVerdicts(
-      DedupOps.bandIndexProbe(spark, idx, e1))
-    assert(unfenced != original, "unfenced probe unexpectedly matched — " +
-      "fixture gives the fence nothing to exclude")
-    assert(unfenced.forall(!_._2), "self-matching docs must all be non-novel")
+    withTempDir("graft-band-fence") { dir =>
+      val idx = dir.toString
+      val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      val e0 = docs.filter(col("doc_id") < 100)
+      val e1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
+      DedupOps.bandIndexAppend(e0, idx, epoch = Some(0L))
+      // original run: probe BEFORE the batch's own append
+      def collectVerdicts(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r =>
+          (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSeq
+      val original = collectVerdicts(
+        DedupOps.bandIndexProbe(spark, idx, e1, maxEpochExclusive = Some(1L)))
+      DedupOps.bandIndexAppend(e1, idx, epoch = Some(1L))
+      // replay: the index now contains epoch 1 itself; the fence must hide it
+      val replayed = collectVerdicts(
+        DedupOps.bandIndexProbe(spark, idx, e1, maxEpochExclusive = Some(1L)))
+      assert(replayed == original,
+        "fenced replay verdicts diverged from the original run")
+      // and the unfenced probe really would differ (every doc self-matches),
+      // proving the fence is load-bearing, not vacuous
+      val unfenced = collectVerdicts(
+        DedupOps.bandIndexProbe(spark, idx, e1))
+      assert(unfenced != original, "unfenced probe unexpectedly matched — " +
+        "fixture gives the fence nothing to exclude")
+      assert(unfenced.forall(!_._2), "self-matching docs must all be non-novel")
+    }
   }
 
   test("band index probe reads the index with known schemas: one job to build, both layouts") {
@@ -388,20 +392,21 @@ class DedupSpec extends SparkTestBase {
     val batch = docs.filter(firstHex === "f")
     val recomputed = DedupOps.dedupIncrNear(spark, sf).collect().toSeq
     Seq(None, Some(0L)).foreach { epoch =>
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft-band-probe-jobs").toString
-      DedupOps.bandIndexAppend(docs.filter(firstHex.between("0", "7")), idx,
-        epoch = epoch)
-      DedupOps.bandIndexAppend(docs.filter(firstHex.between("8", "e")), idx,
-        epoch = epoch.map(_ + 1))
-      val (probe, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
-        DedupOps.bandIndexProbe(spark, idx, batch,
-          maxEpochExclusive = epoch.map(_ + 2)))
-      assert(jobs <= 1, s"epoch=$epoch: $jobs jobs to build the probe")
-      assert(probe.collect().toSeq == recomputed, s"epoch=$epoch")
-      val (bands, sh) = DedupOps.bandIndexTables(spark, idx)
-      assert(bands.schema == spark.read.parquet(s"$idx/bands").schema)
-      assert(sh.schema == spark.read.parquet(s"$idx/shingles").schema)
+      withTempDir("graft-band-probe-jobs") { dir =>
+        val idx = dir.toString
+        DedupOps.bandIndexAppend(docs.filter(firstHex.between("0", "7")), idx,
+          epoch = epoch)
+        DedupOps.bandIndexAppend(docs.filter(firstHex.between("8", "e")), idx,
+          epoch = epoch.map(_ + 1))
+        val (probe, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+          DedupOps.bandIndexProbe(spark, idx, batch,
+            maxEpochExclusive = epoch.map(_ + 2)))
+        assert(jobs <= 1, s"epoch=$epoch: $jobs jobs to build the probe")
+        assert(probe.collect().toSeq == recomputed, s"epoch=$epoch")
+        val (bands, sh) = DedupOps.bandIndexTables(spark, idx)
+        assert(bands.schema == spark.read.parquet(s"$idx/bands").schema)
+        assert(sh.schema == spark.read.parquet(s"$idx/shingles").schema)
+      }
     }
   }
 }

@@ -191,17 +191,19 @@ class GraphOpsSpec extends SparkTestBase {
   test("labelPropagation resolves two bridged triangles into two communities") {
     import spark.implicits._
     // baskets {1,2,3} and {4,5,6} are triangles; basket {3,4} bridges them
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lpa").toString
-    Seq((10L, 1L), (10L, 2L), (10L, 3L),
-        (20L, 4L), (20L, 5L), (20L, 6L),
-        (30L, 3L), (30L, 4L))
-      .toDF("l_orderkey", "l_partkey")
-      .write.parquet(s"$tmp/lineitem.parquet")
-    val out = GraphOps.labelPropagation(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // hand-traced 3 sync rounds with min-tie: {1,2,3}→1, {4,5,6}→3;
-    // the bridge edge does NOT merge the triangles
-    assert(out == Seq((1L, 3L), (3L, 3L)), s"got $out")
+    withTempDir("graft-lpa") { dir =>
+      val tmp = dir.toString
+      Seq((10L, 1L), (10L, 2L), (10L, 3L),
+          (20L, 4L), (20L, 5L), (20L, 6L),
+          (30L, 3L), (30L, 4L))
+        .toDF("l_orderkey", "l_partkey")
+        .write.parquet(s"$tmp/lineitem.parquet")
+      val out = GraphOps.labelPropagation(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      // hand-traced 3 sync rounds with min-tie: {1,2,3}→1, {4,5,6}→3;
+      // the bridge edge does NOT merge the triangles
+      assert(out == Seq((1L, 3L), (3L, 3L)), s"got $out")
+    }
   }
 
   /** Driver-local reference peel: remove degree<k nodes for `rounds`

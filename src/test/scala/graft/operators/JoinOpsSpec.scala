@@ -107,15 +107,17 @@ class JoinOpsSpec extends SparkTestBase {
     }
     // crafted uniform keys: estimate must be exact (err_ratio 1.0)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-card").toString
-    (1L to 64L).flatMap(u => Seq.fill(3)(u))
-      .map(u => (u, u)).toDF("event_id", "user_id")
-      .withColumn("ts",
-        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-      .write.parquet(s"$tmp/events.parquet")
-    val uni = JoinOps.cardEst(spark, tmp).collect()
-    uni.foreach { r =>
-      assert(r.getDouble(5) == 1.0, s"uniform keys must estimate exactly: $r")
+    withTempDir("graft-card") { dir =>
+      val tmp = dir.toString
+      (1L to 64L).flatMap(u => Seq.fill(3)(u))
+        .map(u => (u, u)).toDF("event_id", "user_id")
+        .withColumn("ts",
+          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+        .write.parquet(s"$tmp/events.parquet")
+      val uni = JoinOps.cardEst(spark, tmp).collect()
+      uni.foreach { r =>
+        assert(r.getDouble(5) == 1.0, s"uniform keys must estimate exactly: $r")
+      }
     }
   }
 

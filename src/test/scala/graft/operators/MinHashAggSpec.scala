@@ -9,9 +9,9 @@ class MinHashAggSpec extends SparkTestBase {
 
   test("typed-imperative MinHash: fixed length, partitioning-invariant") {
     val docs = Tables.documents(spark, sf).limit(100)
-    val a = DedupOps.minhashSignaturesAgg(docs, 32).orderBy("doc_id")
+    val a = DedupOps.minhashSignatures(docs, 32).orderBy("doc_id")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
-    val b = DedupOps.minhashSignaturesAgg(docs.repartition(16), 32)
+    val b = DedupOps.minhashSignatures(docs.repartition(16), 32)
       .orderBy("doc_id")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
     assert(a.length == 100)
@@ -24,7 +24,7 @@ class MinHashAggSpec extends SparkTestBase {
 
   test("scalar minhash_array equals the aggregate path on the whole corpus") {
     val docs = Tables.documents(spark, sf)
-    val agg = DedupOps.minhashSignaturesAgg(docs, 32).orderBy("doc_id")
+    val agg = DedupOps.minhashSignatures(docs, 32).orderBy("doc_id")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
     val scalar = DedupOps.minhashSignaturesScalar(docs, 32).orderBy("doc_id")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
@@ -76,7 +76,7 @@ class MinHashAggSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val agg = DedupOps.minhashSignaturesAgg(df, 16).collect()
+    val agg = DedupOps.minhashSignatures(df, 16).collect()
     val scalar = DedupOps.minhashSignaturesScalar(df, 16).collect()
     assert(agg.map(_.getLong(0)).toSet == Set(2L))
     assert(scalar.map(_.getLong(0)).toSet == Set(2L))
@@ -91,7 +91,7 @@ class MinHashAggSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val sigs = DedupOps.minhashSignaturesAgg(df, 16)
+    val sigs = DedupOps.minhashSignatures(df, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))

@@ -134,14 +134,16 @@ class MultimodalSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-audio").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = MultimodalOps.audioTrim(spark, tmp).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getDouble(3),
-        r.getInt(4), r.getInt(5)))).toMap
-    assert(out(1L) == ((32, 2, 0.5, 1, 1)), s"got ${out(1L)}")
-    assert(out(2L) == ((32, 2, 1.0, -1, -1)), s"got ${out(2L)}")
-    assert(out(3L) == ((5, 0, 0.0, -1, -1)), s"got ${out(3L)}")
+    withTempDir("graft-audio") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = MultimodalOps.audioTrim(spark, tmp).collect()
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getDouble(3),
+          r.getInt(4), r.getInt(5)))).toMap
+      assert(out(1L) == ((32, 2, 0.5, 1, 1)), s"got ${out(1L)}")
+      assert(out(2L) == ((32, 2, 1.0, -1, -1)), s"got ${out(2L)}")
+      assert(out(3L) == ((5, 0, 0.0, -1, -1)), s"got ${out(3L)}")
+    }
   }
 
   test("audioTrim on the fixture: fractions bounded, pointers ordered") {

@@ -26,11 +26,13 @@ class RetrievalOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = RetrievalOps.bm25Scores(spark, tmp)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(out == Map(1L -> 1.5711, 2L -> 0.7362, 4L -> 2.2085), s"got $out")
+    withTempDir("graft-bm25") { dir =>
+      val tmp = dir.toString
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val out = RetrievalOps.bm25Scores(spark, tmp)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(out == Map(1L -> 1.5711, 2L -> 0.7362, 4L -> 2.2085), s"got $out")
+    }
   }
 
   test("rrfFusion: ranks bounded, fused score is exactly the rank formula") {

@@ -22,14 +22,16 @@ class Round3OpsSpec extends SparkTestBase {
       val v = if (h == 3) 100.0 else 2.0 * h + 3.0
       (new java.sql.Timestamp(base.getTime + h * 3600L * 1000L), "a", v)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ts").toString
-    rows.toDF("ts", "event_type", "value")
-      .write.parquet(s"$tmp/events.parquet")
-    val out = EventOps.theilSen(spark, tmp).collect()
-    assert(out.length == 1)
-    val r = out.head
-    assert((r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
-      == (("a", 7L, 2.0, 3.0)), s"got $r")
+    withTempDir("graft-ts") { dir =>
+      val tmp = dir.toString
+      rows.toDF("ts", "event_type", "value")
+        .write.parquet(s"$tmp/events.parquet")
+      val out = EventOps.theilSen(spark, tmp).collect()
+      assert(out.length == 1)
+      val r = out.head
+      assert((r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
+        == (("a", 7L, 2.0, 3.0)), s"got $r")
+    }
   }
 
   test("theilSen on the fixture: every type, full series, finite estimates") {
@@ -590,17 +592,19 @@ class Round3OpsSpec extends SparkTestBase {
     // a planted verbatim copy of the corpus distribution scores lower than
     // a disjoint-vocab source
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("jsd").toString
-    val base = (1L to 40L).map(i => (i, "alpha beta gamma delta", "same"))
-    val diff = (41L to 60L).map(i => (i, "zeta eta theta iota", "diff"))
-    (base ++ diff).toDF("doc_id", "text", "source")
-      .withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$tmp/documents.parquet")
-    val planted = CorpusOps.jsDivergence(spark, tmp).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(planted("same") < planted("diff"))
-    assert(planted("diff") > 0.2) // mostly-disjoint vocab diverges strongly
+    withTempDir("jsd") { dir =>
+      val tmp = dir.toString
+      val base = (1L to 40L).map(i => (i, "alpha beta gamma delta", "same"))
+      val diff = (41L to 60L).map(i => (i, "zeta eta theta iota", "diff"))
+      (base ++ diff).toDF("doc_id", "text", "source")
+        .withColumn("lang", lit("en"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$tmp/documents.parquet")
+      val planted = CorpusOps.jsDivergence(spark, tmp).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(planted("same") < planted("diff"))
+      assert(planted("diff") > 0.2) // mostly-disjoint vocab diverges strongly
+    }
   }
 
   test("transitionMatrix: rows are probability distributions; counts replay") {
@@ -659,119 +663,127 @@ class Round3OpsSpec extends SparkTestBase {
 
   test("eventLag counts exactly the backward-time consecutive pairs") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lag").toString
-    // user 1 "click": ids 1,2,3 with times 10,30,20 -> pairs (1,2) ok,
-    // (2,3) INVERTED; user 2 "click": ids 4,5 in order -> 0 of 1;
-    // "view": single event -> no pairs, absent from output
-    Seq(
-      (1L, 1L, "click", 10L), (2L, 1L, "click", 30L), (3L, 1L, "click", 20L),
-      (4L, 2L, "click", 40L), (5L, 2L, "click", 50L),
-      (6L, 3L, "view", 60L))
-      .toDF("event_id", "user_id", "event_type", "us")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("us") * 1000000L).as("ts"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.eventLag(spark, tmp).collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(out("click") == ((3L, 1L, 0.3333)), s"got ${out.get("click")}")
-    assert(!out.contains("view"))
+    withTempDir("graft-lag") { dir =>
+      val tmp = dir.toString
+      // user 1 "click": ids 1,2,3 with times 10,30,20 -> pairs (1,2) ok,
+      // (2,3) INVERTED; user 2 "click": ids 4,5 in order -> 0 of 1;
+      // "view": single event -> no pairs, absent from output
+      Seq(
+        (1L, 1L, "click", 10L), (2L, 1L, "click", 30L), (3L, 1L, "click", 20L),
+        (4L, 2L, "click", 40L), (5L, 2L, "click", 50L),
+        (6L, 3L, "view", 60L))
+        .toDF("event_id", "user_id", "event_type", "us")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("us") * 1000000L).as("ts"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val out = EventOps.eventLag(spark, tmp).collect()
+        .map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+      assert(out("click") == ((3L, 1L, 0.3333)), s"got ${out.get("click")}")
+      assert(!out.contains("view"))
+    }
   }
 
   test("audienceOverlap matches hand-computed user-set Jaccard") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-aud").toString
-    // click users {1,2,3}, view users {2,3}, buy users {9}
-    // click-view: shared 2, jaccard 2/3; *-buy: no shared users -> absent
-    Seq(
-      (1L, 1L, "click"), (2L, 2L, "click"), (3L, 3L, "click"),
-      (4L, 2L, "click"), // duplicate (user, type) must not double-count
-      (5L, 2L, "view"), (6L, 3L, "view"),
-      (7L, 9L, "buy"))
-      .toDF("event_id", "user_id", "event_type")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("event_id") * 1000000L).as("ts"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.audienceOverlap(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap
-    assert(out == Map(("click", "view") -> ((2L, 0.6667))), s"got $out")
+    withTempDir("graft-aud") { dir =>
+      val tmp = dir.toString
+      // click users {1,2,3}, view users {2,3}, buy users {9}
+      // click-view: shared 2, jaccard 2/3; *-buy: no shared users -> absent
+      Seq(
+        (1L, 1L, "click"), (2L, 2L, "click"), (3L, 3L, "click"),
+        (4L, 2L, "click"), // duplicate (user, type) must not double-count
+        (5L, 2L, "view"), (6L, 3L, "view"),
+        (7L, 9L, "buy"))
+        .toDF("event_id", "user_id", "event_type")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("event_id") * 1000000L).as("ts"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val out = EventOps.audienceOverlap(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          ((r.getLong(2), r.getDouble(3)))).toMap
+      assert(out == Map(("click", "view") -> ((2L, 0.6667))), s"got $out")
+    }
   }
 
   test("attribution: last touch wins, ties break on event_id, " +
       "out-of-window and zero-touch purchases go direct") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-attr").toString
-    val day = 86400L
-    // user 1: click(t=100) then view(t=200) then purchase(t=250, rev 10)
-    //   -> view (last touch)
-    // user 2: two touches at the SAME ts (t=300: click id=20, view id=21)
-    //   then purchase(t=310, rev 20) -> view (higher event_id wins)
-    // user 3: click 8 days before purchase(rev 30) -> outside 7d -> direct
-    // user 4: purchase(rev 40) with no touches at all -> direct
-    Seq(
-      (10L, 1L, "click", 100L, 0.0), (11L, 1L, "view", 200L, 0.0),
-      (12L, 1L, "purchase", 250L, 10.0),
-      (20L, 2L, "click", 300L, 0.0), (21L, 2L, "view", 300L, 0.0),
-      (22L, 2L, "purchase", 310L, 20.0),
-      (30L, 3L, "click", 1000L, 0.0),
-      (31L, 3L, "purchase", 1000L + 8 * day, 30.0),
-      (40L, 4L, "purchase", 500L, 40.0))
-      .toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("t") * 1000000L).as("ts"),
-        col("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.attribution(spark, tmp).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(out == Map(
-      "view" -> ((2L, 30.0)),     // users 1 and 2
-      "direct" -> ((2L, 70.0))),  // users 3 (out of window) and 4
-      s"got $out")
+    withTempDir("graft-attr") { dir =>
+      val tmp = dir.toString
+      val day = 86400L
+      // user 1: click(t=100) then view(t=200) then purchase(t=250, rev 10)
+      //   -> view (last touch)
+      // user 2: two touches at the SAME ts (t=300: click id=20, view id=21)
+      //   then purchase(t=310, rev 20) -> view (higher event_id wins)
+      // user 3: click 8 days before purchase(rev 30) -> outside 7d -> direct
+      // user 4: purchase(rev 40) with no touches at all -> direct
+      Seq(
+        (10L, 1L, "click", 100L, 0.0), (11L, 1L, "view", 200L, 0.0),
+        (12L, 1L, "purchase", 250L, 10.0),
+        (20L, 2L, "click", 300L, 0.0), (21L, 2L, "view", 300L, 0.0),
+        (22L, 2L, "purchase", 310L, 20.0),
+        (30L, 3L, "click", 1000L, 0.0),
+        (31L, 3L, "purchase", 1000L + 8 * day, 30.0),
+        (40L, 4L, "purchase", 500L, 40.0))
+        .toDF("event_id", "user_id", "event_type", "t", "value")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("t") * 1000000L).as("ts"),
+          col("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val out = EventOps.attribution(spark, tmp).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(out == Map(
+        "view" -> ((2L, 30.0)),     // users 1 and 2
+        "direct" -> ((2L, 70.0))),  // users 3 (out of window) and 4
+        s"got $out")
+    }
   }
 
   test("attributionPosition: U-shaped weights on a crafted journey; " +
       "revenue is conserved across channels") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-attrpos").toString
-    // user 1: click, view, click, email then purchase(rev 10) ->
-    //   first click 4.0, last email 4.0, middles view/click 1.0 each
-    // user 2: single view then purchase(rev 20) -> view 20
-    // user 3: click + view then purchase(rev 30) -> 15 / 15
-    // user 4: zero-touch purchase(rev 40) -> direct 40
-    Seq(
-      (10L, 1L, "click", 100L, 0.0), (11L, 1L, "view", 200L, 0.0),
-      (12L, 1L, "click", 300L, 0.0), (13L, 1L, "email", 400L, 0.0),
-      (14L, 1L, "purchase", 500L, 10.0),
-      (20L, 2L, "view", 100L, 0.0), (21L, 2L, "purchase", 150L, 20.0),
-      (30L, 3L, "click", 100L, 0.0), (31L, 3L, "view", 200L, 0.0),
-      (32L, 3L, "purchase", 250L, 30.0),
-      (40L, 4L, "purchase", 500L, 40.0))
-      .toDF("event_id", "user_id", "event_type", "t", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("t") * 1000000L).as("ts"),
-        col("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.attributionPosition(spark, tmp).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(out == Map(
-      "click" -> ((3L, 4.0 + 1.0 + 15.0)),  // u1 first 4 + u1 middle 1 + u3 first 15
-      "view" -> ((3L, 1.0 + 20.0 + 15.0)),  // u1 middle 1 + u2 solo 20 + u3 last 15
-      "email" -> ((1L, 4.0)),               // u1 last
-      "direct" -> ((1L, 40.0))), s"got $out")
-    // conservation: every purchase's weights sum to 1, so channel totals
-    // sum to total purchase revenue (exact decimal sums; round-4 output)
-    assert(math.abs(out.values.map(_._2).sum - 100.0) < 1e-9)
-    // and on the real fixture, conservation must hold vs total revenue
-    val real = EventOps.attributionPosition(spark, sf).collect()
-      .map(_.getDouble(2)).sum
-    val totalRev = Tables.events(spark, sf)
-      .filter(col("event_type") === "purchase")
-      .agg(sum(col("value"))).head().getDouble(0)
-    assert(math.abs(real - totalRev) / totalRev < 1e-4,
-      s"attributed $real vs purchase revenue $totalRev")
+    withTempDir("graft-attrpos") { dir =>
+      val tmp = dir.toString
+      // user 1: click, view, click, email then purchase(rev 10) ->
+      //   first click 4.0, last email 4.0, middles view/click 1.0 each
+      // user 2: single view then purchase(rev 20) -> view 20
+      // user 3: click + view then purchase(rev 30) -> 15 / 15
+      // user 4: zero-touch purchase(rev 40) -> direct 40
+      Seq(
+        (10L, 1L, "click", 100L, 0.0), (11L, 1L, "view", 200L, 0.0),
+        (12L, 1L, "click", 300L, 0.0), (13L, 1L, "email", 400L, 0.0),
+        (14L, 1L, "purchase", 500L, 10.0),
+        (20L, 2L, "view", 100L, 0.0), (21L, 2L, "purchase", 150L, 20.0),
+        (30L, 3L, "click", 100L, 0.0), (31L, 3L, "view", 200L, 0.0),
+        (32L, 3L, "purchase", 250L, 30.0),
+        (40L, 4L, "purchase", 500L, 40.0))
+        .toDF("event_id", "user_id", "event_type", "t", "value")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("t") * 1000000L).as("ts"),
+          col("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val out = EventOps.attributionPosition(spark, tmp).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(out == Map(
+        "click" -> ((3L, 4.0 + 1.0 + 15.0)),  // u1 first 4 + u1 middle 1 + u3 first 15
+        "view" -> ((3L, 1.0 + 20.0 + 15.0)),  // u1 middle 1 + u2 solo 20 + u3 last 15
+        "email" -> ((1L, 4.0)),               // u1 last
+        "direct" -> ((1L, 40.0))), s"got $out")
+      // conservation: every purchase's weights sum to 1, so channel totals
+      // sum to total purchase revenue (exact decimal sums; round-4 output)
+      assert(math.abs(out.values.map(_._2).sum - 100.0) < 1e-9)
+      // and on the real fixture, conservation must hold vs total revenue
+      val real = EventOps.attributionPosition(spark, sf).collect()
+        .map(_.getDouble(2)).sum
+      val totalRev = Tables.events(spark, sf)
+        .filter(col("event_type") === "purchase")
+        .agg(sum(col("value"))).head().getDouble(0)
+      assert(math.abs(real - totalRev) / totalRev < 1e-4,
+        s"attributed $real vs purchase revenue $totalRev")
+    }
   }
 
   test("stlDecompose: trend is the hand-computed centered 7-day MA, " +

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -31,23 +29,25 @@ class ScaleSpec extends SparkTestBase {
   test("bucketed tables join without a shuffle exchange") {
     // warehouse.dir is a static conf — write external bucketed tables to a
     // temp path instead
-    val wh = Files.createTempDirectory("graft-wh").toString
-    Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_quantity")
-      .write.mode("overwrite").option("path", s"$wh/li")
-      .bucketBy(4, "l_orderkey")
-      .sortBy("l_orderkey").saveAsTable("li_bucketed")
-    Tables.orders(spark, sf)
-      .select("o_orderkey", "o_totalprice")
-      .write.mode("overwrite").option("path", s"$wh/ord")
-      .bucketBy(4, "o_orderkey")
-      .sortBy("o_orderkey").saveAsTable("ord_bucketed")
-    val joined = spark.table("li_bucketed")
-      .join(spark.table("ord_bucketed"),
-        col("l_orderkey") === col("o_orderkey"))
-    val p = joined.queryExecution.sparkPlan.toString
-    assert(!p.contains("Exchange hashpartitioning"), p)
-    assert(joined.count() == Tables.lineitem(spark, sf).count())
+    withTempDir("graft-wh") { dir =>
+      val wh = dir.toString
+      Tables.lineitem(spark, sf)
+        .select("l_orderkey", "l_quantity")
+        .write.mode("overwrite").option("path", s"$wh/li")
+        .bucketBy(4, "l_orderkey")
+        .sortBy("l_orderkey").saveAsTable("li_bucketed")
+      Tables.orders(spark, sf)
+        .select("o_orderkey", "o_totalprice")
+        .write.mode("overwrite").option("path", s"$wh/ord")
+        .bucketBy(4, "o_orderkey")
+        .sortBy("o_orderkey").saveAsTable("ord_bucketed")
+      val joined = spark.table("li_bucketed")
+        .join(spark.table("ord_bucketed"),
+          col("l_orderkey") === col("o_orderkey"))
+      val p = joined.queryExecution.sparkPlan.toString
+      assert(!p.contains("Exchange hashpartitioning"), p)
+      assert(joined.count() == Tables.lineitem(spark, sf).count())
+    }
   }
 
   test("blocked distributed exact top-pairs equals the driver-local kernel at both SFs") {

@@ -146,20 +146,22 @@ class SimilaritySpec extends SparkTestBase {
     assert(sims.zip(sims.tail).forall { case (a, b) => a >= b })
     // planted identical documents share identical signatures -> sim 1.0
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sparsesim").toString
-    Seq((1L, "alpha beta gamma delta epsilon"),
-      (2L, "alpha beta gamma delta epsilon"),
-      (3L, "totally different words here now"))
-      .toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$tmp/documents.parquet")
-    // samplePrefix "ff" ~= full corpus: the planted ids must all survive
-    val planted = SimilarityOps.sparseSimPairs(spark, tmp, samplePrefix = "ff")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(math.abs(planted((1L, 2L)) - 1.0) < 1e-9)
-    assert(!planted.contains((1L, 3L)) && !planted.contains((2L, 3L)))
+    withTempDir("sparsesim") { dir =>
+      val tmp = dir.toString
+      Seq((1L, "alpha beta gamma delta epsilon"),
+        (2L, "alpha beta gamma delta epsilon"),
+        (3L, "totally different words here now"))
+        .toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$tmp/documents.parquet")
+      // samplePrefix "ff" ~= full corpus: the planted ids must all survive
+      val planted = SimilarityOps.sparseSimPairs(spark, tmp, samplePrefix = "ff")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(math.abs(planted((1L, 2L)) - 1.0) < 1e-9)
+      assert(!planted.contains((1L, 3L)) && !planted.contains((2L, 3L)))
+    }
   }
 
   test("hardNegatives: labels always differ, ranks dense, cosine descending") {
@@ -195,33 +197,35 @@ class SimilaritySpec extends SparkTestBase {
     def v(i: Int): Array[Float] = {
       val a = Array.fill(64)(0f); a(i) = 1f; a
     }
-    val tmp = java.nio.file.Files.createTempDirectory("capdd").toString
-    Seq((1L, v(0), 0), (2L, v(0), 0), (3L, v(1), 1), (4L, v(1), 1))
-      .toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$tmp/embeddings.parquet")
-    Seq((1L, "p q r s t"), (2L, "x y z w u"),       // same vec, diff text
-      (3L, "m n o p q"), (4L, "m n o p q"))          // same vec, same text
-      .toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$tmp/documents.parquet")
-    val out = graft.operators.MultimodalOps.captionDedup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getDouble(2), r.getDouble(3), r.getBoolean(4)))).toMap
-    assert(out((1L, 2L)) == ((1.0, 0.0, true)), s"got ${out((1L, 2L))}")
-    assert(out((3L, 4L)) == ((1.0, 1.0, false)), s"got ${out((3L, 4L))}")
-    // orthogonal cross pairs are below the cosine bar: never flagged
-    assert(out.forall { case (k, v) =>
-      k == (1L, 2L) || k == (3L, 4L) || !v._3 })
-    // the LSH scale sibling: every pair it emits appears in the exact
-    // report with the identical scores and flag, and the two planted
-    // identical-vector pairs (same sign bucket by construction) are found
-    val lsh = graft.operators.MultimodalOps.captionDedupLsh(spark, tmp)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getDouble(2), r.getDouble(3), r.getBoolean(4)))).toMap
-    lsh.foreach { case (k, v) => assert(out(k) == v, s"$k: $v vs ${out(k)}") }
-    assert(lsh.contains((1L, 2L)) && lsh.contains((3L, 4L)))
+    withTempDir("capdd") { dir =>
+      val tmp = dir.toString
+      Seq((1L, v(0), 0), (2L, v(0), 0), (3L, v(1), 1), (4L, v(1), 1))
+        .toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$tmp/embeddings.parquet")
+      Seq((1L, "p q r s t"), (2L, "x y z w u"),       // same vec, diff text
+        (3L, "m n o p q"), (4L, "m n o p q"))          // same vec, same text
+        .toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$tmp/documents.parquet")
+      val out = graft.operators.MultimodalOps.captionDedup(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          ((r.getDouble(2), r.getDouble(3), r.getBoolean(4)))).toMap
+      assert(out((1L, 2L)) == ((1.0, 0.0, true)), s"got ${out((1L, 2L))}")
+      assert(out((3L, 4L)) == ((1.0, 1.0, false)), s"got ${out((3L, 4L))}")
+      // orthogonal cross pairs are below the cosine bar: never flagged
+      assert(out.forall { case (k, v) =>
+        k == (1L, 2L) || k == (3L, 4L) || !v._3 })
+      // the LSH scale sibling: every pair it emits appears in the exact
+      // report with the identical scores and flag, and the two planted
+      // identical-vector pairs (same sign bucket by construction) are found
+      val lsh = graft.operators.MultimodalOps.captionDedupLsh(spark, tmp)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          ((r.getDouble(2), r.getDouble(3), r.getBoolean(4)))).toMap
+      lsh.foreach { case (k, v) => assert(out(k) == v, s"$k: $v vs ${out(k)}") }
+      assert(lsh.contains((1L, 2L)) && lsh.contains((3L, 4L)))
+    }
   }
 
   test("jacobiEigenvalues matches the closed-form 2x2 spectrum") {
@@ -259,19 +263,21 @@ class SimilaritySpec extends SparkTestBase {
     // eigenvalues 4, 1, 0... -> ratios 0.8, 0.2; cumulative 0.8, 1.0
     def v(a: Float, b: Float): Array[Float] =
       Array(a, b) ++ Array.fill(62)(0f)
-    val tmp = java.nio.file.Files.createTempDirectory("pca").toString
-    Seq((1L, v(2f, 1f), 0), (2L, v(2f, -1f), 0),
-      (3L, v(-2f, 1f), 1), (4L, v(-2f, -1f), 1))
-      .toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$tmp/embeddings.parquet")
-    val out = SimilarityOps.embedPca(spark, tmp).collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    assert(out.length == 8)
-    assert(out(0) == ((0, 4.0, 0.8, 0.8)), s"got ${out(0)}")
-    assert(out(1) == ((1, 1.0, 0.2, 1.0)), s"got ${out(1)}")
-    out.drop(2).foreach { case (_, ev, ratio, cum) =>
-      assert(math.abs(ev) < 1e-6 && math.abs(ratio) < 1e-6
-        && math.abs(cum - 1.0) < 1e-6)
+    withTempDir("pca") { dir =>
+      val tmp = dir.toString
+      Seq((1L, v(2f, 1f), 0), (2L, v(2f, -1f), 0),
+        (3L, v(-2f, 1f), 1), (4L, v(-2f, -1f), 1))
+        .toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$tmp/embeddings.parquet")
+      val out = SimilarityOps.embedPca(spark, tmp).collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      assert(out.length == 8)
+      assert(out(0) == ((0, 4.0, 0.8, 0.8)), s"got ${out(0)}")
+      assert(out(1) == ((1, 1.0, 0.2, 1.0)), s"got ${out(1)}")
+      out.drop(2).foreach { case (_, ev, ratio, cum) =>
+        assert(math.abs(ev) < 1e-6 && math.abs(ratio) < 1e-6
+          && math.abs(cum - 1.0) < 1e-6)
+      }
     }
   }
 

@@ -10,41 +10,46 @@ import graft.SparkTestBase
 class StatOpsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def writeDocs(rows: Seq[(Long, String, Long)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stat").toString
-    rows.toDF("doc_id", "source", "n_chars")
-      .withColumn("text", lit("x")).withColumn("lang", lit("en"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    tmp
-  }
+  /** Run `body` on a temp test directory whose documents table holds
+    * `rows` as (doc_id, source, n_chars). */
+  private def withDocs[T](rows: Seq[(Long, String, Long)])(body: String => T): T =
+    withTempDir("graft-stat") { dir =>
+      val tmp = dir.toString
+      rows.toDF("doc_id", "source", "n_chars")
+        .withColumn("text", lit("x")).withColumn("lang", lit("en"))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      body(tmp)
+    }
 
   test("ksTest matches the definitional ECDF max-gap on a crafted table") {
     // source a: lengths 1,2,3 ; source b: lengths 3,4,5,6
-    val tmp = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "a", 1L), (2L, "a", 2L), (3L, "a", 3L),
-      (4L, "b", 3L), (5L, "b", 4L), (6L, "b", 5L), (7L, "b", 6L)))
-    val out = StatOps.ksTest(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    // for source a vs rest(b): max gap at v=3 (F_a=1, F_b=1/4) -> D=0.75;
-    // the KS statistic is symmetric under swapping the samples
-    assert(out == Seq(("a", 3L, 0.75), ("b", 4L, 0.75)), s"got $out")
+      (4L, "b", 3L), (5L, "b", 4L), (6L, "b", 5L), (7L, "b", 6L))) { tmp =>
+      val out = StatOps.ksTest(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+      // for source a vs rest(b): max gap at v=3 (F_a=1, F_b=1/4) -> D=0.75;
+      // the KS statistic is symmetric under swapping the samples
+      assert(out == Seq(("a", 3L, 0.75), ("b", 4L, 0.75)), s"got $out")
+    }
   }
 
   test("mannWhitney matches hand-computed midranks on a crafted table") {
     // combined sorted: 1,2,3,3,4,5,6 -> midranks 1,2,3.5,3.5,5,6,7
     // source a = {1,2,3}: R=6.5, U = 6.5 - 3*4/2 = 0.5
-    val tmp = writeDocs(Seq(
+    withDocs(Seq(
       (1L, "a", 1L), (2L, "a", 2L), (3L, "a", 3L),
-      (4L, "b", 3L), (5L, "b", 4L), (6L, "b", 5L), (7L, "b", 6L)))
-    val out = StatOps.mannWhitney(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    val a = out.find(_._1 == "a").get
-    assert(a._3 == 0.5, s"U_a = ${a._3}")
-    // z = (0.5 - 6)/sqrt(12/12*(8 - 6/42)) = -5.5/sqrt(7.857142857) = -1.9621
-    assert(math.abs(a._4 - -1.9621) < 1e-4, s"z_a = ${a._4}")
-    // U_a + U_b = n_a * n_b
-    val b = out.find(_._1 == "b").get
-    assert(a._3 + b._3 == 12.0)
+      (4L, "b", 3L), (5L, "b", 4L), (6L, "b", 5L), (7L, "b", 6L))) { tmp =>
+      val out = StatOps.mannWhitney(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      val a = out.find(_._1 == "a").get
+      assert(a._3 == 0.5, s"U_a = ${a._3}")
+      // z = (0.5 - 6)/sqrt(12/12*(8 - 6/42)) = -5.5/sqrt(7.857142857) = -1.9621
+      assert(math.abs(a._4 - -1.9621) < 1e-4, s"z_a = ${a._4}")
+      // U_a + U_b = n_a * n_b
+      val b = out.find(_._1 == "b").get
+      assert(a._3 + b._3 == 12.0)
+    }
   }
 
   test("ks/mw invariants on the real fixture: bounds and U symmetry") {
@@ -60,45 +65,49 @@ class StatOpsSpec extends SparkTestBase {
   }
 
   test("scd2 collapses runs and closes bounds on a crafted change stream") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scd2").toString
-    Seq(
-      (1L, 1L, "view", 1000000L), (2L, 1L, "view", 2000000L),
-      (3L, 1L, "click", 3000000L), (4L, 1L, "view", 4000000L),
-      (5L, 2L, "signup", 1500000L))
-      .toDF("event_id", "user_id", "event_type", "us")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = RelationalOps.scd2(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-        r.getLong(3), if (r.isNullAt(4)) -1L else r.getLong(4), r.getInt(5)))
-    assert(out.toSeq == Seq(
-      (1L, 1, "view", 1000000L, 3000000L, 0),
-      (1L, 2, "click", 3000000L, 4000000L, 0),
-      (1L, 3, "view", 4000000L, -1L, 1),
-      (2L, 1, "signup", 1500000L, -1L, 1)), s"got ${out.toSeq}")
+    withTempDir("graft-scd2") { dir =>
+      val tmp = dir.toString
+      Seq(
+        (1L, 1L, "view", 1000000L), (2L, 1L, "view", 2000000L),
+        (3L, 1L, "click", 3000000L), (4L, 1L, "view", 4000000L),
+        (5L, 2L, "signup", 1500000L))
+        .toDF("event_id", "user_id", "event_type", "us")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("us")).as("ts"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val out = RelationalOps.scd2(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+          r.getLong(3), if (r.isNullAt(4)) -1L else r.getLong(4), r.getInt(5)))
+      assert(out.toSeq == Seq(
+        (1L, 1, "view", 1000000L, 3000000L, 0),
+        (1L, 2, "click", 3000000L, 4000000L, 0),
+        (1L, 3, "view", 4000000L, -1L, 1),
+        (2L, 1, "signup", 1500000L, -1L, 1)), s"got ${out.toSeq}")
+    }
   }
 
   test("abTest matches a hand-computed two-proportion z on crafted events") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ab").toString
-    // users 0,2 (variant A): first events purchase, view -> conv_a=1/2
-    // users 1,3 (variant B): first events view, view   -> conv_b=0/2
-    Seq(
-      (1L, 0L, "purchase", 1000000L), (2L, 0L, "view", 2000000L),
-      (3L, 2L, "view", 1000000L), (4L, 2L, "purchase", 2000000L),
-      (5L, 1L, "view", 1000000L), (6L, 3L, "view", 1000000L))
-      .toDF("event_id", "user_id", "event_type", "us")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val r = StatOps.abTest(spark, tmp).collect().head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      == ((2L, 2L, 1L, 0L)))
-    assert(r.getDouble(4) == 0.5 && r.getDouble(5) == 0.0)
-    // p=1/4, z = 0.5 / sqrt(0.25*0.75*(0.5+0.5)) = 1.1547
-    assert(math.abs(r.getDouble(6) - 1.1547) < 1e-4, s"z=${r.getDouble(6)}")
+    withTempDir("graft-ab") { dir =>
+      val tmp = dir.toString
+      // users 0,2 (variant A): first events purchase, view -> conv_a=1/2
+      // users 1,3 (variant B): first events view, view   -> conv_b=0/2
+      Seq(
+        (1L, 0L, "purchase", 1000000L), (2L, 0L, "view", 2000000L),
+        (3L, 2L, "view", 1000000L), (4L, 2L, "purchase", 2000000L),
+        (5L, 1L, "view", 1000000L), (6L, 3L, "view", 1000000L))
+        .toDF("event_id", "user_id", "event_type", "us")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("us")).as("ts"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val r = StatOps.abTest(spark, tmp).collect().head
+      assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        == ((2L, 2L, 1L, 0L)))
+      assert(r.getDouble(4) == 0.5 && r.getDouble(5) == 0.0)
+      // p=1/4, z = 0.5 / sqrt(0.25*0.75*(0.5+0.5)) = 1.1547
+      assert(math.abs(r.getDouble(6) - 1.1547) < 1e-4, s"z=${r.getDouble(6)}")
+    }
   }
 
   test("bootstrap: thresholds well-formed, CI brackets the point mean") {
@@ -120,19 +129,21 @@ class StatOpsSpec extends SparkTestBase {
   }
 
   test("anova matches the hand-computed F on a crafted two-group table") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-anova").toString
-    // group a: 1,2,3 (mean 2); group b: 5,6,7 (mean 6); grand mean 4
-    // SSB = 3*4 + 3*4 = 24, SSW = 2 + 2 = 4, F = (24/1)/(4/4) = 24
-    Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "a", 3.0),
-      (4L, "b", 5.0), (5L, "b", 6.0), (6L, "b", 7.0))
-      .toDF("event_id", "event_type", "value")
-      .select(col("event_id"), lit(1L).as("user_id"), col("event_type"),
-        timestamp_micros(col("event_id") * 1000000).as("ts"),
-        col("value"), lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val r = StatOps.anova(spark, tmp).collect().head
-    assert(r.getInt(0) == 2 && r.getLong(1) == 6L)
-    assert(r.getDouble(2) == 24.0, s"F=${r.getDouble(2)}")
+    withTempDir("graft-anova") { dir =>
+      val tmp = dir.toString
+      // group a: 1,2,3 (mean 2); group b: 5,6,7 (mean 6); grand mean 4
+      // SSB = 3*4 + 3*4 = 24, SSW = 2 + 2 = 4, F = (24/1)/(4/4) = 24
+      Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "a", 3.0),
+        (4L, "b", 5.0), (5L, "b", 6.0), (6L, "b", 7.0))
+        .toDF("event_id", "event_type", "value")
+        .select(col("event_id"), lit(1L).as("user_id"), col("event_type"),
+          timestamp_micros(col("event_id") * 1000000).as("ts"),
+          col("value"), lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val r = StatOps.anova(spark, tmp).collect().head
+      assert(r.getInt(0) == 2 && r.getLong(1) == 6L)
+      assert(r.getDouble(2) == 24.0, s"F=${r.getDouble(2)}")
+    }
   }
 
   test("kAnonymity reports exactly the sub-k classes") {
@@ -160,38 +171,42 @@ class StatOpsSpec extends SparkTestBase {
   }
 
   test("holtSmooth matches the hand-computed recurrence on a crafted series") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-holt").toString
-    // one type, three hours with totals 10, 12, 14:
-    // l0=10 b0=0; x=12: l=11, b=0.3; x=14: l=12.65, b=0.705; fc=13.355
-    Seq((1L, 1L, "click", 0L, 10.0), (2L, 1L, "click", 3600000000L, 12.0),
-      (3L, 2L, "click", 7200000000L, 14.0))
-      .toDF("event_id", "user_id", "event_type", "us", "value")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"), col("value"),
-        lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val r = graft.operators.EventOps.holtSmooth(spark, tmp).collect().head
-    assert(r.getString(0) == "click" && r.getInt(1) == 3)
-    assert(r.getDouble(2) == 12.65 && r.getDouble(3) == 0.705
-      && r.getDouble(4) == 13.355, s"got $r")
+    withTempDir("graft-holt") { dir =>
+      val tmp = dir.toString
+      // one type, three hours with totals 10, 12, 14:
+      // l0=10 b0=0; x=12: l=11, b=0.3; x=14: l=12.65, b=0.705; fc=13.355
+      Seq((1L, 1L, "click", 0L, 10.0), (2L, 1L, "click", 3600000000L, 12.0),
+        (3L, 2L, "click", 7200000000L, 14.0))
+        .toDF("event_id", "user_id", "event_type", "us", "value")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          timestamp_micros(col("us")).as("ts"), col("value"),
+          lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val r = graft.operators.EventOps.holtSmooth(spark, tmp).collect().head
+      assert(r.getString(0) == "click" && r.getInt(1) == 3)
+      assert(r.getDouble(2) == 12.65 && r.getDouble(3) == 0.705
+        && r.getDouble(4) == 13.355, s"got $r")
+    }
   }
 
   test("lDiversity flags homogeneous QI classes on a crafted customer set") {
     // (1,A): bands {0,0,2} -> 2 distinct < 3 -> not diverse
     // (1,B): bands {0,1,2} -> 3 distinct     -> diverse
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ldiv").toString
-    Seq(
-      (1L, "c1", 1, 100.0, "A"), (2L, "c2", 1, 200.0, "A"),
-      (3L, "c3", 1, 2100.0, "A"),
-      (4L, "c4", 1, 0.0, "B"), (5L, "c5", 1, 1000.0, "B"),
-      (6L, "c6", 1, 2000.0, "B"))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .write.mode("overwrite").parquet(s"$tmp/customer.parquet")
-    val out = StatOps.lDiversity(spark, tmp).collect()
-      .map(r => (r.getInt(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
-    assert(out((1, "A")) == ((3L, 2L, false)), s"got ${out((1, "A"))}")
-    assert(out((1, "B")) == ((3L, 3L, true)), s"got ${out((1, "B"))}")
+    withTempDir("graft-ldiv") { dir =>
+      val tmp = dir.toString
+      Seq(
+        (1L, "c1", 1, 100.0, "A"), (2L, "c2", 1, 200.0, "A"),
+        (3L, "c3", 1, 2100.0, "A"),
+        (4L, "c4", 1, 0.0, "B"), (5L, "c5", 1, 1000.0, "B"),
+        (6L, "c6", 1, 2000.0, "B"))
+        .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+        .write.mode("overwrite").parquet(s"$tmp/customer.parquet")
+      val out = StatOps.lDiversity(spark, tmp).collect()
+        .map(r => (r.getInt(0), r.getString(1)) ->
+          ((r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
+      assert(out((1, "A")) == ((3L, 2L, false)), s"got ${out((1, "A"))}")
+      assert(out((1, "B")) == ((3L, 3L, true)), s"got ${out((1, "B"))}")
+    }
   }
 
   test("entropyLDiversity matches hand-computed entropy and lines up with " +

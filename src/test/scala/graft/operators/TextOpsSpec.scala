@@ -154,12 +154,14 @@ class TextOpsSpec extends SparkTestBase {
     val edge = Seq((1L, "x x x x"), (2L, "a b c d")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("entropy").toString
-    edge.write.parquet(s"$tmp/documents.parquet")
-    val e = TextOps.tokenEntropy(spark, tmp).collect()
-      .map(r => r.getLong(0) -> (r.getDouble(2), r.getDouble(3))).toMap
-    assert(e(1L) == ((0.25, 0.0)))
-    assert(e(2L) == ((1.0, 2.0)))
+    withTempDir("entropy") { dir =>
+      val tmp = dir.toString
+      edge.write.parquet(s"$tmp/documents.parquet")
+      val e = TextOps.tokenEntropy(spark, tmp).collect()
+        .map(r => r.getLong(0) -> (r.getDouble(2), r.getDouble(3))).toMap
+      assert(e(1L) == ((0.25, 0.0)))
+      assert(e(2L) == ((1.0, 2.0)))
+    }
   }
 
   test("tokenFertility matches hand-computed subword/word/char ratios") {
@@ -172,13 +174,15 @@ class TextOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("fert").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = TextOps.tokenFertility(spark, tmp).collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-    assert(out("en") == ((2L, 2.0, 1.25)), s"got ${out("en")}")
-    assert(out("de") == ((1L, 1.0, 2.0)), s"got ${out("de")}")
+    withTempDir("fert") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = TextOps.tokenFertility(spark, tmp).collect()
+        .map(r => r.getString(0) ->
+          ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
+      assert(out("en") == ((2L, 2.0, 1.25)), s"got ${out("en")}")
+      assert(out("de") == ((1L, 1.0, 2.0)), s"got ${out("de")}")
+    }
   }
 
   test("langTrigram classifies disjoint-alphabet langs perfectly; short doc falls back") {
@@ -193,11 +197,13 @@ class TextOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("tri").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = TextOps.langTrigram(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-    assert(out == Seq(("aa", "aa", 3L), ("bb", "bb", 2L)), s"got $out")
+    withTempDir("tri") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = TextOps.langTrigram(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+      assert(out == Seq(("aa", "aa", 3L), ("bb", "bb", 2L)), s"got $out")
+    }
   }
 
   test("typeTokenRatio matches hand-computed TTR and hapax fraction") {
@@ -207,14 +213,16 @@ class TextOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("ttr").toString
-    docs.write.parquet(s"$tmp/documents.parquet")
-    val out = TextOps.typeTokenRatio(spark, tmp).collect()
-    assert(out.length == 1)
-    val r = out.head
-    assert((r.getString(0), r.getLong(1), r.getLong(2),
-      r.getDouble(3), r.getDouble(4)) == (("s", 3L, 5L, 0.6, 0.6667)),
-      s"got $r")
+    withTempDir("ttr") { dir =>
+      val tmp = dir.toString
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val out = TextOps.typeTokenRatio(spark, tmp).collect()
+      assert(out.length == 1)
+      val r = out.head
+      assert((r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3), r.getDouble(4)) == (("s", 3L, 5L, 0.6, 0.6667)),
+        s"got $r")
+    }
   }
 
   test("calibration: bins partition the corpus; per-bin stats are self-consistent") {

@@ -10,13 +10,19 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.{Args, Status}
 
 import graft.SparkTestBase
 import graft.sources._
 
 class TaxiPipelineSpec extends SparkTestBase {
 
-  private lazy val tmp = Files.createTempDirectory("graft-pipe").toString
+  /** The suite's scratch directory (databases, downloads, exports), made
+    * around the whole run and deleted when its last test ends. */
+  private var tmp: String = _
+  override def run(testName: Option[String], args: Args): Status =
+    withTempDir("graft-pipe") { dir => tmp = dir.toString; super.run(testName, args) }
+
   private def res(name: String): String =
     getClass.getResource(s"/$name").getPath
 

@@ -1,70 +1,57 @@
 package graft.plans
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SparkTestBase, Tables}
+import graft.{SparkEntry, SparkTestBase, Tables}
+import graft.operators.SimilarityOps
 
+/** Top-k per group is Catalyst's `row_number() <= k` window (planned as a
+  * Partial WindowGroupLimit before the group-key exchange and a Final one
+  * after it; PlanQualitySpec pins that shape). */
 class TopKPerGroupSpec extends SparkTestBase {
 
-  test("custom TopKPerGroupExec matches the window row_number formulation") {
-    val orders = Tables.orders(spark, sf)
-    val custom = TopK.perGroup(orders, Seq("o_orderpriority"),
-      Seq(("o_totalprice", false), ("o_orderkey", true)), 5)
-      .select("o_orderpriority", "o_orderkey", "o_totalprice")
-      .orderBy("o_orderpriority", "o_orderkey")
-      .collect()
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val viaWindow = orders.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("o_orderpriority", "o_orderkey", "o_totalprice")
-      .orderBy("o_orderpriority", "o_orderkey")
-      .collect()
-    assert(custom.sameElements(viaWindow))
-  }
-
-  test("the physical plan contains the custom exec and no window sort") {
-    val df = TopK.perGroup(Tables.orders(spark, sf),
-      Seq("o_orderpriority"), Seq(("o_totalprice", false), ("o_orderkey", true)), 3)
-    // SparkPlan.nodeName strips the "Exec" suffix in plan strings
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("TopKPerGroup"), p)
-    assert(!p.contains("Window"), p)
-  }
-
-  test("GraftExtensions plans the operator without the runtime fallback") {
-    // Build the logical node directly, with no runtime extraStrategies —
-    // planning must succeed purely through the SparkSessionExtensions-
-    // registered strategy.
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, NullsFirst, NullsLast, SortOrder}
-    val saved = spark.experimental.extraStrategies
-    try {
-      spark.experimental.extraStrategies = Nil
-      val node = TopKPerGroup(
-        Seq(UnresolvedAttribute.quoted("o_orderpriority")),
-        Seq(SortOrder(UnresolvedAttribute.quoted("o_totalprice"),
-          Descending, NullsLast, Seq.empty),
-          SortOrder(UnresolvedAttribute.quoted("o_orderkey"),
-            Ascending, NullsFirst, Seq.empty)),
-        3, Tables.orders(spark, sf).queryExecution.logical)
-      val df = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
-      assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
-      assert(df.count() > 0)
-    } finally spark.experimental.extraStrategies = saved
+  test("q_topk_custom equals q_topk minus rn") {
+    val custom = SparkEntry.queries("q_topk_custom")(spark, sf)
+    assert(custom.columns.toSeq ==
+      Seq("o_orderpriority", "o_orderkey", "o_totalprice"))
+    val got = custom.collect().toSeq
+    val ranked = SparkEntry.queries("q_topk")(spark, sf).drop("rn")
+      .orderBy("o_orderpriority", "o_orderkey").collect().toSeq
+    assert(got == ranked)
+    // and a driver-side reference: each priority's 5 dearest orders, ties
+    // to the smaller key
+    val want = Tables.orders(spark, sf)
+      .select("o_orderpriority", "o_orderkey", "o_totalprice").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).values
+      .flatMap(_.sortBy(r => (-r._3, r._2)).take(5))
+      .map(r => (r._1, r._2, BigDecimal(r._3).setScale(4,
+        BigDecimal.RoundingMode.HALF_UP).toDouble))
+      .toSeq.sortBy(r => (r._1, r._2))
+    assert(want.size == 25)
+    assert(got.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))) == want)
   }
 
   test("probe: k larger than any group returns whole groups; k=1 returns maxima") {
-    val orders = Tables.orders(spark, sf)
-    val all = TopK.perGroup(orders, Seq("o_orderstatus"),
-      Seq(("o_orderkey", true)), Int.MaxValue).count()
-    assert(all == orders.count())
-    val top1 = TopK.perGroup(orders, Seq("o_orderstatus"),
-      Seq(("o_totalprice", false), ("o_orderkey", true)), 1)
-    val expected = orders.groupBy("o_orderstatus")
-      .agg(max(struct(col("o_totalprice"), col("o_orderkey") * -1)).as("m"))
-      .count()
-    assert(top1.count() == expected)
+    val emb = Tables.embeddings(spark, sf)
+    val probes = emb.filter(col("vec_id") < 3)
+    val (nProbes, n) = (probes.count(), emb.count())
+    val all = SimilarityOps.bruteForceTopK(probes, emb, Int.MaxValue)
+    // every probe ranks every other vector, ranks 1..n-1
+    val ranks = all.groupBy("q_id")
+      .agg(count(lit(1)).as("c"), min("rn").as("lo"), max("rn").as("hi"))
+      .collect()
+    assert(ranks.length == nProbes)
+    ranks.foreach { r =>
+      assert(r.getLong(1) == n - 1 && r.getInt(2) == 1 && r.getInt(3) == n - 1, r)
+    }
+    // k = 1 keeps each probe's maximum under (cos_sim desc, cand_id asc)
+    val best = all.groupBy("q_id")
+      .agg(max(struct(col("cos_sim"), (-col("cand_id")).as("neg"))).as("m"))
+      .select(col("q_id"), (-col("m.neg")).as("cand_id"), col("m.cos_sim"))
+      .orderBy("q_id").collect().toSeq
+    val top1 = SimilarityOps.bruteForceTopK(probes, emb, 1)
+    assert(top1.filter(col("rn") =!= 1).isEmpty)
+    assert(top1.select("q_id", "cand_id", "cos_sim").collect().toSeq == best)
   }
 }
