@@ -109,7 +109,7 @@ object ScaleIndex {
     "q_ransac" -> "flat (r12, |days|-bounded)",
     "q_knn_recall" -> "sample-sized exact side (r11)",
     "q_kcenter" -> "0.67 (r10)",
-    "q_kcore" -> "1.21 (r10: |E|-linear peel floor + |V| broadcast builds; dial: shuffle semi-joins past the broadcast budget)",
+    "q_kcore" -> "1.21 (r10: |E|-linear peel floor + |V| broadcast builds; semi-joins shuffle once the surv checkpoint outgrows the broadcast threshold)",
     "q_kn_bigram" -> "0.38 (r10)",
     "q_lang_trigram" -> "0.80 (r7)",
     "q_mmr" -> "0.30 (r10)",

@@ -4957,7 +4957,6 @@ object SparkEntry {
     // every M-step statistic passes the stable6 two-stage barrier (the
     // unrolled-GD/Lloyd recipe), so all rounds replay bit-identically
     "q_em_gmm" -> {
-      def st6(x: String) = s"CAST(round(CAST(($x) AS DECIMAL(20,8)), 6) AS DOUBLE)"
       val s2raw = "sxx / n - (sx / n) * (sx / n)"
       val rounds = (1 to 5).map { t =>
         s"e$t AS (SELECT x.x, " +
@@ -4971,20 +4970,20 @@ object SparkEntry {
           "SUM(num2 / (num1 + num2) * x) AS sx2, " +
           "SUM(num2 / (num1 + num2) * x * x) AS sxx2, " +
           s"COUNT(*) AS n FROM e$t), " +
-          s"p$t AS MATERIALIZED (SELECT ${st6("sr1 / n")} AS w, " +
-          st6("sx1 / sr1") + " AS mu1, " +
-          st6(s"sxx1 / sr1 - ${st6("sx1 / sr1")} * ${st6("sx1 / sr1")}") + " AS s21, " +
-          st6("sx2 / sr2") + " AS mu2, " +
-          st6(s"sxx2 / sr2 - ${st6("sx2 / sr2")} * ${st6("sx2 / sr2")}") + " AS s22 " +
+          s"p$t AS MATERIALIZED (SELECT ${r6("sr1 / n")} AS w, " +
+          r6("sx1 / sr1") + " AS mu1, " +
+          r6(s"sxx1 / sr1 - ${r6("sx1 / sr1")} * ${r6("sx1 / sr1")}") + " AS s21, " +
+          r6("sx2 / sr2") + " AS mu2, " +
+          r6(s"sxx2 / sr2 - ${r6("sx2 / sr2")} * ${r6("sx2 / sr2")}") + " AS s22 " +
           s"FROM m$t)"
       }.mkString(", ")
       "WITH x AS MATERIALIZED (SELECT l_extendedprice / 10000.0 AS x FROM lineitem), " +
         "i AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(x * x) AS sxx FROM x), " +
         "p0 AS MATERIALIZED (SELECT 0.5 AS w, " +
-        st6(s"${st6("sx / n")} - 0.5 * sqrt(${st6(s2raw)})") + " AS mu1, " +
-        st6(s2raw) + " AS s21, " +
-        st6(s"${st6("sx / n")} + 0.5 * sqrt(${st6(s2raw)})") + " AS mu2, " +
-        st6(s2raw) + " AS s22 FROM i), " +
+        r6(s"${r6("sx / n")} - 0.5 * sqrt(${r6(s2raw)})") + " AS mu1, " +
+        r6(s2raw) + " AS s21, " +
+        r6(s"${r6("sx / n")} + 0.5 * sqrt(${r6(s2raw)})") + " AS mu2, " +
+        r6(s2raw) + " AS s22 FROM i), " +
         rounds + " " +
         "SELECT component, weight, mu, sigma2 FROM (" +
         s"SELECT 1 AS component, ${r4("w")} AS weight, ${r4("mu1")} AS mu, ${r4("s21")} AS sigma2 FROM p5 " +

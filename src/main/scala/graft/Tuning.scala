@@ -3,12 +3,13 @@ package graft
 /** The engine's SCALE DIALS in one place (round 11, closing the r10
   * verdict's consolidation ask). Every dial below gates a
   * RESULT-INVISIBLE execution choice — cache vs recompute, driver-local
-  * vs distributed, broadcast vs shuffle, sketch sizing ahead of an exact
-  * verify — so flipping any of them can change cost, never answers.
-  * `TuningSpec` asserts exactly that: each gated operator produces
-  * identical results with its threshold forced to both sides. The gated
-  * operators take these as default parameter values, so a deployment can
-  * re-dial per call without recompiling.
+  * vs distributed, a forced probe-side broadcast, sketch sizing ahead of
+  * an exact verify — so flipping any of them can change cost, never
+  * answers. `TuningSpec` asserts exactly that: each gated operator
+  * produces identical results with its threshold forced to both sides.
+  * The gated operators take these as default parameter values, so a
+  * deployment can re-dial per call without recompiling.
+  * Checkpoint joins need no dial: Catalyst sizes them from their statistics.
   *
   * The values are MEASURED, not guessed — each dial's scaladoc records
   * the experiment that set it (SCALE.md holds the full numbers).
@@ -33,17 +34,6 @@ object Tuning {
     * shuffle cost is amortized over more work. Consumed by
     * [[graft.operators.DedupOps.connectedComponents]]. */
   val LocalUnionFindMaxEdges: Long = 1000000L
-
-  /** Surviving-node-set bound for broadcasting k-core's per-round
-    * semi-join side: peeling state is |V| rows and shrinks monotonically,
-    * so at every tested scale it broadcasts (sf1 |V| ≈ 2·10⁴ — the 18.6 →
-    * 3.4 s state-vs-edges rework measured WITH broadcast semi-joins); at
-    * a 100 TB |V| past executor memory the same round is two plain
-    * shuffle joins of the un-shuffled edge table. The count that gates
-    * the choice is already computed every round for the convergence
-    * check, so the dial is free. Consumed by
-    * [[graft.operators.GraphOps.kCoreProfile]]. */
-  val KCoreBroadcastMaxSurvRows: Long = 10000000L
 
   /** Bloom-filter sizing for the sketch-ahead-of-exact-join family
     * (bloom-gated incremental dedup, bloom semi-join): `expectedNumItems

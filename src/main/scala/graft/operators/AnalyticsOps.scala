@@ -808,7 +808,7 @@ object AnalyticsOps {
     val scalars = perCust.agg(
       sum(col("rev")).as("total_rev"),
       count(lit(1)).as("n_cust"))
-    perCust.crossJoin(broadcast(scalars))
+    perCust.crossJoin(scalars)
       .agg(
         max(col("n_cust")).as("n_cust"),
         stableRound4(sum(when(col("rev") >= lit(p50), col("rev"))

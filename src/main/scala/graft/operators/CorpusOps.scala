@@ -138,9 +138,9 @@ object CorpusOps {
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("nc"))
       .orderBy(col("nc").desc, col("tok")).limit(vocabK)
     val corpusTotal = vocab.agg(sum(col("nc")).cast("double").as("ct"))
-    val q = vocab.crossJoin(broadcast(corpusTotal))
+    val q = vocab.crossJoin(corpusTotal)
       .select(col("tok"), (col("nc") / col("ct")).as("q"))
-    val srcCounts = toks.join(broadcast(vocab.select(col("tok"))), Seq("tok"))
+    val srcCounts = toks.join(vocab.select(col("tok")), Seq("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("ns"))
     val srcTotals = srcCounts.groupBy(col("source"))
       .agg(sum(col("ns")).cast("double").as("st"))
@@ -149,7 +149,7 @@ object CorpusOps {
     // halves from the joined (p, q) pairs plus the missing-q mass
     val pq = srcCounts.join(srcTotals, Seq("source"))
       .select(col("source"), col("tok"), (col("ns") / col("st")).as("p"))
-      .join(broadcast(q), Seq("tok"))
+      .join(q, Seq("tok"))
     val kl = pq.groupBy(col("source")).agg(
       sum(col("p") * log(col("p") * 2.0 / (col("p") + col("q"))))
         .as("kl_p"),
@@ -278,7 +278,7 @@ object CorpusOps {
       .agg(min(struct((-col("tf")).as("neg_tf"), col("token"))).as("best"))
       .select(col("doc_id"), col("best.token").as("token"),
         (-col("best.neg_tf")).as("tf"))
-      .join(broadcast(df), "token")
+      .join(df, "token")
       .crossJoin(broadcast(nDocs))
       .select(
         col("doc_id"),
@@ -509,12 +509,12 @@ object CorpusOps {
     val total = counts.agg(sum(col("n")).as("total"))
     val t = counts.orderBy(col("n").desc, col("token")).limit(k)
     t.as("a")
-      .join(broadcast(t.as("b")),
+      .join(t.as("b"),
         col("b.n") > col("a.n")
           || (col("b.n") === col("a.n") && col("b.token") <= col("a.token")))
       .groupBy(col("a.token").as("token"), col("a.n").as("n"))
       .agg(sum(col("b.n")).as("cum"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("token"), col("n"),
         stableRound4(col("cum").cast("double") / col("total"))
           .as("cum_share"))
@@ -908,7 +908,7 @@ object CorpusOps {
       .orderBy(col("df").desc, col("token"))
       .limit(vocabK)
     val total = docs.agg(count(lit(1)).as("n_total"))
-    val vt = docTok.join(broadcast(vocab.select(col("token"))), "token")
+    val vt = docTok.join(vocab.select(col("token")), "token")
       .select(col("doc_id"), col("token"))
     // self-join on doc_id, NOT a per-doc array comprehension: the
     // collect_set + nested-transform pair expansion was measured 1.8×
@@ -922,10 +922,10 @@ object CorpusOps {
       .groupBy(col("a.token").as("token_a"), col("b.token").as("token_b"))
       .agg(count(lit(1)).as("n_ab"))
     pairs
-      .join(broadcast(vocab.select(col("token").as("token_a"),
-        col("df").as("df_a"))), "token_a")
-      .join(broadcast(vocab.select(col("token").as("token_b"),
-        col("df").as("df_b"))), "token_b")
+      .join(vocab.select(col("token").as("token_a"),
+        col("df").as("df_a")), "token_a")
+      .join(vocab.select(col("token").as("token_b"),
+        col("df").as("df_b")), "token_b")
       .crossJoin(broadcast(total))
       .select(col("token_a"), col("token_b"), col("n_ab"),
         col("df_a"), col("df_b"),
@@ -1411,13 +1411,13 @@ object CorpusOps {
       stableRound4(avg(-col("mean_logp"))).as("corpus_nll"))
     // |domains|-row frame read by the softmax normalizer AND the final
     // select — materialized so the two consumers share one computation
-    val excess = Materialize(perDomain.crossJoin(broadcast(baseline))
+    val excess = Materialize(perDomain.crossJoin(baseline)
       .select(col("source"), col("n_docs"), col("mean_nll"),
         col("corpus_nll"),
         greatest(col("mean_nll") - col("corpus_nll"), lit(0.0)).as("excess")))
     val z = excess.agg(sum(exp(lit(eta) * col("excess"))).as("z"),
       count(lit(1)).as("k"))
-    excess.crossJoin(broadcast(z))
+    excess.crossJoin(z)
       .select(col("source"), col("n_docs"), col("mean_nll"),
         stableRound4(col("excess")).as("excess_nll"),
         stableRound4(exp(lit(eta) * col("excess")) / col("z")).as("alpha"),
@@ -1506,7 +1506,7 @@ object CorpusOps {
     val totQ = corpus.agg(sum(col("n_q")).as("nq_tot"))
     val totT = target.agg(sum(col("n_t")).as("nt_tot"))
     val ratios = corpus.join(target, Seq("b"), "left")
-      .crossJoin(broadcast(totQ)).crossJoin(broadcast(totT))
+      .crossJoin(totQ).crossJoin(totT)
       .select(col("b"),
         (log((coalesce(col("n_t"), lit(0L)) + 1).cast("double")
           / (col("nt_tot") + buckets))
@@ -1532,8 +1532,8 @@ object CorpusOps {
     val nl = cells.groupBy(col("lang")).agg(sum(col("n_ls")).as("n_l"))
     val ns = cells.groupBy(col("source")).agg(sum(col("n_ls")).as("n_s"))
     val joined = cells
-      .join(broadcast(nl), "lang")
-      .join(broadcast(ns), "source")
+      .join(nl, "lang")
+      .join(ns, "source")
     val n = col("n_total").cast("double")
     joined
       .agg(sum(col("n_ls")).as("n_total"),
@@ -1544,12 +1544,12 @@ object CorpusOps {
           .as("mi_raw"))
       // marginal entropies come from the marginal tables (one row each,
       // joined as broadcast scalars), not from re-walking the cells
-      .join(broadcast(nl.agg(
+      .join(nl.agg(
         sum(col("n_l").cast("double") * log(col("n_l").cast("double")))
-          .as("sum_l_logl"))))
-      .join(broadcast(ns.agg(
+          .as("sum_l_logl")))
+      .join(ns.agg(
         sum(col("n_s").cast("double") * log(col("n_s").cast("double")))
-          .as("sum_s_logs"))))
+          .as("sum_s_logs")))
       .select(col("n_total"), col("n_cells"),
         // I = (Σ n_ls ln n_ls/(n_l n_s))/N + ln N
         stableRound4(col("mi_raw") / n + log(n)).as("mi_nats"),

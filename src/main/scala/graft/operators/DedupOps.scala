@@ -198,8 +198,8 @@ object DedupOps {
     * exploded fact table is filtered with a broadcast probe instead of
     * being shuffled a second time against a rare-set as large as itself.
     * At 100 TB the heavy set stays bounded by distinct-boilerplate volume,
-    * not corpus size; if it outgrows the broadcast row budget,
-    * capHeavyShingles automatically degrades to a shuffled anti-join. */
+    * not corpus size; if it outgrows the broadcast threshold, Catalyst
+    * plans a shuffled anti-join from its checkpoint's size. */
   private def cappedSurvivors(docs: DataFrame, dfCap: Int): DataFrame = {
     val ex = Materialize(
       Spread(docs)
@@ -285,22 +285,14 @@ object DedupOps {
 
   /** The df-cap step of [[ngramJaccardTopPairsCapped]], exposed for the
     * plan audit: drop rows whose shingle has document frequency > `dfCap`
-    * via a broadcast anti-probe of the (small) heavy set. */
-  private[graft] def capHeavyShingles(ex: DataFrame, dfCap: Int,
-      maxBroadcastRows: Long = 4_000_000L): DataFrame = {
-    // The heavy set's size is DATA-dependent (a boilerplate-heavy corpus or
-    // a low dfCap can blow it up), and a forced broadcast of an oversized
-    // frame OOMs the driver instead of degrading. Materialize once (it is
-    // needed for the probe anyway), count the checkpointed blocks (cheap),
-    // and only hint broadcast under a row budget — beyond it the same
-    // anti-join runs as a shuffled join, slower but never fatal.
+    * via an anti-probe of the heavy set, whose size is data-dependent: its
+    * checkpoint's size decides broadcast or shuffle. */
+  private[graft] def capHeavyShingles(ex: DataFrame, dfCap: Int): DataFrame = {
     val heavy = Materialize(ex.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > dfCap)
       .select(col("shingle")))
-    val probe =
-      if (heavy.count() <= maxBroadcastRows) broadcast(heavy) else heavy
-    ex.join(probe, Seq("shingle"), "left_anti")
+    ex.join(heavy, Seq("shingle"), "left_anti")
   }
 
   /** Declared-query wrapper on the session-shared survivor cache. */
@@ -726,7 +718,7 @@ object DedupOps {
         col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
     val stats = cands
-      .join(broadcast(truth.select(col("da"), col("db"), lit(1L).as("__t"))),
+      .join(truth.select(col("da"), col("db"), lit(1L).as("__t")),
         Seq("da", "db"), "left")
       .groupBy(col("bands"))
       .agg(count(lit(1)).as("n_cand"),
@@ -776,8 +768,8 @@ object DedupOps {
     // local union-find finishes in milliseconds instead of paying 3-4
     // shuffle stages per label-propagation round. The threshold bounds
     // driver memory (see LocalUnionFindMaxEdges); genuinely large graphs
-    // take the distributed loop below. The count is a local scan of the
-    // materialized blocks. The local path casts node ids through Long, so
+    // take the distributed loop below. The count is the checkpoint's own
+    // statistic (no job). The local path casts node ids through Long, so
     // it is only safe for integral key types — anything else (string ids,
     // decimals) would cast to null and silently collapse unrelated nodes
     // into one component; those routes take the distributed loop, which is
@@ -790,7 +782,7 @@ object DedupOps {
       case _ => false
     }
     if (!forceDistributed && integralKey
-        && e.count() * 2 <= localUnionFindMaxEdges)
+        && Materialize.rows(e) * 2 <= localUnionFindMaxEdges)
       return localUnionFind(sym)
     var labels = Materialize(
       sym.select(col("src").as("node")).distinct()

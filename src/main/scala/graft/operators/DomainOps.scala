@@ -165,7 +165,7 @@ object DomainOps {
       .select(lit(99).as("rule_id"), lit("__kept__").as("rule"),
         col("n_docs"), col("n_tokens"))
     ruleRows.reduce(_.unionAll(_)).unionAll(kept)
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("rule_id"), col("rule"), col("n_docs"), col("n_tokens"),
         stableRound4(col("n_docs") / col("tot_docs")).as("doc_share"))
       .orderBy(col("rule_id"))

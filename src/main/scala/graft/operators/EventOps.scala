@@ -766,9 +766,7 @@ object EventOps {
     // The C(|hours|,2)-row pair set is consumed twice by the exact-median
     // selection (sketch pass + bracket pass) and regenerated in each from
     // the checkpointed points, never written out itself (~|hours|² rows).
-    // The build side is broadcast EXPLICITLY: a Materialize'd frame has no
-    // size statistics, so Catalyst would plan a shuffle join keyed on
-    // event_type, which AQE coalesces to one task. Broadcast, every
+    // Catalyst broadcasts the points by their checkpoint size, so every
     // partition of the fanned-out stream side generates and sketches its
     // share of the pairs, one task per core.
     // h and x (the hour offset from the type's first hour) are whole
@@ -780,7 +778,7 @@ object EventOps {
     // that survives the guard has b.h > a.h, so try_divide is value-identical
     // on the result set (the NULL-on-zero rows are exactly the guard-dropped
     // pairs, and isNotNull discards them either way).
-    val slopes = pts.as("a").join(broadcast(pts.as("b")),
+    val slopes = pts.as("a").join(pts.as("b"),
         col("a.event_type") === col("b.event_type")
           && col("a.h") < col("b.h"))
       .select(col("a.event_type").as("event_type"),
@@ -1018,7 +1016,7 @@ object EventOps {
         stableRound4(col("s_l").cast("double") / col("s_n") / 10000.0)
           .as("seasonal"))
     mat
-      .join(broadcast(seasonal), dayofweek(col("day")) === col("dow"))
+      .join(seasonal, dayofweek(col("day")) === col("dow"))
       .select(col("day"), col("total"), col("trend"), col("seasonal"),
         stableRound4(col("total") - col("trend") - col("seasonal"))
           .as("residual"))
@@ -1374,7 +1372,7 @@ object EventOps {
     scored
       .orderBy(col("n_inliers").desc, col("r"))
       .limit(1)
-      .crossJoin(broadcast(stats.select(col("n").as("n_days"))))
+      .crossJoin(stats.select(col("n").as("n_days")))
       .select(col("r").cast("long").as("best_round"), col("n_days"),
         col("n_inliers"),
         stableRound4(col("slope")).as("slope"),
@@ -1665,11 +1663,11 @@ object EventOps {
         .select(col("v").as("med"))
     }
     val med = lowerMedian(res, col("r_l"))
-    val withMed = res.crossJoin(broadcast(med))
+    val withMed = res.crossJoin(med)
     val mad = lowerMedian(withMed
       .select(abs(col("r_l") - col("med")).as("ad")), col("ad"))
       .select(col("med").as("mad"))
-    withMed.crossJoin(broadcast(mad))
+    withMed.crossJoin(mad)
       .filter(abs(col("r_l") - col("med")) > lit(3) * col("mad"))
       .select(col("day"), col("total"), col("residual"),
         stableRound4(col("med").cast("double") / 10000.0).as("med_residual"),

@@ -44,10 +44,6 @@ object GraphOps {
   val BfsSeeds = 3
   val BfsMaxHops = 4
 
-  // The size dials (adjacency-cache row budget, k-core broadcast bound)
-  // live in [[graft.Tuning]] with the rest of the scale dials — the
-  // consumers below take them as default parameter values.
-
   /** Per-order distinct part sets ("baskets"), capped at `maxBasket`
     * distinct parts: ONE aggregation shuffle straight off the scan —
     * collect_set dedups repeated parts within an order, sort_array makes
@@ -301,14 +297,14 @@ object GraphOps {
     val perC = degC.join(intra, Seq("label"), "left")
       .select(col("label"), coalesce(col("l_c"), lit(0L)).as("l_c"),
         col("d_c"))
-      .crossJoin(broadcast(m))
+      .crossJoin(m)
       .select(col("l_c"),
         (col("l_c").cast("double") / col("m")
           - (col("d_c").cast("double") / (col("m") * 2))
             * (col("d_c").cast("double") / (col("m") * 2))).as("q_c"))
     perC.agg(count(lit(1)).as("n_communities"),
       sum(col("l_c")).as("intra_edges"), sum(col("q_c")).as("q"))
-      .crossJoin(broadcast(m))
+      .crossJoin(m)
       .select(col("n_communities"), col("intra_edges"), col("m").as("n_edges"),
         stableRound4(col("intra_edges").cast("double") / col("m"))
           .as("intra_frac"),
@@ -336,7 +332,7 @@ object GraphOps {
     // joined projection, so edges are never re-shuffled (the round-4
     // rewrite: the per-iteration edge⋈rank join shuffled |E| rows × iters)
     val adj = adjShared(spark, dir)
-    val n = adj.count()
+    val n = Materialize.rows(adj)
     val teleport = (1.0 - damping) / n
     // the rank chain is LINEAR — each iteration's output feeds exactly the
     // next — so no per-iteration checkpoint is needed: the whole loop is
@@ -473,7 +469,7 @@ object GraphOps {
     // baskets feed three consumers (N, item supports, pair supports) —
     // the shared materialized aggregation instead of re-scanning lineitem
     val b = basketsShared(spark, dir, maxBasket)
-    val nOrders = b.count()
+    val nOrders = Materialize.rows(b)
     val item = b.select(explode(col("parts")).as("pkey"))
       .groupBy(col("pkey")).agg(count(lit(1)).as("n_item"))
     val pairs = basketPairs(b)
@@ -543,12 +539,14 @@ object GraphOps {
     * Scale shape: per-round state is only the ALIVE NODE SET (|V| rows),
     * never the edge set — because peeling is monotone (surv_t ⊆
     * surv_{t-1}), the round-t edge set is exactly the static edge table
-    * semi-joined with the LATEST surv, so each round is two BROADCAST
-    * semi-joins of the un-shuffled edge table + one partial-aggregated
-    * degree count + a tiny [[Materialize]] of the new surv (consumed by
-    * the next round's two join branches — the multi-consumer barrier
-    * rule). The k values peel SEQUENTIALLY over the UNTAGGED edge table:
-    * a k-tagged ×|k-range| union was measured OOMing the 100× ScaleSpot
+    * semi-joined with the LATEST surv, so each round is two semi-joins of
+    * the edge table + one partial-aggregated degree count + a tiny
+    * [[Materialize]] of the new surv (consumed by the next round's two
+    * join branches — the multi-consumer barrier rule). Catalyst sizes the
+    * joins from the surv checkpoint's statistics (broadcast at every
+    * tested scale), which also give the convergence count without a job.
+    * The k values peel SEQUENTIALLY over the UNTAGGED edge table: a k-tagged
+    * ×|k-range| union was measured OOMing the 100× ScaleSpot
     * corpus in the (k, node) partial-agg hash (4·2·120M exploded rows,
     * 8M-key maps per task), while the per-k aggregation keeps map state
     * at |V| keys — the memory knob that matters at scale.
@@ -561,9 +559,7 @@ object GraphOps {
     * full `rounds` unroll unconditionally. Output: (k, n_core_nodes,
     * n_core_edges), one row per k. */
   def kCoreProfile(spark: SparkSession, dir: String, kMin: Int = KCoreMinK,
-      kMax: Int = KCoreMaxK, rounds: Int = KCoreRounds,
-      broadcastMaxSurvRows: Long = graft.Tuning.KCoreBroadcastMaxSurvRows)
-      : DataFrame = {
+      kMax: Int = KCoreMaxK, rounds: Int = KCoreRounds): DataFrame = {
     val edges = copurchaseEdgesShared(spark, dir)
     val spark0 = edges.sparkSession
     import spark0.implicits._
@@ -583,22 +579,13 @@ object GraphOps {
       var surv: DataFrame = degreesShared(spark, dir)
         .filter(col("degree") >= k).select(col("node"))
       var prev = surv.count()
-      // broadcast the surviving-node side while it fits the Tuning bound
-      // (|V| rows, known for free from the convergence count); past it,
-      // the same rounds run as plain shuffle joins — result-invisible
-      def filtered: DataFrame = {
-        val srcSide = surv.select(col("node").as("src"))
-        val dstSide = surv.select(col("node").as("dst"))
-        if (prev <= broadcastMaxSurvRows)
-          edges.join(broadcast(srcSide), Seq("src"))
-            .join(broadcast(dstSide), Seq("dst"))
-        else
-          edges.join(srcSide, Seq("src")).join(dstSide, Seq("dst"))
-      }
+      def filtered: DataFrame = edges
+        .join(surv.select(col("node").as("src")), Seq("src"))
+        .join(surv.select(col("node").as("dst")), Seq("dst"))
       var converged = false
       for (_ <- 2 to rounds if !converged) {
         surv = Materialize(alive(filtered, k))
-        val n = surv.count()
+        val n = Materialize.rows(surv)
         converged = n == prev
         prev = n
       }
@@ -686,7 +673,7 @@ object GraphOps {
     val undRaw = edges.unionAll(
       edges.select(col("dst").as("src"), col("src").as("dst")))
     val und =
-      if (edges.count() * 2 <= undCacheMaxRows) Materialize(undRaw)
+      if (Materialize.rows(edges) * 2 <= undCacheMaxRows) Materialize(undRaw)
       else undRaw
     val seedRows = degreesShared(spark, dir)
       .orderBy(col("degree").desc, col("node"))
@@ -815,9 +802,9 @@ object GraphOps {
     val und = edges.unionAll(
       edges.select(col("dst").as("src"), col("src").as("dst")))
     val sums = und
-      .join(broadcast(deg.select(col("node").as("src"), col("degree").as("da"))),
+      .join(deg.select(col("node").as("src"), col("degree").as("da")),
         Seq("src"))
-      .join(broadcast(deg.select(col("node").as("dst"), col("degree").as("db"))),
+      .join(deg.select(col("node").as("dst"), col("degree").as("db")),
         Seq("dst"))
       .agg(count(lit(1)).as("m2"),
         sum(col("da")).as("sx"),

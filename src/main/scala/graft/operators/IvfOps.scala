@@ -306,7 +306,7 @@ object IvfOps {
       sum(col("n_vecs")).cast("double").as("n_total"),
       max(col("n_vecs")).cast("double").as("n_max"),
       count(lit(1)).cast("double").as("n_cells"))
-    cells.crossJoin(broadcast(totals))
+    cells.crossJoin(totals)
       .select(col("centroid_id"), col("n_vecs"),
         stableRound4(col("n_vecs") / col("n_total")).as("share"),
         stableRound4(col("n_max") / (col("n_total") / col("n_cells")))
@@ -438,7 +438,7 @@ object IvfOps {
         count(lit(1)).as("n_labels"))
     val idx = cells.agg(sum(c2(col("nij"))).as("sumij"),
       sum(col("nij")).as("n"))
-    idx.crossJoin(broadcast(aTerm)).crossJoin(broadcast(bTerm))
+    idx.crossJoin(aTerm).crossJoin(bTerm)
       .select(col("n").as("n_vecs"), col("n_cells"), col("n_labels"), {
         val expected = (col("suma").cast("double") * col("sumb"))
           ./(c2(col("n")).cast("double"))

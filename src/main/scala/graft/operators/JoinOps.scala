@@ -540,7 +540,7 @@ object JoinOps {
           4).as("total_revenue")))
     val top = revenue.agg(max(col("total_revenue")).as("mx"))
     revenue
-      .join(broadcast(top), col("total_revenue") === col("mx"))
+      .join(top, col("total_revenue") === col("mx"))
       .join(broadcast(Tables.supplier(spark, dir)),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
@@ -570,7 +570,7 @@ object JoinOps {
       .agg(avg(col("l_quantity")).as("avg_qty"))
       .select(col("l_partkey").as("ap_key"), col("avg_qty"))
     segItems
-      .join(broadcast(perPartAvg), col("l_partkey") === col("ap_key"))
+      .join(perPartAvg, col("l_partkey") === col("ap_key"))
       .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
       .agg(round(sum(col("l_extendedprice")) / 7.0, 4).as("avg_yearly"),
         count(lit(1)).as("n_small"))

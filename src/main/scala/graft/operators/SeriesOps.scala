@@ -273,7 +273,7 @@ object SeriesOps {
     val pairs = lags.join(
       idx.select(col("t").as("tb"), col("y")),
       col("tb") === col("ta") + col("lag"))
-    pairs.crossJoin(broadcast(m.select(col("mx"), col("my"), denom.as("dn"))))
+    pairs.crossJoin(m.select(col("mx"), col("my"), denom.as("dn")))
       .groupBy(col("lag"))
       .agg(count(lit(1)).cast("bigint").as("n_pairs"),
         stableRound4(sum((col("x") - col("mx")) * (col("y") - col("my")))
@@ -303,7 +303,7 @@ object SeriesOps {
       (col("stt") - col("n") * col("mt") * col("mt"))
     val mm = Materialize(m.select(col("n"), col("mt"), col("my"),
       beta.as("b")))
-    val resid = idx.crossJoin(broadcast(mm))
+    val resid = idx.crossJoin(mm)
       .select(col("day"), col("n"),
         (col("y") - (col("my") + col("b") * (col("t") - col("mt"))))
           .as("e"))

@@ -94,7 +94,7 @@ object SketchOps {
       .join(exactDistinct("l_partkey", "exact_parts"), Seq("l_returnflag"))
       .join(exactDistinct("l_suppkey", "exact_supps"), Seq("l_returnflag")))
     val ranks = li
-      .join(broadcast(apx.select(col("l_returnflag"), col("apx_median"))),
+      .join(apx.select(col("l_returnflag"), col("apx_median")),
         Seq("l_returnflag"))
       .groupBy(col("l_returnflag"))
       .agg(
@@ -172,9 +172,9 @@ object SketchOps {
       Seq("o_orderstatus")))
     val global = perGroup
       .agg(hll_union_agg(col("sk")).as("sk"), sum(col("n_rows")).as("n_rows"))
-      .join(broadcast(
+      .join(
         distinctPairs.select(col("o_custkey")).distinct()
-          .agg(count(lit(1)).as("exact_custs"))))
+          .agg(count(lit(1)).as("exact_custs")))
       .select(lit("ALL").as("o_orderstatus"), col("sk"), col("n_rows"),
         col("exact_custs"))
     perGroup.select(col("o_orderstatus"), col("sk"), col("n_rows"),
@@ -248,7 +248,7 @@ object SketchOps {
         .groupBy(col("event_type"))
         .agg(sk.as("sk")))
     val pairs = perType.as("a")
-      .join(broadcast(perType.as("b")),
+      .join(perType.as("b"),
         col("a.event_type") < col("b.event_type"))
       .select(col("a.event_type").as("type_a"),
         col("b.event_type").as("type_b"),

@@ -17,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   * The "would the scan fill the cluster" probe is plan-only: the
   * optimizer's size estimate (file bytes for a parquet scan) against
   * maxPartitionBytes × parallelism — not `df.rdd.getNumPartitions`, which
-  * compiles a physical plan on every call. Unknown-size plans (a
-  * [[Materialize]]d frame) estimate huge and are left alone.
+  * compiles a physical plan on every call. A [[Materialize]]d frame has its
+  * exact size; plans of unknown size estimate huge and are left alone.
   *
   * Round-robin repartition is deterministic under Spark's
   * sort-before-repartition default (retried tasks reproduce the same

@@ -986,7 +986,7 @@ object StatOps {
     val gv = cells.groupBy(col("bal_band").as("gv_band"))
       .agg(sum(col("c")).cast("bigint").as("cv"))
     val tot = cells.agg(sum(col("c")).cast("bigint").as("n"))
-    g.crossJoin(broadcast(gv)).crossJoin(broadcast(tot))
+    g.crossJoin(gv).crossJoin(tot)
       .join(cells.select(col("nation").as("cn"), col("segment").as("cs"),
         col("bal_band"), col("c")),
         col("nation") === col("cn") && col("segment") === col("cs")
@@ -1058,7 +1058,7 @@ object StatOps {
       sum(col("cents")).as("s"),
       sum((col("cents") * col("cents")).cast("decimal(38,0)"))
         .cast("double").as("s2")))
-    val top = c.crossJoin(broadcast(m))
+    val top = c.crossJoin(m)
       .select(col("o_orderkey"), col("cents"),
         abs(col("cents").cast("decimal(38,0)") * col("n") - col("s"))
           .as("dev_n"))
@@ -1067,7 +1067,7 @@ object StatOps {
     val variance = (col("s2") / col("n")
       - (col("s").cast("double") / col("n"))
         * (col("s").cast("double") / col("n")))
-    top.crossJoin(broadcast(m))
+    top.crossJoin(m)
       .select(col("n").as("n_orders"), col("o_orderkey").as("outlier_key"),
         stableRound4(col("cents") / 100.0).as("outlier_value"),
         stableRound4(when(variance > 0,
@@ -1394,7 +1394,7 @@ object StatOps {
       countDistinct(col("event_type")).cast("double").as("k")))
     val rj = rk.groupBy(col("event_type")).agg(sum(col("r")).as("rsum"))
     val a = rk.agg(sum(col("r") * col("r")).as("bigA"))
-    val num = rj.crossJoin(broadcast(pars))
+    val num = rj.crossJoin(pars)
       .agg(sum((col("rsum") - col("n") * (col("k") + 1) / 2.0)
         * (col("rsum") - col("n") * (col("k") + 1) / 2.0)).as("ssq"))
     num.crossJoin(broadcast(a)).crossJoin(broadcast(pars))
@@ -1545,7 +1545,7 @@ object StatOps {
     val el = col("n") * col("k") * (col("k") + 1) * (col("k") + 1) / 4.0
     val vl = col("n") * col("k") * col("k") * (col("k") + 1) *
       (col("k") + 1) * (col("k") - 1) / 144.0
-    lStat.crossJoin(broadcast(pars))
+    lStat.crossJoin(pars)
       .filter(col("k") > 1 && col("n") > 0)
       .select(col("n").cast("bigint").as("n_days"),
         col("k").cast("bigint").as("k_types"),

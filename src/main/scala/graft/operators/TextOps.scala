@@ -280,7 +280,7 @@ object TextOps {
     val vocab = toks.groupBy(col("token")).agg(sum(col("cnt")).as("n"))
     val total = vocab.agg(sum(col("n")).as("total"))
     toks.join(vocab, Seq("token"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("doc_id"), col("cnt"),
         log10(col("n").cast("double") / col("total")).as("logp"))
       .groupBy(col("doc_id"))
@@ -454,7 +454,7 @@ object TextOps {
       .join(mid, Seq("w2"))
       .join(after2, Seq("w2"))
       .join(cont3, Seq("w3"))
-      .crossJoin(broadcast(nBig))
+      .crossJoin(nBig)
       .select(col("w1"), col("w2"), col("w3"), col("c123"),
         stableRound4(pKn).as("p_kn"))
       .orderBy(col("p_kn").desc, col("w1"), col("w2"), col("w3"))
@@ -489,7 +489,7 @@ object TextOps {
     bgc.filter(col("c12") >= minCount)
       .join(pfx, Seq("w1"))
       .join(cont, Seq("w2"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("w1"), col("w2"), col("c12"),
         stableRound4(pkn).as("p_kn"))
       .orderBy(col("p_kn").desc, col("w1"), col("w2"))
@@ -949,7 +949,7 @@ object TextOps {
       e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
         .groupBy(col("src"))
         .agg(collect_list(col("dst")).as("nbrs")))
-    val n = adj.count()
+    val n = Materialize.rows(adj)
     val teleport = (1.0 - damping) / n
     var ranks = adj.select(col("src").as("node"), lit(1.0 / n).as("rank"))
     for (_ <- 1 to iters) {
@@ -1012,7 +1012,7 @@ object TextOps {
         .otherwise(lit(0.0))
     bgc.filter(col("k11") >= minCount)
       .join(c1, "w1").join(c2, "w2")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("w1"), col("w2"), col("k11").as("n_pair"),
         stableRound4(lit(2.0) * (
           term(col("k11"), col("c1"), col("c2"))

@@ -110,16 +110,30 @@ class PlanQualitySpec extends SparkTestBase {
             if w.mode == window.Final && on(key, w.partitionSpec) => w
       }
       assert(finals.size == 1, s"$q: one Final limit on $key\n$p")
-      val exchange = finals.head.collectFirst { case e: ShuffleExchangeExec => e }
-      assert(exchange.exists(_.outputPartitioning match {
-        case h: HashPartitioning => on(key, h.expressions)
-        case _ => false
-      }), s"$q: the Final limit's input shuffles on $key\n$p")
-      assert(exchange.get.child.exists {
-        case w: WindowGroupLimitExec =>
-          w.mode == window.Partial && on(key, w.partitionSpec)
-        case _ => false
-      }, s"$q: a Partial limit on $key runs before the exchange\n$p")
+      if (q == "q_sim_ivf") {
+        // the checkpointed IVF cells broadcast by their size, so the join
+        // keeps the probes' partitioning (q_id is vec_id): the scored rows
+        // reach the Final limit without any shuffle, which beats a Partial
+        // limit before one
+        val join = finals.head.collectFirst {
+          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+        }
+        assert(join.nonEmpty, s"$q: the candidate join broadcasts\n$p")
+        val above = finals.head.collect { case e: ShuffleExchangeExec => e }
+          .filterNot(e => join.get.exists(_ eq e))
+        assert(above.isEmpty, s"$q: no shuffle between the join and the limit\n$p")
+      } else {
+        val exchange = finals.head.collectFirst { case e: ShuffleExchangeExec => e }
+        assert(exchange.exists(_.outputPartitioning match {
+          case h: HashPartitioning => on(key, h.expressions)
+          case _ => false
+        }), s"$q: the Final limit's input shuffles on $key\n$p")
+        assert(exchange.get.child.exists {
+          case w: WindowGroupLimitExec =>
+            w.mode == window.Partial && on(key, w.partitionSpec)
+          case _ => false
+        }, s"$q: a Partial limit on $key runs before the exchange\n$p")
+      }
     }
   }
 
@@ -1106,5 +1120,64 @@ class PlanQualitySpec extends SparkTestBase {
       .mkString("\n")
     assert(windowSpecs.contains("day"), p)
     assert(p.contains("Broadcast"), p)
+  }
+
+  /** The shuffle joins and cartesian products of `p` that have a
+    * [[Materialize]] checkpoint scan — through projections and filters
+    * only — as a side they could broadcast, where that side is under
+    * `threshold` bytes: its rows (counted off the checkpoint blocks, so a
+    * frame without statistics is sized too) times Catalyst's row width.
+    * Joins whose strategy a hint fixes are Catalyst's to keep. */
+  private def smallCheckpointSides(p: org.apache.spark.sql.execution.SparkPlan,
+      threshold: Long): Seq[String] = {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.catalyst.plans._
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.joins._
+    def checkpointed(r: RDD[_]): Boolean =
+      r.isCheckpointed || r.dependencies.exists(d => checkpointed(d.rdd))
+    def scan(side: SparkPlan): Option[RDDScanExec] = side match {
+      case s: RDDScanExec if checkpointed(s.rdd) => Some(s)
+      case s: ProjectExec => scan(s.child)
+      case s: FilterExec => scan(s.child)
+      case _ => None
+    }
+    def small(side: SparkPlan): Option[BigInt] = scan(side)
+      .map(s => EstimationUtils.getSizePerRow(side.output) * s.rdd.count())
+      .filter(_ < threshold)
+    p.collect {
+      case j: SortMergeJoinExec => (j, j.joinType, j.left, j.right)
+      case j: ShuffledHashJoinExec => (j, j.joinType, j.left, j.right)
+      case j: CartesianProductExec => (j, Inner, j.left, j.right)
+    }.filterNot { case (j, _, _, _) => j.logicalLink.exists {
+      case l: Join => l.hint != JoinHint.NONE
+      case _ => false
+    } }.flatMap { case (j, jt, l, r) =>
+      val left = jt match {
+        case Inner | Cross | RightOuter => small(l).map(b => s"left $b B")
+        case _ => None
+      }
+      val right = jt match {
+        case Inner | Cross | LeftOuter | LeftSemi | LeftAnti | ExistenceJoin(_) =>
+          small(r).map(b => s"right $b B")
+        case _ => None
+      }
+      (left ++ right).map(side => s"${j.nodeName} $jt, $side")
+    }
+  }
+
+  test("no unhinted shuffle join has a checkpoint side under the broadcast threshold") {
+    // a Materialize checkpoint carries its exact size, so Catalyst
+    // broadcasts a small one; a shuffle join against one means the
+    // statistics were lost on the way
+    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    val found = SparkEntry.queries.toSeq.flatMap { case (q, build) =>
+      smallCheckpointSides(build(spark, sf).queryExecution.sparkPlan, threshold)
+        .map(j => s"$q: $j")
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

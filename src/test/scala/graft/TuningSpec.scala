@@ -21,13 +21,33 @@ class TuningSpec extends SparkTestBase {
     assert(cached.nonEmpty)
   }
 
-  test("KCoreBroadcastMaxSurvRows: kCoreProfile identical with broadcast and shuffle semi-joins") {
-    val bcast = rows(GraphOps.kCoreProfile(spark, sf,
-      broadcastMaxSurvRows = Long.MaxValue))
-    val shuffled = rows(GraphOps.kCoreProfile(spark, sf,
-      broadcastMaxSurvRows = 0L))
-    assert(bcast == shuffled)
-    assert(bcast.nonEmpty)
+  test("autoBroadcastJoinThreshold flip: kCoreProfile and capHeavyShingles identical") {
+    // no dial decides these joins: Catalyst sizes each checkpoint side
+    // from its exact statistics, so flipping the session's own threshold
+    // flips broadcast against shuffle — and must not change an answer
+    import spark.implicits._
+    val ex = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L), (2L, 12L))
+      .toDF("doc_id", "shingle")
+    def capped = DedupOps.capHeavyShingles(ex, 2)
+    def withThreshold[T](v: String)(body: => T): T = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, v)
+      try body finally spark.conf.set(key, prev)
+    }
+    val (kBcast, capBcast, capBcastPlan) = withThreshold("10MB")(
+      (rows(GraphOps.kCoreProfile(spark, sf)), rows(capped),
+        capped.queryExecution.sparkPlan.toString))
+    val (kShuffled, capShuffled, capShuffledPlan) = withThreshold("-1")(
+      (rows(GraphOps.kCoreProfile(spark, sf)), rows(capped),
+        capped.queryExecution.sparkPlan.toString))
+    assert(capBcastPlan.contains("BroadcastHashJoin"), capBcastPlan)
+    assert(!capShuffledPlan.contains("BroadcastHashJoin"), capShuffledPlan)
+    assert(kBcast == kShuffled)
+    assert(kBcast.nonEmpty)
+    // (shingle, doc_id): the heavy shingle 10 (df 3 > cap 2) is dropped
+    assert(capBcast.sorted == capShuffled.sorted)
+    assert(capBcast.sorted == Seq("[11,1]", "[12,2]"))
   }
 
   test("LocalUnionFindMaxEdges: connectedComponents identical on both sides of the dispatch") {
