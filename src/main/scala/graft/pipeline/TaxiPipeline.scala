@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources._
@@ -49,13 +49,6 @@ object TaxiPipeline {
       Some(col("passenger_count") =!= 0 || col("passenger_count").isNull)
     else None
 
-  /** R5: data-quality metric — rows with passenger_count == 0
-    * (ingest_data.py:32,36). One scalar crosses the shuffle. */
-  def zeroPassengerCount(df: DataFrame): Long =
-    if (df.columns.contains("passenger_count"))
-      df.filter(col("passenger_count").isin(0)).count()
-    else 0L
-
   /** R4: drop zero-passenger rows (ingest_data.py:29-38). */
   def dropZeroPassengers(df: DataFrame): DataFrame =
     keepsPassengers(df).fold(df)(df.filter)
@@ -71,32 +64,39 @@ object TaxiPipeline {
       cols.foldLeft(df)((d, c) => d.withColumn(c, to_timestamp(col(c))))
     else df
 
-  /** R2-R8: ingest — scan CSV, quality-count, filter, cast, append to the
-    * relational store. Returns (rowsBefore, zeroBefore, zeroAfter).
-    * zeroAfter counts the zeros among the rows R4's own keep predicate
-    * passes, so it is 0 by construction: it restates the reference's
-    * after-check, it does not test the filter (the spec counts the zeros
-    * in the stored table for that). */
+  /** R2-R8: ingest — scan CSV, filter, cast, append to the relational
+    * store, counting the rows on the way. Returns (rowsBefore, zeroBefore,
+    * zeroAfter). R5's data-quality counts (rows with passenger_count == 0,
+    * ingest_data.py:32,36, before and after R4's filter) are an
+    * `Observation` on the frame the append writes: the append's own scan
+    * computes them, so the file is read once for inference and once for
+    * the append, and no separate aggregate query runs. zeroAfter counts the
+    * zeros among the rows R4's own keep predicate passes, so it is 0 by
+    * construction: it restates the reference's after-check, it does not
+    * test the filter (the spec counts the zeros in the stored table for
+    * that). */
   def ingest(spark: SparkSession, csvPath: String, c: Config): (Long, Long, Long) = {
-    // cache the scan: schema inference + the quality counts + two writes
-    // would otherwise re-read the file ~6×. A single month file fits; a
-    // at-scale ingest runs per-partition where each file is read once anyway.
-    val raw = CsvSource(csvPath).read(spark).cache()
-    // one aggregate pass for the total and both zero counts (R5 before and
-    // after R4's filter) instead of one query each; the zero counts are
-    // conditional on passenger_count existing (R7's cast-if-present
-    // sibling quirk)
-    val zeros = keepsPassengers(raw).map { keep =>
+    val raw = CsvSource(csvPath).read(spark)
+    // the zero counts are conditional on passenger_count existing (R7's
+    // cast-if-present sibling quirk); `observe` takes only aggregates
+    // and literals
+    val (zeroBefore, zeroAfter) = keepsPassengers(raw).map { keep =>
       val zero = col("passenger_count").isin(0)
-      Seq(count_if(zero), count_if(keep && zero))
-    }.getOrElse(Seq(lit(0L), lit(0L)))
-    val stats = raw.agg(count(lit(1)), zeros: _*).collect().head
-    val cleaned = castTimestampsIfPresent(dropZeroPassengers(raw))
-    // R6: schema-only write creates/replaces the table without data motion
-    JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Overwrite).write(cleaned.limit(0))
-    JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Append).write(cleaned)
-    raw.unpersist()
-    (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+      (count_if(zero), count_if(keep && zero))
+    }.getOrElse((lit(0L), lit(0L)))
+    val quality = Observation()
+    val observed = raw.observe(quality, count(lit(1)).as("rows"),
+      zeroBefore.as("zero_before"), zeroAfter.as("zero_after"))
+    def cleaned(df: DataFrame) = castTimestampsIfPresent(dropZeroPassengers(df))
+    // R6: schema-only write creates/replaces the table without data motion:
+    // Catalyst plans `limit(0)` as an empty relation, so it reads no file.
+    // It is built from the unobserved frame, since an Observation reports
+    // only the first action it sees
+    JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Overwrite).write(cleaned(raw).limit(0))
+    JdbcSink(c.jdbcUrl, tableName(c), SaveMode.Append).write(cleaned(observed))
+    val stats = quality.get
+    def metric(name: String) = stats(name).asInstanceOf[Long]
+    (metric("rows"), metric("zero_before"), metric("zero_after"))
   }
 
   /** R9-R14: export — read the stored table back once, capped at

@@ -4,7 +4,7 @@ import java.io.{FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.{JobCount, StageTasks}
+import org.apache.spark.{JobCount, ListenerBusDrain, StageTasks}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -79,7 +79,7 @@ class TaxiPipelineSpec extends SparkTestBase {
   test("dropZeroPassengers keeps nulls, drops zeros (R4 pandas semantics)") {
     val df = CsvSource(res("yellow_sample.csv")).read(spark)
     val kept = TaxiPipeline.dropZeroPassengers(df)
-    assert(TaxiPipeline.zeroPassengerCount(df) == 3)
+    assert(df.filter(col("passenger_count") === 0).count() == 3)
     assert(kept.count() == 7) // 10 - 3 zeros; the null row survives
     assert(kept.filter(col("passenger_count").isNull).count() == 1)
   }
@@ -201,7 +201,8 @@ class TaxiPipelineSpec extends SparkTestBase {
     assert(back.schema("lpep_pickup_datetime").dataType == StringType)
   }
 
-  test("ingest's quality counts take one aggregate query") {
+  test("ingest's quality counts ride the append: no aggregate query, and " +
+      "only the inference scan and the append read the file") {
     val aggregates = new java.util.concurrent.atomic.AtomicInteger
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -209,21 +210,53 @@ class TaxiPipelineSpec extends SparkTestBase {
           aggregates.incrementAndGet()
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def ingest(csv: String, name: String): (Long, Long, Long) = {
+    // (counts, stages that ran tasks, stages that read every data row of
+    // the file); each job here is one stage
+    def ingest(csv: String, name: String, rows: Long)
+        : ((Long, Long, Long), Int, Int) = {
+      // an earlier test's query events may still be queued on the bus
+      ListenerBusDrain(spark.sparkContext)
       aggregates.set(0)
       spark.listenerManager.register(listener)
-      try JobCount(spark.sparkContext)(
-        TaxiPipeline.ingest(spark, csv, fresh(name)))._1
-      finally spark.listenerManager.unregister(listener)
+      val (counts, jobs, stages) =
+        try StageTasks(spark.sparkContext)(
+          TaxiPipeline.ingest(spark, csv, fresh(name)))
+        finally spark.listenerManager.unregister(listener)
+      assert(aggregates.get == 0, s"$csv: ${aggregates.get} aggregate queries")
+      // the fourth job is the schema-only write's: an empty relation, so
+      // Spark posts it with no stage to run
+      assert(jobs == 4, s"$csv: $jobs jobs: ${stages.mkString(", ")}")
+      (counts, stages.size, stages.count(_.recordsRead >= rows))
     }
-    assert(ingest(res("yellow_sample.csv"), "agg_yellow") == ((10L, 3L, 0L)))
-    assert(aggregates.get == 1, s"${aggregates.get} aggregate queries")
-    assert(ingest(res("green_sample.csv"), "agg_green") == ((8L, 2L, 0L)))
-    assert(aggregates.get == 1)
+    // the header, the inference scan and the append; the last two read
+    // the whole file
+    assert(ingest(res("yellow_sample.csv"), "agg_yellow", 10) ==
+      (((10L, 3L, 0L), 3, 2)))
+    assert(ingest(res("green_sample.csv"), "agg_green", 8) ==
+      (((8L, 2L, 0L), 3, 2)))
     val plain = Files.writeString(Paths.get(s"$tmp/no_passengers.csv"),
       "VendorID,fare_amount\n1,5.0\n2,7.5\n")
-    assert(ingest(plain.toString, "agg_plain") == ((2L, 0L, 0L)))
-    assert(aggregates.get == 1)
+    assert(ingest(plain.toString, "agg_plain", 2) == (((2L, 0L, 0L), 3, 2)))
+  }
+
+  test("ingest's observed counts on header-only files are zeros, and " +
+      "ingest returns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the counts arrive with the append: a file with no rows must still
+    // report them rather than leave `ingest` waiting, with and without a
+    // passenger_count column
+    val taxiHeader = Files.readAllLines(Paths.get(res("yellow_sample.csv"))).get(0)
+    for ((header, name) <- Seq((taxiHeader, "edge_taxi"),
+        ("VendorID,fare_amount", "edge_plain"))) {
+      val csv = Files.writeString(Paths.get(s"$tmp/$name.csv"), header + "\n")
+      val c = fresh(name)
+      assert(Await.result(Future(TaxiPipeline.ingest(spark, csv.toString, c)),
+        2.minutes) == ((0L, 0L, 0L)), name)
+      assert(JdbcSource(c.jdbcUrl, TaxiPipeline.tableName(c)).read(spark)
+        .count() == 0, name)
+    }
   }
 
   test("ingest stores no zero-passenger row, and keeps the null ones (R4-R6)") {
@@ -235,7 +268,7 @@ class TaxiPipelineSpec extends SparkTestBase {
       TaxiPipeline.ingest(spark, res(csv), c)
       val db = JdbcSource(c.jdbcUrl, TaxiPipeline.tableName(c)).read(spark)
       assert(db.count() == kept, csv)
-      assert(TaxiPipeline.zeroPassengerCount(db) == 0, csv)
+      assert(db.filter(col("passenger_count") === 0).count() == 0, csv)
       assert(db.filter(col("passenger_count").isNull).count() ==
         CsvSource(res(csv)).read(spark)
           .filter(col("passenger_count").isNull).count(), csv)

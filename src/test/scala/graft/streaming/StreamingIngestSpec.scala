@@ -2,12 +2,15 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.StreamBatchJobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.TimestampType
 
 import graft.{SparkTestBase, StreamGate}
 import graft.operators.RelationalOps
+import graft.pipeline.TaxiPipeline
 
 class StreamingIngestSpec extends SparkTestBase {
 
@@ -35,6 +38,54 @@ class StreamingIngestSpec extends SparkTestBase {
       val result = spark.read.parquet(out)
       assert(result.count() == 14)
       assert(result.schema("tpep_pickup_datetime").dataType == TimestampType)
+    }
+  }
+
+  test("chunk files that arrived before start drain in one micro-batch") {
+    withTempDir("graft-drain") { base =>
+      val in = Files.createDirectories(base.resolve("in"))
+      val out = base.resolve("out").toString
+      val cp = base.resolve("cp").toString
+      val fixture = Paths.get(getClass.getResource("/yellow_sample.csv").getPath)
+      val schema = spark.read.option("header", "true").option("inferSchema", "true")
+        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS]XXX")
+        .csv(fixture.toString).schema
+      // three chunks of the fixture's distinct rows, then the whole fixture
+      val header +: rows = Files.readAllLines(fixture).asScala.toSeq
+      def chunk(name: String, lines: Seq[String]): String = {
+        val p = in.resolve(name)
+        Files.write(p, (header +: lines).asJava)
+        p.toString
+      }
+      val backlog = Seq(rows.take(4), rows.slice(4, 7), rows.drop(7))
+        .zipWithIndex.map { case (ls, i) => chunk(s"chunk$i.csv", ls) }
+      // the rows R4's filter keeps, read as a batch from the same files
+      def kept(paths: Seq[String]): Seq[String] =
+        TaxiPipeline.castTimestampsIfPresent(TaxiPipeline.dropZeroPassengers(
+          spark.read.schema(schema).option("header", "true").csv(paths: _*)))
+          .collect().map(_.toString).sorted.toSeq
+      def written: Seq[String] =
+        spark.read.parquet(out).collect().map(_.toString).sorted.toSeq
+
+      val q = StreamingIngest.start(spark, in.toString, schema, out, cp)
+      try {
+        q.processAllAvailable()
+        // the scan applies R4's filter, so a batch reports the rows it keeps
+        def batchesWithRows =
+          q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+        assert(batchesWithRows == Seq(7L),
+          q.recentProgress.map(_.json).mkString("\n"))
+        // every kept row once: 10 - 3 zero-passenger rows
+        assert(written.size == 7)
+        assert(written == kept(backlog))
+
+        // a file that lands later is the next micro-batch, appended once
+        val late = chunk("chunk3.csv", rows)
+        q.processAllAvailable()
+        assert(batchesWithRows == Seq(7L, 7L))
+        assert(written.size == 14)
+        assert(written == kept(backlog :+ late))
+      } finally q.stop()
     }
   }
 
@@ -83,6 +134,35 @@ class StreamingIngestSpec extends SparkTestBase {
       }
       q.stop()
       assert(rows(spark.read.parquet(target)).size == 22)
+    }
+  }
+
+  test("streaming CDC upsert: a backlog of files merges one file per batch, " +
+      "oldest first") {
+    import spark.implicits._
+    withTempDir("graft-upsert-order") { base =>
+      val in = Files.createDirectories(base.resolve("in"))
+      val target = base.resolve("target").toString
+      val cp = base.resolve("cp").toString
+      val first = (1L to 5L).map(k => (k, "old", k * 1.0)).toDF("k", "ver", "amt")
+      val second = (4L to 8L).map(k => (k, "new", k * 10.0)).toDF("k", "ver", "amt")
+      // both land before the stream starts; the later file is newer by
+      // seconds, and the file source admits files oldest first
+      StreamGate.land(first, in, "b.parquet")
+      StreamGate.land(second, in, "a.parquet")
+      val now = System.currentTimeMillis()
+      assert(in.resolve("b.parquet").toFile.setLastModified(now - 20000L))
+      assert(in.resolve("a.parquet").toFile.setLastModified(now - 10000L))
+      val q = StreamingIngest.startUpsert(spark, in.toString, first.schema,
+        "k", target, cp)
+      try q.processAllAvailable() finally q.stop()
+      val got = spark.read.parquet(target).collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2)))
+      // one row per key, and the overlapping keys hold the later file's values
+      assert(got.map(_._1).sorted.toSeq == (1L to 8L))
+      val byKey = got.toMap
+      (1L to 3L).foreach(k => assert(byKey(k) == (("old", k * 1.0)), s"key $k"))
+      (4L to 8L).foreach(k => assert(byKey(k) == (("new", k * 10.0)), s"key $k"))
     }
   }
 }
