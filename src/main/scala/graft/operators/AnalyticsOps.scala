@@ -980,7 +980,8 @@ object AnalyticsOps {
     *
     * Scale note: `percentile` is exact (buffers each group's values) —
     * right for profiling runs; the streaming-friendly substitute at 100 TB
-    * is `approx_percentile`/t-digest in SketchOps, same query shape. */
+    * is `approx_percentile` (Greenwald-Khanna) in SketchOps, same query
+    * shape. */
   def percentileProfile(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NumericFunctions.stableRound4
     // round 16: the per-lang profile via ExactPercentile's bounded-state

@@ -533,7 +533,7 @@ object GraphOps {
     * computation a pure function of the edge set (a convergence test would
     * make the round count data-dependent — the same determinism contract
     * as the fixed-sweep Jacobi/PageRank); 4 rounds fully converge this
-    * graph at every test SF (GraphSpec pins round-4 = round-8 output) and
+    * graph at every test SF (GraphOpsSpec pins round-4 = round-8 output) and
     * both engines run the identical count regardless.
     *
     * Scale shape: per-round state is only the ALIVE NODE SET (|V| rows),

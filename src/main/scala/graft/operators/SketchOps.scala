@@ -7,8 +7,10 @@ import graft.Tables
 
 /** Sketch-based approximate aggregation — the one-pass, merge-commutative
   * alternatives the 100 TB path substitutes for exact operators:
-  * HyperLogLog++ (approx_count_distinct) for COUNT(DISTINCT), t-digest-style
-  * approx_percentile for exact interpolated percentiles. Deterministic for
+  * HyperLogLog++ (approx_count_distinct) for COUNT(DISTINCT), approx_percentile
+  * (merged Greenwald-Khanna summaries, see [[MedianRankEps]]) for exact
+  * interpolated percentiles, and the DataSketches HLL, frequent-items and
+  * theta families for mergeable rollups and set algebra. Deterministic for
   * fixed data (sketch merges are commutative), but engine-specific, so the
   * declared query takes the rows-only check; ScalaTest bounds the error
   * against the exact aggregates.
@@ -62,7 +64,7 @@ object SketchOps {
     * 100 TB you run it on a slice/sample to qualify the sketch config,
     * then production queries use [[approxStats]] alone.
     *
-    * The median audit checks the t-digest value's TRUE rank brackets
+    * The median audit checks the approx_percentile value's TRUE rank brackets
     * 0.5 within [[MedianRankEps]] (count(x < v)/n ≤ 0.5+ε and
     * count(x ≤ v)/n ≥ 0.5−ε) — one broadcast join of the 4-row
     * estimate table back to the facts. */
@@ -218,52 +220,42 @@ object SketchOps {
   }
 
   /** q_theta_audience: the full audience set-algebra grid from MERGEABLE
-    * sketches — per-event-type theta sketches of user_id, then pairwise
-    * intersection / A-not-B / union estimates evaluated on the aggregated
-    * sketch table alone ([[graft.functions.expressions.ThetaPairStats]]).
+    * sketches — per-event-type theta sketches of user_id (Spark's built-in
+    * DataSketches `theta_sketch_agg`), then pairwise intersection /
+    * A-not-B / union estimates (`theta_intersection`, `theta_difference`,
+    * `theta_union`) evaluated on the aggregated sketch table alone.
     * This closes the set-operation gap HLL leaves open (q_hll_rollup can
     * union but never intersect): at 100 TB the facts are scanned ONCE into
     * |types| fixed-size binaries riding the partial-aggregate shuffle, and
     * every overlap/exclusive-audience question — including ones not known
-    * at scan time — is answered from the sketch table in O(|types|²·2^lgK),
+    * at scan time — is answered from the sketch table in O(|types|²·2^12),
     * where the exact twin (q_audience_overlap) re-shuffles distinct
     * (type, user) pairs for each question. Oracle-checked: the fixture's
-    * per-type audiences stay far below the 2^12 nominal capacity, so the
-    * sketches never enter estimation mode and every estimate is the exact
-    * distinct count (see ThetaSketchAgg's contract; ThetaSketchSpec pins
-    * the estimation regime separately). */
-  def thetaAudience(spark: SparkSession, dir: String, lgK: Int = 12)
-      : DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
+    * per-type audiences stay far below the built-ins' default 2^12 nominal
+    * entries, so the sketches never enter estimation mode and every
+    * estimate is the exact distinct count, whatever the partition order
+    * (SketchSpec pins both that and the estimation regime). */
+  def thetaAudience(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NumericFunctions.stableRound4
-    val sk = GraftColumnBridge.toColumn(
-      graft.functions.expressions.ThetaSketchAgg(
-        GraftColumnBridge.toExpression(col("user_id")), lgK)
-        .toAggregateExpression())
     // materialized: the pair grid reads BOTH sides of the self-join from
     // this |types|-row table — without it each side would re-run the full
     // fact scan + sketch aggregation
     val perType = Materialize(
       Tables.events(spark, dir)
         .groupBy(col("event_type"))
-        .agg(sk.as("sk")))
-    val pairs = perType.as("a")
+        .agg(theta_sketch_agg(col("user_id")).as("sk")))
+    val (a, b) = (col("a.sk"), col("b.sk"))
+    perType.as("a")
       .join(perType.as("b"),
         col("a.event_type") < col("b.event_type"))
       .select(col("a.event_type").as("type_a"),
         col("b.event_type").as("type_b"),
-        GraftColumnBridge.toColumn(
-          graft.functions.expressions.ThetaPairStats(
-            GraftColumnBridge.toExpression(col("a.sk")),
-            GraftColumnBridge.toExpression(col("b.sk")))).as("st"))
-    pairs
-      .select(col("type_a"), col("type_b"),
-        col("st.n_inter").as("n_inter"),
-        col("st.only_a").as("only_a"),
-        col("st.only_b").as("only_b"),
-        col("st.n_union").as("n_union"),
-        stableRound4(col("st.n_inter").cast("double") / col("st.n_union"))
-          .as("jaccard"))
+        theta_sketch_estimate(theta_intersection(a, b)).as("n_inter"),
+        theta_sketch_estimate(theta_difference(a, b)).as("only_a"),
+        theta_sketch_estimate(theta_difference(b, a)).as("only_b"),
+        theta_sketch_estimate(theta_union(a, b)).as("n_union"))
+      .withColumn("jaccard", stableRound4(
+        col("n_inter").cast("double") / col("n_union")))
       .orderBy(col("type_a"), col("type_b"))
   }
 }

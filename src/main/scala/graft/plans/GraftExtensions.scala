@@ -14,9 +14,12 @@ import graft.functions.expressions._
   *   - `GraftSession.builder(...)` applies it via `withExtensions`;
   *   - external apps set `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Registered SQL functions (usable directly in `spark.sql`):
+  * Registered SQL functions (usable directly in `spark.sql`; none shares
+  * a name with a Spark builtin, which it would silently shadow):
   * `vector_dot(a, b)`, `vector_norm(a)`, `vector_average(a, dim)`,
-  * `word_shingles(text, n)`, `minhash_signature(shingles, k)`.
+  * `word_shingles(text, n)`, `minhash_signature(shingle, k)`,
+  * `minhash_array(shingles, k)`, `simhash_array(tokens)`,
+  * `jaro_winkler(a, b)`, `sorted_intersect(a, b)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -166,24 +166,33 @@ object EventStreamOps {
       .flatMapGroupsWithState[List[Event], SessionSummary](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[Event], state: GroupState[List[Event]]) =>
-          val sorted = (state.getOption.getOrElse(Nil) ++ it.toList)
-            .sortBy(_.ts.getTime)
-          val sessions = scala.collection.mutable.ListBuffer.empty[List[Event]]
-          var current = List.empty[Event]
-          sorted.foreach { e =>
-            if (current.isEmpty || e.ts.getTime - current.last.ts.getTime <= gapMs)
-              current = current :+ e
-            else { sessions += current; current = List(e) }
-          }
+          val (closed, open) =
+            splitSessions(state.getOption.getOrElse(Nil) ++ it, gapMs)
           // keep the still-open tail session in state; emit closed ones
-          state.update(current)
-          sessions.iterator.map { s =>
-            SessionSummary(userId, s.length,
-              math.round(s.map(_.value).sum * 10000).toDouble / 10000,
-              s.head.ts, s.last.ts)
-          }
+          state.update(open)
+          closed.iterator.map(summarize(userId, _))
       }
   }
+
+  /** One user's events sorted by time and split wherever an event arrives
+    * more than `gapMs` after the one before it: the closed sessions, then
+    * the still-open tail (empty only when there are no events). */
+  private def splitSessions(events: IterableOnce[Event], gapMs: Long)
+      : (List[List[Event]], List[Event]) = {
+    val sessions = scala.collection.mutable.ListBuffer.empty[List[Event]]
+    var current = List.empty[Event]
+    events.iterator.toList.sortBy(_.ts.getTime).foreach { e =>
+      if (current.isEmpty || e.ts.getTime - current.last.ts.getTime <= gapMs)
+        current = current :+ e
+      else { sessions += current; current = List(e) }
+    }
+    (sessions.toList, current)
+  }
+
+  private def summarize(userId: Long, s: List[Event]): SessionSummary =
+    SessionSummary(userId, s.length,
+      math.round(s.map(_.value).sum * 10000).toDouble / 10000,
+      s.head.ts, s.last.ts)
 
   /** Stateful KEEP-ANCHORED debounce per (user, type): an event survives
     * iff it arrives more than `gapMinutes` after the last KEPT event — the
@@ -225,20 +234,9 @@ object EventStreamOps {
     import spark.implicits._
     val gapMs = gapMinutes * 60000L
     events.groupByKey(_.user_id).flatMapGroups { (userId, it) =>
-      val sorted = it.toList.sortBy(_.ts.getTime)
-      val sessions = scala.collection.mutable.ListBuffer.empty[List[Event]]
-      var current = List.empty[Event]
-      sorted.foreach { e =>
-        if (current.isEmpty || e.ts.getTime - current.last.ts.getTime <= gapMs)
-          current = current :+ e
-        else { sessions += current; current = List(e) }
-      }
-      if (current.nonEmpty) sessions += current
-      sessions.iterator.map { s =>
-        SessionSummary(userId, s.length,
-          math.round(s.map(_.value).sum * 10000).toDouble / 10000,
-          s.head.ts, s.last.ts)
-      }
+      val (closed, open) = splitSessions(it, gapMs)
+      (closed.iterator ++ Iterator(open).filter(_.nonEmpty))
+        .map(summarize(userId, _))
     }
   }
 }

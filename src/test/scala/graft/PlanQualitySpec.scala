@@ -776,14 +776,10 @@ class PlanQualitySpec extends SparkTestBase {
   test("thetaAudience: sketch agg partial-aggregates over a pruned scan; " +
       "pair grid reads the materialized sketch table, not the facts") {
     // the aggregation stage (what actually touches the facts)
-    import org.apache.spark.sql.GraftColumnBridge
-    val sk = GraftColumnBridge.toColumn(
-      graft.functions.expressions.ThetaSketchAgg(
-        GraftColumnBridge.toExpression(col("user_id")), 12)
-        .toAggregateExpression())
     val aggPlan = plan(graft.Tables.events(spark, sf)
-      .groupBy(col("event_type")).agg(sk.as("sk")))
-    assert(aggPlan.contains("theta_sketch"), aggPlan)
+      .groupBy(col("event_type"))
+      .agg(theta_sketch_agg(col("user_id")).as("sk")))
+    assert(aggPlan.contains("theta_sketch_agg"), aggPlan)
     assert(aggPlan.contains("partial"), aggPlan) // binaries merge post-shuffle
     assert(aggPlan.contains("ReadSchema: struct<user_id:bigint,event_type:string>")
       || aggPlan.contains("ReadSchema: struct<event_type:string,user_id:bigint>"),

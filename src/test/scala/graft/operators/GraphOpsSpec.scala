@@ -219,7 +219,8 @@ class GraphOpsSpec extends SparkTestBase {
     e
   }
 
-  test("kCoreProfile matches the driver-local peel and is converged at 8 rounds") {
+  test("kCoreProfile matches the driver-local peel, and its declared 4 " +
+      "rounds equal 8 rounds") {
     val out = GraphOps.kCoreProfile(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     assert(out.map(_._1) == (GraphOps.KCoreMinK to GraphOps.KCoreMaxK).toSeq)

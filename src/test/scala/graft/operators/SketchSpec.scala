@@ -156,46 +156,30 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("theta sketches are partition-order stable in the exact regime") {
-    import org.apache.spark.sql.GraftColumnBridge
-    def sketchOf(parts: Int): Array[Long] = {
-      val sk = GraftColumnBridge.toColumn(
-        graft.functions.expressions.ThetaSketchAgg(
-          GraftColumnBridge.toExpression(col("user_id")), 12)
-          .toAggregateExpression())
+    def estimatesOf(parts: Int): Array[Long] =
       Tables.events(spark, sf).repartition(parts)
-        .groupBy(col("event_type")).agg(sk.as("sk"))
-        .select(col("event_type"),
-          GraftColumnBridge.toColumn(
-            graft.functions.expressions.ThetaPairStats(
-              GraftColumnBridge.toExpression(col("sk")),
-              GraftColumnBridge.toExpression(col("sk")))).as("st"))
+        .groupBy(col("event_type"))
+        .agg(theta_sketch_estimate(theta_sketch_agg(col("user_id"))).as("n"))
         .orderBy(col("event_type"))
-        .collect().map(_.getStruct(1).getLong(3)) // n_union of self-pair
-    }
-    assert(sketchOf(2).sameElements(sketchOf(16)))
+        .collect().map(_.getLong(1))
+    assert(estimatesOf(2).sameElements(estimatesOf(16)))
   }
 
   test("theta estimation regime: estimates track truth within sketch error") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge
     // two overlapping 6k-element sets through a 2^8-entry sketch — deep in
     // estimation mode (purged well below the distinct count)
     val rows = ((1 to 6000).map(i => ("a", i.toLong))
       ++ (2001 to 8000).map(i => ("b", i.toLong)))
-    val sk = GraftColumnBridge.toColumn(
-      graft.functions.expressions.ThetaSketchAgg(
-        GraftColumnBridge.toExpression(col("id")), 8)
-        .toAggregateExpression())
     val perSet = rows.toDF("s", "id").repartition(8)
-      .groupBy(col("s")).agg(sk.as("sk"))
+      .groupBy(col("s")).agg(theta_sketch_agg(col("id"), 8).as("sk"))
     val st = perSet.as("a").join(perSet.as("b"),
         col("a.s") < col("b.s"))
-      .select(GraftColumnBridge.toColumn(
-        graft.functions.expressions.ThetaPairStats(
-          GraftColumnBridge.toExpression(col("a.sk")),
-          GraftColumnBridge.toExpression(col("b.sk")))).as("st"))
-      .head().getStruct(0)
-    val (inter, union) = (st.getLong(0), st.getLong(3))
+      .select(
+        theta_sketch_estimate(theta_intersection(col("a.sk"), col("b.sk"))),
+        theta_sketch_estimate(theta_union(col("a.sk"), col("b.sk"))))
+      .head()
+    val (inter, union) = (st.getLong(0), st.getLong(1))
     // truth: |A∩B| = 4000, |A∪B| = 10000; 2^8 nominal entries give ~1/16
     // relative error on the union and larger on the intersection — assert
     // loose 3σ-ish envelopes, not exactness

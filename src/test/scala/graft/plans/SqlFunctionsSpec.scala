@@ -134,4 +134,38 @@ class SqlFunctionsSpec extends SparkTestBase {
       .collect().head.getSeq[Long](0)
     assert(r == Seq(2L), s"got $r")
   }
+
+  test("jaro_winkler in spark.sql matches the Column-API TextFunctions path") {
+    import spark.implicits._
+    val pairs = Seq(("martha", "marhta"), ("dixon", "dicksonx"),
+      ("aaaaa", "aaaab"), ("abcdxxxxxx", "abcdyyyyyy"), ("ab", "ba"),
+      ("", "abc"), ("abc", "abc"))
+    val df = pairs.toDF("a", "b")
+    df.createOrReplaceTempView("jw_sql")
+    val viaSql = spark.sql(
+      "SELECT a, b, jaro_winkler(a, b) AS jw FROM jw_sql ORDER BY a, b")
+      .collect()
+    val viaApi = df
+      .select(col("a"), col("b"),
+        graft.functions.TextFunctions.jaroWinkler(col("a"), col("b")).as("jw"))
+      .orderBy(col("a"), col("b")).collect()
+    assert(viaSql.length == pairs.size)
+    assert(viaSql.sameElements(viaApi), s"${viaSql.toSeq} vs ${viaApi.toSeq}")
+  }
+
+  test("the registered functions are exactly the documented nine, and none " +
+      "shadows a Spark builtin") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val names = Set("vector_dot", "vector_norm", "vector_average",
+      "word_shingles", "minhash_signature", "minhash_array", "simhash_array",
+      "jaro_winkler", "sorted_intersect")
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(_.className == classOf[GraftExtensions].getName)
+      .map(_.name).toSet
+    assert(registered == names)
+    val shadowed = names.filter(n =>
+      FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shadowed.isEmpty, shadowed)
+  }
 }
