@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -740,77 +740,88 @@ object EventOps {
     * value series — the median of all pairwise slopes, immune to the
     * outlier hours that wreck an OLS fit (the robust companion to
     * q_zipf's regr_slope). x is the hour offset from the type's first
-    * hour, so gaps in the series keep their true spacing. The pair join
-    * is per-type over the HOURLY aggregate: C(\|hours\|, 2) pairs —
-    * bounded by the series length squared, never by event count — and the
-    * median is an exact interpolated percentile over that bounded set.
-    * Intercept = median(v − slope·x), the standard Theil-Sen second pass.
+    * hour, so gaps in the series keep their true spacing. Intercept =
+    * median(v − slope·x), the standard Theil-Sen second pass. Both medians
+    * are exact interpolated percentiles, bit-identical to `percentile()`;
+    * n_hours counts every hour of the type, a NULL-valued one included.
+    *
     * Scale shape: one partial-aggregated hourly rollup (the only
-    * event-count-sized stage), then everything is \|types·hours\|²: the
-    * pair passes run on every core over the broadcast points table, and
-    * the intercept is one \|types·hours\| rank window. */
+    * event-count-sized stage), then one row per type holding its hourly
+    * points, and [[theilSenFit]] computes both medians inside the task
+    * that holds the row — no pair join, no job at construction. Its state
+    * is the type's C(H, 2) slopes in one `double[]` (2.07 MB at H = 720),
+    * where H is the number of distinct hours of the type: the bound comes
+    * from the time span the events cover, not from their count (30 days of
+    * fixture data is 720 hours at every scale factor, since `ScaleData`
+    * keeps `ts`). A type spanning more than ~7.5 years of hours would
+    * overflow the JVM array limit, and [[theilSenPairs]] refuses it by
+    * name. */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NumericFunctions.stableRound4
-    // The points table (event_type, h, v) — h the hour as a whole number
-    // of hours since the epoch — is built ONCE and read by both passes
-    // of the slope median and by the intercept. It is |types·hours| rows,
-    // so its checkpoint is cheap, and the round-robin fan-out spreads it
-    // over the session's parallelism (the rollup's small shuffle would
-    // otherwise be coalesced to one partition).
-    val pts = Materialize(Tables.events(spark, dir)
+    // h: the hour as a whole number of hours since the epoch, held exactly
+    // in a double, so h_j − h_i is the x offset difference
+    val fit = udf((eventType: String, pts: Seq[Row]) =>
+      theilSenFit(eventType, pts))
+    Tables.events(spark, dir)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
       .agg(sum(col("value")).as("v"))
-      .select(col("event_type"), (unix_timestamp(col("hr")) / 3600L).as("h"),
-        col("v"))
-      .repartition(spark.sparkContext.defaultParallelism))
-    // The C(|hours|,2)-row pair set is consumed twice by the exact-median
-    // selection (sketch pass + bracket pass) and regenerated in each from
-    // the checkpointed points, never written out itself (~|hours|² rows).
-    // Catalyst broadcasts the points by their checkpoint size, so every
-    // partition of the fanned-out stream side generates and sketches its
-    // share of the pairs, one task per core.
-    // h and x (the hour offset from the type's first hour) are whole
-    // numbers of hours held exactly in a double, so b.h − a.h IS
-    // b.x − a.x: the slopes are the declared ones bit for bit.
-    // try_divide, not /: ExactPercentile pushes isnotnull(s) into the join,
-    // where Catalyst may evaluate the division BEFORE the a.h < b.h guard;
-    // an equal-h pair then divides by zero and ANSI mode throws. Every pair
-    // that survives the guard has b.h > a.h, so try_divide is value-identical
-    // on the result set (the NULL-on-zero rows are exactly the guard-dropped
-    // pairs, and isNotNull discards them either way).
-    val slopes = pts.as("a").join(pts.as("b"),
-        col("a.event_type") === col("b.event_type")
-          && col("a.h") < col("b.h"))
-      .select(col("a.event_type").as("event_type"),
-        try_divide(col("b.v") - col("a.v"), col("b.h") - col("a.h")).as("s"))
-    // the slope median over the O(|hours|²) pair set: ExactPercentile's
-    // bounded-state bracketed selection, bit-identical to percentile()
-    val slopeMed = graft.operators.ExactPercentile.compute(
-      slopes, Seq("event_type"), "s", Seq(0.5))
-    val smDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        slopeMed.keys.toSeq.map(k =>
-          org.apache.spark.sql.Row(k.head, slopeMed(k)(0))), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("slope",
-          org.apache.spark.sql.types.DoubleType)))))
-    // the intercept median is over one residual per hour of a type — a
-    // bounded group — so it is selected by rank inside this query rather
-    // than by more driver passes
-    val byType = Window.partitionBy(col("event_type"))
-    val resid = pts.join(smDf, Seq("event_type"))
-      .select(col("event_type"), col("slope"),
-        count(lit(1)).over(byType).as("n_hours"),
-        (col("v") - col("slope") * (col("h") - min(col("h")).over(byType)))
-          .as("r"))
-    graft.operators.ExactPercentile.rankSelect(
-        resid, Seq("event_type", "n_hours", "slope"), "r", 0.5)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_hours"), collect_list(struct(
+        (unix_timestamp(col("hr")) / 3600L).as("h"), col("v"))).as("pts"))
+      .filter(col("event_type").isNotNull)
+      .select(col("event_type"), col("n_hours"),
+        inline(fit(col("event_type"), col("pts"))))
       .select(col("event_type"), col("n_hours"),
         stableRound4(col("slope")).as("slope"),
-        stableRound4(col("r")).as("intercept"))
+        stableRound4(col("intercept")).as("intercept"))
       .orderBy(col("event_type"))
+  }
+
+  /** One type's Theil-Sen fit, before rounding. */
+  final case class TheilSenFit(slope: Double, intercept: Double)
+
+  /** [[theilSen]]'s kernel over one type's hourly points `(h, v)`, in any
+    * order: no fit (an empty result) when fewer than two points have both
+    * `h` and `v`. The slopes are `(v_j − v_i) / (h_j − h_i)` over the pairs
+    * i < j of those points in `h` order (`h` is distinct within a type),
+    * and the residuals `v − slope·(h − h_min)` with `h_min` over every
+    * point; both medians are [[ExactPercentile.select]]. */
+  private[operators] def theilSenFit(eventType: String,
+      pts: Seq[Row]): Seq[TheilSenFit] = {
+    val live = pts.iterator.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getDouble(0), r.getDouble(1))).toArray.sortBy(_._1)
+    val m = live.length
+    if (m < 2) Nil
+    else {
+      val slopes = new Array[Double](theilSenPairs(eventType, m))
+      var k = 0
+      var i = 0
+      while (i < m) {
+        val (hi, vi) = live(i)
+        var j = i + 1
+        while (j < m) {
+          slopes(k) = (live(j)._2 - vi) / (live(j)._1 - hi)
+          k += 1
+          j += 1
+        }
+        i += 1
+      }
+      val slope = ExactPercentile.select(slopes, k, 0.5)
+      val hMin = pts.iterator.filter(!_.isNullAt(0)).map(_.getDouble(0)).min
+      val resid = live.map { case (h, v) => v - slope * (h - hMin) }
+      Seq(TheilSenFit(slope, ExactPercentile.select(resid, m, 0.5)))
+    }
+  }
+
+  /** C(h, 2), the pair count of a type with `h` usable hours, as an array
+    * length; a count past the JVM array limit throws, naming the type. */
+  private[operators] def theilSenPairs(eventType: String, h: Int): Int = {
+    val pairs = h.toLong * (h - 1) / 2
+    // Int.MaxValue − 8: the longest array every JVM allocates
+    require(pairs <= Int.MaxValue - 8,
+      s"q_theil_sen: event type $eventType has $h hours, so $pairs slope " +
+        "pairs, past the JVM array limit")
+    pairs.toInt
   }
 
   /** q_watermark_sim: how much data would each watermark delay drop?

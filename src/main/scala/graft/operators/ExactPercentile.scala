@@ -1,13 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** EXACT interpolated percentiles with BOUNDED aggregation state — the
   * round-15 replacement for `percentile()` in the declared exact-percentile
-  * queries (q_winsorize, q_mad_outlier, q_stats_agg, q_theil_sen).
+  * queries (q_winsorize, q_mad_outlier, q_stats_agg).
   *
   * `percentile(col, p)` is a single `TypedImperativeAggregate` whose state
   * holds EVERY value of the group — O(n) executor memory and a
@@ -98,38 +97,79 @@ object ExactPercentile {
       maxPullRows: Int = DefaultMaxPullRows): Array[Double] =
     compute(df, Nil, valueCol, ps, accuracy, maxPullRows)(Seq())
 
-  /** The exact interpolated percentile `p` of `valueCol` per `groupCols`
-    * key, planned as ONE DataFrame — a rank window per group in place of
-    * the sketch and histogram passes — so it runs no driver job and folds
-    * into the caller's query. Each group is sorted whole inside one task:
-    * only for groups whose size the caller has bounded (q_theil_sen's
-    * residuals, one row per hour of an event type), never for
-    * event-count-sized ones. The rank selection and interpolation are
-    * [[computeMulti]]'s, so the value is bit-identical to it (and to
-    * `percentile()`): NULLs are ignored, −0.0 reads as 0.0 as it does
-    * through the histogram's grouping, and a group with no non-null value
-    * is absent. Returns `groupCols` and `valueCol` holding the percentile. */
-  def rankSelect(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      p: Double): DataFrame = {
+  /** The exact interpolated percentile `p` of `values(0 until n)`, held
+    * whole by the caller: step 3's rank arithmetic and interpolation (see
+    * the class doc) over a quickselect, O(n) expected, so the value is
+    * bit-identical to [[compute]] (and to `percentile()`) on the same
+    * multiset. −0.0 reads as 0.0, as it does through the histogram's
+    * grouping. The caller drops NULLs; it reorders `values(0 until n)` in
+    * place. Only for groups whose size the caller has bounded
+    * (q_theil_sen's per-type slopes and residuals, see
+    * [[EventOps.theilSen]]), never for event-count-sized ones. */
+  def select(values: Array[Double], n: Int, p: Double): Double = {
     require(p >= 0.0 && p <= 1.0, s"percentage must be in [0,1]: $p")
-    val gs = groupCols.map(col)
-    val w = Window.partitionBy(gs: _*)
-    val v = col("__v")
-    val ranked = df
-      .select(gs :+ (col(valueCol).cast("double") + 0.0).as("__v"): _*)
-      .filter(v.isNotNull)
-      .select(gs ++ Seq(v,
-        (row_number().over(w.orderBy(v)) - 1).as("__rank"),
-        (lit(p) * (count(lit(1)).over(w) - 1)).as("__pos")): _*)
-      .withColumn("__lo", floor(col("__pos")))
-      .withColumn("__hi", ceil(col("__pos")))
-    val at = (rank: String) => max(when(col("__rank") === col(rank), v))
-    ranked.groupBy(gs ++ Seq(col("__pos"), col("__lo"), col("__hi")): _*)
-      .agg(at("__lo").as("__lov"), at("__hi").as("__hiv"))
-      .select(gs :+ when(col("__hi") === col("__lo") ||
-          col("__hiv") === col("__lov"), col("__lov"))
-        .otherwise((col("__hi") - col("__pos")) * col("__lov")
-          + (col("__pos") - col("__lo")) * col("__hiv")).as(valueCol): _*)
+    require(n >= 1 && n <= values.length,
+      s"select needs 1 to ${values.length} values, got $n")
+    var i = 0
+    while (i < n) { values(i) += 0.0; i += 1 }
+    val position = p * (n - 1)
+    val lower = math.floor(position).toInt
+    val higher = math.ceil(position).toInt
+    interpolate(position, lower, higher, selectRank(values, n, lower), {
+      // selectRank leaves values(lower + 1 until n) all >= the value at
+      // rank lower, so the value at rank lower + 1 is their minimum
+      var higherV = values(higher)
+      i = higher + 1
+      while (i < n) {
+        if (java.lang.Double.compare(values(i), higherV) < 0) higherV = values(i)
+        i += 1
+      }
+      higherV
+    })
+  }
+
+  /** Step 3's interpolation (see the class doc) between `lowerV` and
+    * `higherV`, the values at ranks `lower` = ⌊position⌋ and `higher` =
+    * ⌈position⌉; `higherV` is read only when the ranks differ. */
+  private def interpolate(position: Double, lower: Long, higher: Long,
+      lowerV: Double, higherV: => Double): Double =
+    if (higher == lower) lowerV
+    else {
+      val hv = higherV
+      if (hv == lowerV) lowerV
+      else (higher - position) * lowerV + (position - lower) * hv
+    }
+
+  /** The value at 0-based rank `k` of `a(0 until n)` in
+    * `java.lang.Double.compare` order (Spark's order for doubles). It
+    * partitions in place three ways around a median-of-three pivot, so
+    * ties cost nothing; on return every value after position `k` is at
+    * least the one returned. */
+  private def selectRank(a: Array[Double], n: Int, k: Int): Double = {
+    def swap(i: Int, j: Int): Unit = { val t = a(i); a(i) = a(j); a(j) = t }
+    def cmp(x: Double, y: Double): Int = java.lang.Double.compare(x, y)
+    var lo = 0
+    var hi = n - 1
+    while (lo < hi) {
+      val (x, y, z) = (a(lo), a((lo + hi) >>> 1), a(hi))
+      val pivot =
+        if (cmp(x, y) < 0) { if (cmp(y, z) < 0) y else if (cmp(x, z) < 0) z else x }
+        else { if (cmp(x, z) < 0) x else if (cmp(y, z) < 0) z else y }
+      // a(lo until lt) < pivot, a(lt until i) == pivot, a(gt + 1 to hi) > pivot
+      var lt = lo
+      var gt = hi
+      var i = lo
+      while (i <= gt) {
+        val c = cmp(a(i), pivot)
+        if (c < 0) { swap(lt, i); lt += 1; i += 1 }
+        else if (c > 0) { swap(i, gt); gt -= 1 }
+        else i += 1
+      }
+      if (k < lt) hi = lt - 1
+      else if (k > gt) lo = gt + 1
+      else { lo = k; hi = k }
+    }
+    a(k)
   }
 
   /** Exact percentiles for SEVERAL value columns of the same frame in a
@@ -350,14 +390,8 @@ object ExactPercentile {
               }
               res
             }
-            val lowerV = valueAtRank(lower)
-            resolved(it) =
-              if (higher == lower) lowerV
-              else {
-                val higherV = valueAtRank(higher)
-                if (higherV == lowerV) lowerV
-                else (higher - position) * lowerV + (position - lower) * higherV
-              }
+            resolved(it) = interpolate(position, lower, higher,
+              valueAtRank(lower), valueAtRank(higher))
             state.remove(it)
           } else nextLadder(it)
         }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * by itself, and [[Materialize.rows]] reads the row count without a job.
   * The frame keeps its source's partition count, often the one partition
   * AQE coalesced a small shuffle to: `repartition` before the checkpoint if
-  * per-row-heavy work streams over it (see `EventOps.theilSen`).
+  * per-row-heavy work streams over it.
   *
   * Scale note: the blocks live in executor storage (disk-backed), sized by
   * the operator to hold signatures/exploded keys, not raw corpus bytes.

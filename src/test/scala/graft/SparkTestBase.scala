@@ -13,6 +13,8 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+  /** The 10x fixture beside [[sf]]. */
+  val sf01: String = sf.stripSuffix("sf0.001") + "sf0.01"
 
   /** Run `body` in a fresh temp directory, deleted when it ends. */
   def withTempDir[T](prefix: String)(body: Path => T): T = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -197,6 +198,15 @@ class AnalyticsOpsSpec extends SparkTestBase {
     assert(out.map(_.getLong(2)).sum == expected)
     assert(out.map(_.getLong(1)).sum == li.count())
     out.foreach(r => assert(r.getDouble(3) > 0 && r.getDouble(4) > 0))
+  }
+
+  test("madOutlier's construction runs 10 jobs: two exact medians of 5 each") {
+    val sc = spark.sparkContext
+    Tables.lineitem(spark, sf01) // infer the schema outside the count
+    val (_, jobs) = JobCount(sc)(AnalyticsOps.madOutlier(spark, sf01))
+    // sf0.01: two ExactPercentile.computeGlobal calls of 5 jobs each; the
+    // same count on three runs in a row
+    assert(jobs == 10, s"q_mad_outlier construction: $jobs jobs")
   }
 
   test("skyline equals the brute-force dominance filter over distinct points") {

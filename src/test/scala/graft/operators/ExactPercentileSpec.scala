@@ -54,7 +54,7 @@ class ExactPercentileSpec extends SparkTestBase {
     }
   }
 
-  test("rankSelect equals compute bitwise: groups, ties, NULLs, signed zero") {
+  test("select equals compute bitwise: groups, ties, NULLs, signed zero") {
     val spark0 = spark
     import spark0.implicits._
     val rows = Seq(("a", Some(5.0)), ("b", Some(1.0)), ("b", Some(2.0)),
@@ -64,16 +64,22 @@ class ExactPercentileSpec extends SparkTestBase {
       (1 to 101).map(i => ("f", Some((i % 7).toDouble / 3))) ++
       (1 to 64).map(i => ("g", Some(math.sin(i.toDouble) * 1e3)))
     val df = rows.toDF("k", "x")
+    // the caller drops NULLs and has no value to select from an all-NULL group
+    val groups = rows.groupBy(_._1).view.mapValues(_.flatMap(_._2)).toMap
+      .filter(_._2.nonEmpty)
     for (p <- Seq(0.0, 0.25, 0.5, 0.77, 1.0)) {
       val want = ExactPercentile.compute(df, Seq("k"), "x", Seq(p))
-      val got = ExactPercentile.rankSelect(df, Seq("k"), "x", p).collect()
-        .map(r => Seq[Any](r.getString(0)) -> r.getDouble(1)).toMap
+      val got = groups.map { case (k, xs) =>
+        Seq[Any](k) -> ExactPercentile.select(xs.toArray, xs.size, p)
+      }
       assert(got.keySet == want.keySet, s"p=$p") // "e" (all NULL) absent
       got.foreach { case (k, v) =>
         assert(java.lang.Double.doubleToRawLongBits(v) ==
           java.lang.Double.doubleToRawLongBits(want(k)(0)), s"p=$p $k: $v")
       }
     }
+    intercept[IllegalArgumentException](
+      ExactPercentile.select(Array.empty[Double], 0, 0.5))
   }
 
   test("exhausted brackets fall back to [min,max] and still resolve") {

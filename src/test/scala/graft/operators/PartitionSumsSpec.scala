@@ -12,8 +12,6 @@ import graft.{SparkTestBase, Tables}
   * per training step while q_quality_train / q_em_gmm are built. */
 class PartitionSumsSpec extends SparkTestBase {
 
-  private val sf01 = "/root/testdata/sf0.01"
-
   private def messages(t: Throwable): Seq[String] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(e => String.valueOf(e.getMessage)).toSeq

@@ -11,40 +11,6 @@ import graft.{SparkTestBase, Tables}
   * bigram frequencies, vocabulary coverage, normalized-key dedup. */
 class Round3OpsSpec extends SparkTestBase {
 
-  test("theilSen: exact on a linear series; robust to an outlier OLS would chase") {
-    import spark.implicits._
-    // type a: v = 2x + 3 over hours 0..6, except hour 3 spiked to 100.
-    // Hand-computed: median pairwise slope = 2 (15 clean pairs straddle
-    // the 6 outlier pairs), median residual = 3 — the outlier moves
-    // Theil-Sen not at all, while OLS slope would be far off.
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val rows = (0 to 6).map { h =>
-      val v = if (h == 3) 100.0 else 2.0 * h + 3.0
-      (new java.sql.Timestamp(base.getTime + h * 3600L * 1000L), "a", v)
-    }
-    withTempDir("graft-ts") { dir =>
-      val tmp = dir.toString
-      rows.toDF("ts", "event_type", "value")
-        .write.parquet(s"$tmp/events.parquet")
-      val out = EventOps.theilSen(spark, tmp).collect()
-      assert(out.length == 1)
-      val r = out.head
-      assert((r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
-        == (("a", 7L, 2.0, 3.0)), s"got $r")
-    }
-  }
-
-  test("theilSen on the fixture: every type, full series, finite estimates") {
-    val out = EventOps.theilSen(spark, sf).collect()
-    val types = Tables.events(spark, sf).select("event_type")
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(out.map(_.getString(0)).toSet == types)
-    out.foreach { r =>
-      assert(r.getLong(1) > 0)
-      assert(!r.getDouble(2).isNaN && !r.getDouble(3).isNaN)
-    }
-  }
-
   test("watermarkSim matches a driver-local replay of the arrival simulation") {
     val out = EventOps.watermarkSim(spark, sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))

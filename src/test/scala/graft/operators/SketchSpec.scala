@@ -155,6 +155,40 @@ class SketchSpec extends SparkTestBase {
     assert(got.size == types.combinations(2).size)
   }
 
+  test("thetaAudience equals exact set algebra on partly overlapping audiences") {
+    import spark.implicits._
+    // every pair overlaps differently: nested, partial, disjoint, and
+    // unequal sizes, so a union read as an intersection or a difference
+    // with its operands swapped changes some row
+    val audiences = Map(
+      "a" -> (1L to 40L).toSet,
+      "b" -> (25L to 90L).toSet,
+      "c" -> ((1L to 10L) ++ (80L to 100L)).toSet,
+      "d" -> (200L to 205L).toSet,
+      "e" -> (30L to 35L).toSet)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    // each user appears two or three times under a type
+    val rows = audiences.toSeq.flatMap { case (t, us) =>
+      us.toSeq.flatMap(u => Seq.fill(2 + (u % 2).toInt)((ts, t, u)))
+    }
+    withTempDir("graft-theta") { dir =>
+      rows.toDF("ts", "event_type", "user_id").repartition(3)
+        .write.parquet(s"$dir/events.parquet")
+      val got = SketchOps.thetaAudience(spark, dir.toString).collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+        .toMap
+      val types = audiences.keys.toSeq.sorted
+      val want = (for (a <- types; b <- types if a < b) yield {
+        val (sa, sb) = (audiences(a), audiences(b))
+        (a, b) -> (((sa & sb).size.toLong, (sa -- sb).size.toLong,
+          (sb -- sa).size.toLong, (sa | sb).size.toLong))
+      }).toMap
+      assert(got == want)
+      assert(want.values.exists { case (i, _, _, u) => i > 0 && i < u })
+    }
+  }
+
   test("theta sketches are partition-order stable in the exact regime") {
     def estimatesOf(parts: Int): Array[Long] =
       Tables.events(spark, sf).repartition(parts)
